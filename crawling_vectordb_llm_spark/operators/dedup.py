@@ -200,20 +200,23 @@ def _xxh64_fmix(h: np.ndarray) -> np.ndarray:
 
 def _xxh64_long(v: np.ndarray, seed) -> np.ndarray:
     """XXH64.hashLong(v, seed) — v and the result are uint64 bit patterns
-    of Spark's signed longs; uint64 wraparound IS Java's 2^64 arithmetic."""
-    h = seed + _XXH64_P5 + np.uint64(8)
-    h = h ^ (_xxh64_rotl(v * _XXH64_P2, 31) * _XXH64_P1)
-    h = _xxh64_rotl(h, 27) * _XXH64_P1 + _XXH64_P4
-    return _xxh64_fmix(h)
+    of Spark's signed longs; uint64 wraparound IS Java's 2^64 arithmetic,
+    so numpy's overflow warning is silenced, not a defect."""
+    with np.errstate(over="ignore"):
+        h = seed + _XXH64_P5 + np.uint64(8)
+        h = h ^ (_xxh64_rotl(v * _XXH64_P2, 31) * _XXH64_P1)
+        h = _xxh64_rotl(h, 27) * _XXH64_P1 + _XXH64_P4
+        return _xxh64_fmix(h)
 
 
 def _xxh64_int(v, seed) -> np.ndarray:
     """XXH64.hashInt(v, seed) — the 4-byte path Spark takes for an
     IntegerType child (the sequence-lambda permutation index above)."""
-    h = seed + _XXH64_P5 + np.uint64(4)
-    h = h ^ ((v & np.uint64(0xFFFFFFFF)) * _XXH64_P1)
-    h = _xxh64_rotl(h, 23) * _XXH64_P2 + _XXH64_P3
-    return _xxh64_fmix(h)
+    with np.errstate(over="ignore"):
+        h = seed + _XXH64_P5 + np.uint64(4)
+        h = h ^ ((v & np.uint64(0xFFFFFFFF)) * _XXH64_P1)
+        h = _xxh64_rotl(h, 23) * _XXH64_P2 + _XXH64_P3
+        return _xxh64_fmix(h)
 
 
 def _xxhash_band_rows_pdf(

@@ -549,23 +549,6 @@ def _lloyd_sphere(x: np.ndarray, cents: np.ndarray, max_iter: int) -> np.ndarray
     return cents
 
 
-def kmeans_centroids_ml(
-    corpus: DataFrame,
-    n_centroids: int,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> np.ndarray:
-    """pyspark.ml variant — the fully-distributed fit for when even the
-    training sample shouldn't be collected."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
-    return _normalize(np.array(model.clusterCenters(), dtype=np.float64))
-
-
 def kmeans_centroids_hier(
     corpus: DataFrame,
     k: int,
@@ -750,8 +733,35 @@ def ivf_search(
     qrows = collect_query_rows(
         queries, query_id, query_vec, max_query_rows, caller="ivf_search"
     )
-    qids = np.array([r[0] for r in qrows])
-    qmat = _normalize(np.array([r[1] for r in qrows], dtype=np.float64))
+    return ivf_search_matrix(
+        np.array([r[0] for r in qrows]),
+        np.array([r[1] for r in qrows], dtype=np.float64),
+        assigned_corpus,
+        centroids,
+        k,
+        n_probe,
+        query_id=query_id,
+        corpus_id=corpus_id,
+        corpus_vec=corpus_vec,
+    )
+
+
+def ivf_search_matrix(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    assigned_corpus: DataFrame,
+    centroids: np.ndarray,
+    k: int,
+    n_probe: int,
+    query_id: str = "query_id",
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+) -> DataFrame:
+    """ivf_search's kernel over a query matrix already on the driver
+    (row i of `qmat` is query `qids[i]`).  Callers that encode their
+    queries on the driver (VectorCollection.search_by_text) enter here
+    and skip the DataFrame round trip and its collect job."""
+    qmat = _normalize(np.asarray(qmat, dtype=np.float64))
     probe_cells = np.argsort(-(qmat @ centroids.T), axis=1)[:, :n_probe]
 
     # cell -> (query ids, query matrix): the per-cell GEMM operands
@@ -759,7 +769,7 @@ def ivf_search(
     for c in np.unique(probe_cells):
         mask = (probe_cells == c).any(axis=1)
         cell_q[int(c)] = (qids[mask], qmat[mask])
-    spark = queries.sparkSession
+    spark = assigned_corpus.sparkSession
     bq = spark.sparkContext.broadcast(cell_q)
 
     def _cell_gemm_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

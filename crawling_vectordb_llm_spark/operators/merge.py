@@ -12,7 +12,6 @@ buckets; with Delta/Iceberg available this becomes a real MERGE INTO.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def upsert_by_key(existing: DataFrame, updates: DataFrame, key: str) -> DataFrame:
@@ -22,9 +21,3 @@ def upsert_by_key(existing: DataFrame, updates: DataFrame, key: str) -> DataFram
     survivors = existing.join(updates.select(key), on=key, how="left_anti")
     return updates.unionByName(survivors)
 
-
-def upsert_write(existing: DataFrame, updates: DataFrame, key: str, path: str) -> None:
-    """Materialize the merge (build_index=True analog: downstream index
-    artifacts — norms, centroids — are recomputed from the written table)."""
-    merged = upsert_by_key(existing, updates, key)
-    merged.write.mode("overwrite").parquet(path)

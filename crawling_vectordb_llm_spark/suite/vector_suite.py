@@ -1455,7 +1455,6 @@ def q_retrieval_eval_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("query_id"),
             F.explode(F.split("text", " ")).alias("term"),
         )
-        .distinct()
     )
     retrieved = grouped_topk(
         bm25_scores(docs, qterms).where(F.col("doc_id") != F.col("query_id")),

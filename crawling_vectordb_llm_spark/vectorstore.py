@@ -29,10 +29,10 @@ from crawling_vectordb_llm_spark.embedding import hash_encode_batch, make_embed_
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
 from crawling_vectordb_llm_spark.operators.ivf import (
     assign_centroids,
-    ivf_search,
+    ivf_search_matrix,
     kmeans_centroids,
 )
-from crawling_vectordb_llm_spark.operators.knn import knn_join_numpy
+from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
 from crawling_vectordb_llm_spark.operators.merge import upsert_by_key
 
 
@@ -242,11 +242,10 @@ class VectorCollection:
         """Batch searchByText: embed every query text, cosine top-`limit`
         per query, optional SQL predicate applied BEFORE scoring (J3).
         Returns (query_id, id, rank, score) — query_id indexes `texts`."""
+        # the queries are encoded here, on the driver: the matrix entry
+        # points take them as they are, with no DataFrame round trip
+        qids = np.arange(len(texts), dtype=np.int64)
         qmat = self._encode(texts, self.dim)
-        queries = self.spark.createDataFrame(
-            [(i, [float(x) for x in qmat[i]]) for i in range(len(texts))],
-            "query_id long, query_vec array<double>",
-        )
         corpus = self.documents()
         if filter:
             corpus = corpus.where(filter)
@@ -266,13 +265,13 @@ class VectorCollection:
                 .select("id", "centroid_id")
                 .join(corpus.select("id", "vector"), "id")
             )
-            hits = ivf_search(
-                queries, assigned, self.centroids, k=limit, n_probe=n_probe,
+            hits = ivf_search_matrix(
+                qids, qmat, assigned, self.centroids, k=limit, n_probe=n_probe,
                 corpus_id="id", corpus_vec="vector",
             )
         else:
-            hits = knn_join_numpy(
-                queries, corpus, k=limit, corpus_id="id", corpus_vec="vector"
+            hits = knn_topk_matrix(
+                qids, qmat, corpus, k=limit, corpus_id="id", corpus_vec="vector"
             )
         return hits
 
