@@ -3,13 +3,13 @@
 The reference re-ingests its whole crawl every run (TencentVDB.py:63-79
 drops and rebuilds the collection); a 100 TB pipeline cannot — the daily
 increment is small, the corpus is not.  This module makes the LSH band
-relation (``operators/dedup.py banded_rows``: one (__id, band, band_hash)
-row per doc per band) the PERSISTED dedup index, so each new batch:
+relation (``operators/dedup.py lsh_band_rows``: one (__id, band,
+band_hash) row per doc per band) the PERSISTED dedup index, so each new
+batch:
 
-  1. computes signatures/band rows for the NEW docs only (O(batch)),
-  2. probes the stored index for the touched buckets only — with the
-     index written ``partitionBy('band')`` + bucketed by band_hash, this
-     is a pruned scan, never a full-index pass,
+  1. computes band rows for the NEW docs only (O(batch)),
+  2. buckets them together with the stored index rows — only buckets
+     that hold a new row emit pairs,
   3. emits candidate pairs that involve at least one new doc (old-old
      pairs were emitted by earlier batches),
   4. appends its band rows to the index (the vdb versioned format gives
@@ -40,87 +40,31 @@ from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.operators.dedup import (
     _pairs_from_banded,
-    banded_rows,
-    minhash_signatures,
-    ngram_jaccard,
-    portable_band_hashes,
-    portable_minhash_signatures,
-    word_shingles,
+    _verified_pairs,
+    lsh_band_rows,
 )
-
-
-def portable_banded_rows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    shingle_n: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """(__id, band, band_hash) via the portable (cross-engine exact)
-    hash family — the oracle-checkable twin of dedup.banded_rows."""
-    sigs = portable_minhash_signatures(
-        docs, id_col=id_col, text_col=text_col, num_perm=num_perm,
-        shingle_n=shingle_n,
-    )
-    return sigs.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(
-            portable_band_hashes(F.col("signature"), bands, rows_per_band)
-        ).alias("band", "band_hash"),
-    )
-
-
-def xxhash_banded_rows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    shingle_n: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Production-default band rows (xxhash64 mixing)."""
-    sigs = minhash_signatures(
-        docs, id_col=id_col, text_col=text_col, num_perm=num_perm,
-        shingle_n=shingle_n,
-    )
-    return banded_rows(sigs, id_col=id_col, bands=bands,
-                       rows_per_band=rows_per_band)
 
 
 def incremental_candidate_pairs(
     index_rows: DataFrame,
     new_rows: DataFrame,
     max_bucket: int = 50,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Candidate pairs involving ≥1 NEW doc, probing only buckets the new
-    batch touches.
+    """Candidate pairs involving ≥1 NEW doc: distinct (a_id, b_id) from
+    buckets that hold a new row.
 
-    Shuffle shape at scale: `touched` is O(batch × bands) keys; the
-    left-semi join against the index is a pruned scan when the index is
-    laid out by (band, band_hash); the bucket groupBy shuffles only rows
-    in touched buckets — never the whole index.  The flood cap applies to
-    the COMBINED (old ∪ new) membership, preserving bit-equality with the
-    full-corpus run (module docstring)."""
-    touched = new_rows.select("band", "band_hash").distinct()
-    old_touched = index_rows.join(touched, ["band", "band_hash"], "left_semi")
-    combined = old_touched.unionByName(new_rows)
-    pairs = _pairs_from_banded(combined, max_bucket, distinct=distinct)
-    new_ids = new_rows.select(F.col("__id").alias("__nid")).distinct()
-    # keep pairs with >=1 new member; the new-id set is batch-sized, so a
-    # broadcast OR-condition semi join stays a nested-loop over a tiny
-    # hash side (never a shuffle of the pair list)
-    return pairs.join(
-        F.broadcast(new_ids),
-        (pairs["a_id"] == F.col("__nid")) | (pairs["b_id"] == F.col("__nid")),
-        "left_semi",
+    Each input is read once (so a signer feeding `new_rows` runs once per
+    doc, with nothing cached): the old and new rows are flagged,
+    unioned, and bucketed by ONE groupBy shuffle; the flood cap applies
+    to the COMBINED (old ∪ new) membership, preserving bit-equality with
+    the full-corpus run (module docstring)."""
+    combined = index_rows.withColumn("__new", F.lit(False)).unionByName(
+        new_rows.withColumn("__new", F.lit(True))
     )
+    return _pairs_from_banded(combined, max_bucket)
 
 
-def incremental_near_dup_portable(
+def incremental_near_dup(
     corpus: DataFrame,
     new_pred: F.Column,
     tau: float = 0.2,
@@ -132,209 +76,21 @@ def incremental_near_dup_portable(
     rows_per_band: int = 4,
     max_bucket: int = 50,
 ) -> DataFrame:
-    """End-to-end incremental ladder (portable hash family): docs where
-    `new_pred` holds are the incoming batch, the rest are the already-
-    indexed corpus.  Returns (a_id, b_id, jaccard) pairs involving ≥1 new
-    doc, exact-Jaccard verified at `tau` — bit-identical to the DuckDB
-    replay of the full ladder filtered to new-involving pairs."""
-    # one shingle+signature pass over the corpus, split by the batch flag
-    # afterwards — in production the old half comes from the PERSISTED
-    # index, so the query should not pay a second signing pass either
-    # (3 text passes -> 1 measured 4.8s -> ~2s at sf0.1)
-    sh = corpus.select(
-        F.col(id_col),
-        word_shingles(text_col, shingle_n).alias("sh"),
-    ).where(F.size("sh") > 0)
-    sh.persist()
+    """End-to-end incremental ladder: docs where `new_pred` holds are the
+    incoming batch, the rest are the already-indexed corpus.  Returns
+    (a_id, b_id, jaccard) pairs involving ≥1 new doc, exact-Jaccard
+    verified at `tau` — bit-identical to the DuckDB replay of the full
+    ladder filtered to new-involving pairs.  In production the old half
+    is the PERSISTED index; here both halves are signed by the same
+    signer, each doc once."""
 
-    # Band rows via the vectorized numpy signer (r13, guide §4.2/§7.3):
-    # the 32-permutation transform/aggregate EXPRESSION ladder this
-    # replaces never enters whole-stage codegen (per-element boxing) AND
-    # its Catalyst tree cost ~1.2 s of driver-side analysis per call — a
-    # planning stall with zero tasks running.  `_portable_band_rows_pdf`
-    # is bit-identical by construction (parity + hypothesis tests,
-    # tests/test_incremental_dedup.py), so the oracle replay is unchanged;
-    # the batch flag rides the same Arrow pass.
-    import pandas as pd
-
-    def _sign_flagged(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            id_rep, band, bh = _portable_band_rows_pdf(
-                pdf[id_col], pdf[text_col], num_perm, shingle_n, bands,
-                rows_per_band,
-            )
-            flags = pdf.set_index(id_col)["__new"]
-            yield pd.DataFrame(
-                {
-                    "__id": id_rep,
-                    "__new": flags.loc[id_rep].to_numpy(),
-                    "band": band,
-                    "band_hash": bh,
-                }
-            )
-
-    all_rows = corpus.select(
-        F.col(id_col), new_pred.alias("__new"), F.col(text_col)
-    ).mapInPandas(
-        _sign_flagged,
-        schema="__id long, __new boolean, band int, band_hash bigint",
-    )
-    all_rows.persist()
-    old_rows = all_rows.where(~F.col("__new")).drop("__new")
-    new_rows = all_rows.where(F.col("__new")).drop("__new")
-    cands = incremental_candidate_pairs(old_rows, new_rows, max_bucket)
-    a = sh.select(F.col(id_col).alias("a_id"), F.col("sh").alias("a_sh"))
-    b = sh.select(F.col(id_col).alias("b_id"), F.col("sh").alias("b_sh"))
-    return (
-        cands.join(a, "a_id")
-        .join(b, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            ngram_jaccard(F.col("a_sh"), F.col("b_sh")).alias("jaccard"),
+    def band_rows(pred: F.Column) -> DataFrame:
+        return lsh_band_rows(
+            corpus.where(pred), id_col, text_col, num_perm, shingle_n,
+            bands, rows_per_band,
         )
-        .where(F.col("jaccard") >= tau)
+
+    cands = incremental_candidate_pairs(
+        band_rows(~new_pred), band_rows(new_pred), max_bucket
     )
-
-
-def _portable_band_rows_pdf(
-    ids, texts, num_perm: int, shingle_n: int, bands: int, rows_per_band: int
-):
-    """Vectorized numpy twin of the portable_banded_rows expression plan —
-    BIT-IDENTICAL by construction (tests/test_incremental_dedup.py parity
-    + hypothesis random-unicode tests):
-
-    * tokens: Python ``str.split(" ")`` == Spark ``split(text, ' ')``
-      (Java regex split, limit -1: all empty tokens kept, verified
-      empirically incl. leading/trailing runs);
-    * shingles: n consecutive tokens joined with one space == the
-      zip_with/concat ladder; ``array_distinct`` is deliberately SKIPPED —
-      duplicate shingle hashes cannot change a per-permutation minimum;
-    * char hash: codepoints via utf-32 decode (== Spark split('') +
-      ascii(): full code points, no surrogate halves, empty→0), rolling
-      ``(acc*131 + cp) % P`` applied at every step exactly as the
-      F.aggregate fold — all int64-exact (acc*131+cp < 2^38);
-    * perms/bands: (h*a+b) % P mins via minimum.reduceat, band fold
-      (acc*1000003 + v) % P — int64-exact (< 2^62 / < 2^51).
-
-    Returns (id_rep, band, band_hash) numpy arrays.
-    """
-    import numpy as np
-
-    from crawling_vectordb_llm_spark.operators.dedup import (
-        MERSENNE31 as P,
-        _BAND_C,
-        _CHAR_B,
-        perm_coeffs,
-    )
-
-    # ---- per-TOKEN rolling hashes, then COMPOSE shingle hashes ----
-    # H over concatenation composes: H(x||y) = (H(x)·B^len(y) + H(y))
-    # mod P, so the 3-token shingle hash is five modular folds over
-    # per-token (hash, B^len) pairs — no shingle STRINGS are ever built
-    # (the r6.0 join loop was ~60% of the signer's profile).
-    doc_ids, doc_sh_counts, tok_lists = [], [], []
-    for d, t in zip(ids, texts):
-        toks = (t or "").split(" ")
-        m = len(toks) - shingle_n + 1
-        if m <= 0:
-            continue
-        doc_ids.append(d)
-        doc_sh_counts.append(m)
-        tok_lists.append(toks)
-    if not doc_ids:
-        z = np.array([], dtype=np.int64)
-        return z, z.astype(np.int32), z
-    flat_toks = [tok for toks in tok_lists for tok in toks]
-    tok_counts = np.array([len(toks) for toks in tok_lists], dtype=np.int64)
-    # hash UNIQUE tokens only (pd.factorize is a C hash table): natural
-    # text repeats tokens ~50-100x, so the char-rolling loop below runs
-    # over the vocabulary, not the token stream — measured 1.9s -> 0.4s
-    # per 17k docs with identical output (th/tpw depend only on the
-    # token STRING, so gathering through the codes is exact)
-    import pandas as pd
-
-    codes, uniques = pd.factorize(np.asarray(flat_toks, dtype=object))
-    uniq_toks = uniques.tolist()
-    lens = np.array([len(s) for s in uniq_toks], dtype=np.int64)
-    cps = np.frombuffer(
-        "".join(uniq_toks).encode("utf-32-le"), dtype="<u4"
-    ).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    uth = np.zeros(len(lens), dtype=np.int64)  # per-unique-token hash
-    maxlen = int(lens.max()) if len(lens) else 0
-    for i in range(maxlen):
-        sel = lens > i
-        uth[sel] = (uth[sel] * _CHAR_B + cps[starts[sel] + i]) % P
-    # B^len(token) mod P via precomputed powers
-    pw_table = np.empty(maxlen + 1, dtype=np.int64)
-    pw_table[0] = 1
-    for i in range(1, maxlen + 1):
-        pw_table[i] = (pw_table[i - 1] * _CHAR_B) % P
-    th = uth[codes]
-    tpw = pw_table[lens][codes]
-    # shingle hash: fold tokens k..k+n-1 with single-space separators
-    # (codepoint 32, pw = B) — bit-identical to char-rolling the joined
-    # string because the rolling hash is associative over concatenation
-    tok_starts = np.concatenate(([0], np.cumsum(tok_counts)[:-1]))
-    sh_idx0 = np.concatenate(
-        [ts + np.arange(m) for ts, m in zip(tok_starts, doc_sh_counts)]
-    ).astype(np.int64)
-    acc = th[sh_idx0]
-    for j in range(1, shingle_n):
-        idx = sh_idx0 + j
-        acc = (acc * _CHAR_B + 32) % P           # append " "
-        acc = (acc * tpw[idx] + th[idx]) % P     # append token j
-    doc_starts = np.concatenate(
-        ([0], np.cumsum(doc_sh_counts)[:-1])
-    ).astype(np.int64)
-    sig = np.empty((len(doc_ids), num_perm), dtype=np.int64)
-    for j, (a, b) in enumerate(perm_coeffs(num_perm)):
-        sig[:, j] = np.minimum.reduceat((acc * a + b) % P, doc_starts)
-    bh = np.zeros((len(doc_ids), bands), dtype=np.int64)
-    for b_idx in range(bands):
-        for r in range(rows_per_band):
-            bh[:, b_idx] = (
-                bh[:, b_idx] * _BAND_C + sig[:, b_idx * rows_per_band + r]
-            ) % P
-    id_rep = np.repeat(np.asarray(doc_ids, dtype=np.int64), bands)
-    band = np.tile(np.arange(bands, dtype=np.int32), len(doc_ids))
-    return id_rep, band, bh.reshape(-1)
-
-
-def portable_banded_rows_fast(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    shingle_n: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """mapInPandas fast path for portable_banded_rows — same rows, same
-    values, ~10x the throughput of the interpreted higher-order-function
-    expression plan (transform/aggregate lambdas never enter whole-stage
-    codegen; they evaluate with per-element boxing).  Used by the
-    incremental-dedup STREAM where the signer runs once per micro-batch
-    and dominated the r5 profile (VERDICT r6 #1); the expression twin
-    remains the implementation under the oracle-checked batch queries.
-    """
-    import pandas as pd
-
-    def _sign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            id_rep, band, bh = _portable_band_rows_pdf(
-                pdf[id_col], pdf[text_col], num_perm, shingle_n, bands,
-                rows_per_band,
-            )
-            yield pd.DataFrame(
-                {"__id": id_rep, "band": band, "band_hash": bh}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        _sign, schema="__id long, band int, band_hash bigint"
-    )
+    return _verified_pairs(cands, corpus, tau, id_col, text_col, shingle_n)

@@ -8,7 +8,8 @@ The engine's equivalent is one lazy plan per artifact, bulk-written:
     ├─ collection table  (bucketed by id — shard placement analog)
     ├─ IVF artifacts     (centroid matrix + centroid_id assignment —
     │                     the batch "HNSW index")
-    └─ MinHash signature table (the dedup index artifact)
+    └─ LSH band-row table (the dedup index artifact that
+                          operators/incremental_dedup.py probes)
 
 `build_index=True` per upsert (TencentVDB.py:79) becomes: recompute
 artifacts after each bulk merge — cheap because each is one linear pass.
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from crawling_vectordb_llm_spark.embedding import make_embed_udf
 from crawling_vectordb_llm_spark.functions.text import clean_text
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
-from crawling_vectordb_llm_spark.operators.dedup import minhash_signatures
+from crawling_vectordb_llm_spark.operators.dedup import lsh_band_rows
 from crawling_vectordb_llm_spark.operators.ivf import (
     assign_centroids,
     kmeans_centroids,
@@ -85,8 +86,8 @@ def build_index(
         collection, centroids, id_col="doc_id", vec_col="vector"
     ).write.mode("overwrite").partitionBy("centroid_id").parquet(assigned_path)
 
-    sig_path = os.path.join(out_dir, "minhash_signatures")
-    minhash_signatures(collection).write.mode("overwrite").parquet(sig_path)
+    bands_path = os.path.join(out_dir, "lsh_band_rows")
+    lsh_band_rows(collection).write.mode("overwrite").parquet(bands_path)
 
     # PQ codes: the m-bytes-per-vector search table (operators/pq.py) —
     # at 100 TB the ADC scan reads THIS artifact, not the collection
@@ -104,7 +105,7 @@ def build_index(
         "collection": coll_path,
         "centroids": cent_path,
         "ivf_assignment": assigned_path,
-        "minhash_signatures": sig_path,
+        "lsh_band_rows": bands_path,
         "pq_codebooks": books_path,
         "pq_codes": codes_path,
     }

@@ -50,16 +50,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.operators.dedup import (
-    ngram_jaccard,
-    word_shingles,
+    _band_rows_pdf,
+    _pairs_from_banded,
+    _verified_pairs,
+    lsh_band_rows,
 )
 from crawling_vectordb_llm_spark.operators.incremental_dedup import (
     incremental_candidate_pairs,
-    portable_banded_rows_fast,
 )
 
 _EMPTY_INDEX_SCHEMA = "__id long, band int, band_hash bigint"
-# LSH geometry of portable_banded_rows_fast — the stream's index format.
+# LSH geometry of dedup.lsh_band_rows — the stream's index format.
 # bands ≤ 8 and band_hash < 2^31 (Mersenne-prime family) make
 # band_hash*8+band an injective int64 bucket key with no overflow.
 _BANDS = 8
@@ -377,12 +378,8 @@ def _process_batch_driver(
     import numpy as np
     import pyarrow as pa
 
-    from crawling_vectordb_llm_spark.operators.incremental_dedup import (
-        _portable_band_rows_pdf,
-    )
-
     ids_np = batch_pdf["doc_id"].to_numpy()
-    id_rep, band, bh = _portable_band_rows_pdf(
+    id_rep, band, bh = _band_rows_pdf(
         ids_np.tolist(), batch_pdf["text"].tolist(), 32, shingle_n,
         _BANDS, 4,
     )
@@ -477,7 +474,7 @@ def _process_batch_distributed(
     collected."""
     import threading
 
-    band_rows = portable_banded_rows_fast(docs, shingle_n=shingle_n).persist()
+    band_rows = lsh_band_rows(docs, shingle_n=shingle_n).persist()
     # bounded probe collect: band rows drive the broadcast fast path only
     # while they provably fit (limit stops the scan at cap+1 rows)
     new_pdf = band_rows.limit(max_collect_band_rows + 1).toPandas()
@@ -526,10 +523,6 @@ def _process_batch_distributed(
     ]
     try:
         import numpy as np
-
-        from crawling_vectordb_llm_spark.operators.dedup import (
-            _pairs_from_banded,
-        )
 
         if driver_bookkeeping:
             # probe = ONE job: scan index (batch < id), keep touched
@@ -694,10 +687,7 @@ def _process_overflow_distributed(
         "__id", "band", "band_hash"
     )
     cands = incremental_candidate_pairs(
-        _read_index_before(spark, index_dir, batch_id),
-        new_rows,
-        max_bucket,
-        distinct=True,
+        _read_index_before(spark, index_dir, batch_id), new_rows, max_bucket
     ).localCheckpoint()
     need_df = (
         cands.select(F.col("a_id").alias("doc_id"))
@@ -707,21 +697,7 @@ def _process_overflow_distributed(
     known = _known_docs(spark, corpus_dir, batch_id, None).join(
         need_df, "doc_id", "left_semi"
     )
-    sh = known.select(
-        "doc_id", word_shingles("text", shingle_n).alias("sh")
-    ).where(F.size("sh") > 0)
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    pairs = (
-        cands.join(a, "a_id")
-        .join(b, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            ngram_jaccard(F.col("a_sh"), F.col("b_sh")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= tau)
-    )
+    pairs = _verified_pairs(cands, known, tau, "doc_id", "text", shingle_n)
     pairs.write.mode("overwrite").parquet(pairs_batch_dir)
 
 

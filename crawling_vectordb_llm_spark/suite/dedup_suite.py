@@ -398,14 +398,6 @@ def q_near_dup_pipeline_clusters_allpairs(
     return _cluster_query(spark, pairs, emb)
 
 
-@query("minhash_lsh_near_dup")
-def q_minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only: MinHash(32 perms) → LSH(8 bands × 4 rows) candidates →
-    exact-Jaccard verify at tau=0.2.  Property tests check recall vs the
-    exact pairwise Jaccard on a sample."""
-    return D.minhash_near_dup_pairs(_docs(spark, sf_dir), tau=0.2)
-
-
 def _portable_minhash_oracle(
     num_perm: int = 32,
     bands: int = 8,
@@ -414,8 +406,8 @@ def _portable_minhash_oracle(
     tau: float = 0.2,
     pair_filter: str = "TRUE",
 ) -> str:
-    """Generate the DuckDB replay of the ENTIRE portable MinHash ladder
-    (operators/dedup.py portable_* family): char-rolling shingle hashes,
+    """Generate the DuckDB replay of the ENTIRE MinHash ladder
+    (operators/dedup.py minhash_near_dup_pairs): char-rolling shingle hashes,
     the (a·x+b) mod p permutation minima, the banded fold keys, the
     bucket-size flood cap, and the exact-Jaccard verify — every step
     bit-identical int64 arithmetic, so the LSH candidate generation
@@ -494,32 +486,29 @@ WHERE len(list_intersect(a.shingles, b.shingles))
 def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup against a persisted LSH band index
     (operators/incremental_dedup.py): even-id docs play the
-    already-indexed corpus, odd-id docs the incoming crawl batch.  Only
-    the batch is signed; the index is probed on touched buckets only;
+    already-indexed corpus, odd-id docs the incoming crawl batch.  Each
+    doc is signed once; only buckets holding a batch doc emit pairs;
     the flood cap is evaluated on the COMBINED bucket membership — so
     the output is bit-identical to the full-corpus ladder restricted to
     pairs involving the batch, which is exactly what the oracle
-    computes (same portable-hash replay, plus the odd-id pair filter)."""
+    computes (same ladder replay, plus the odd-id pair filter)."""
     from crawling_vectordb_llm_spark.operators.incremental_dedup import (
-        incremental_near_dup_portable,
+        incremental_near_dup,
     )
 
-    return incremental_near_dup_portable(
+    return incremental_near_dup(
         _docs(spark, sf_dir), F.col("doc_id") % 2 == 1, tau=0.2
     )
 
 
-@query("minhash_lsh_near_dup_portable", oracle=_portable_minhash_oracle())
-def q_minhash_lsh_near_dup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash→LSH→verify ladder with the PORTABLE hash family
-    (operators/dedup.py portable_*): universal hashing over the Mersenne
-    prime 2^31-1 instead of xxhash64, making every stage — including the
-    LSH bucketing itself — reproducible bit-for-bit in the DuckDB oracle.
-    Same plan shape and shuffle structure as minhash_lsh_near_dup (which
-    stays the production default for its stronger mixing); this entry
-    value-gates the ladder's LOGIC, which the xxhash64 variant can only
-    property-test."""
-    return D.minhash_near_dup_pairs_portable(_docs(spark, sf_dir), tau=0.2)
+@query("minhash_lsh_near_dup", oracle=_portable_minhash_oracle())
+def q_minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(32 perms) → LSH(8 bands × 4 rows) candidates →
+    exact-Jaccard verify at tau=0.2.  The hash family is universal
+    hashing over the Mersenne prime 2^31-1, so every stage — including
+    the LSH bucketing itself — is reproduced bit-for-bit by the DuckDB
+    oracle."""
+    return D.minhash_near_dup_pairs(_docs(spark, sf_dir), tau=0.2)
 
 
 _SIMHASH_ORACLE = """
@@ -661,15 +650,13 @@ def q_minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verify (tau=0.2) → connected components → every doc
     labeled (cluster canonical = min doc_id, keep flag).  This is the
     pipeline a 100 TB corpus actually runs end-to-end; the oracle replays
-    the whole ladder plus the recursive-CTE CC fixpoint.  (The xxhash64
-    mixing variant of the same ladder stays available as
-    minhash_near_dup_pairs — stronger mixing, engine-internal hash.)"""
+    the whole ladder plus the recursive-CTE CC fixpoint."""
     from crawling_vectordb_llm_spark.operators.components import (
         connected_components,
     )
 
     docs = _docs(spark, sf_dir)
-    pairs = D.minhash_near_dup_pairs_portable(docs, tau=0.2).select(
+    pairs = D.minhash_near_dup_pairs(docs, tau=0.2).select(
         "a_id", "b_id"
     )
     labels = connected_components(pairs).withColumnRenamed("node", "doc_id")

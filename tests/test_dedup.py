@@ -10,6 +10,7 @@ from crawling_vectordb_llm_spark.catalog import read_table
 from crawling_vectordb_llm_spark.operators import dedup as D
 
 from .conftest import SF_SMALL
+from .minhash_reference import portable_banded_rows
 
 
 def _docs_with_planted_dups(spark):
@@ -34,38 +35,10 @@ def test_exact_dedup_groups_copies(spark):
         assert r["n_dups"] == 2
 
 
-def test_minhash_signature_slots_are_true_permutations(spark):
-    """r13 regression: the old arity-2 lambda (`lambda h, i=i:`) made
-    transform bind i to the ELEMENT index, so all 32 signature slots were
-    the identical min — one hash function masquerading as 32.  Pin that
-    slot j is min(xxhash64(shingle_hash, j)) for the true permutation
-    index j, and that a real document's slots are not all equal."""
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    sig = D.minhash_signatures(docs).collect()[0]["signature"]
-    assert len(sig) == 32
-    assert len(set(sig)) > 1, "signature slots must differ across permutations"
-    sh = docs.select(D.word_shingles("text", 3).alias("sh"))
-    hashes = [
-        r[0]
-        for r in sh.select(
-            F.explode(F.transform("sh", lambda s: F.xxhash64(s)))
-        ).collect()
-    ]
-    for j in (0, 7, 31):
-        expect = (
-            spark.createDataFrame([(h,) for h in hashes], "h long")
-            .select(F.min(F.xxhash64("h", F.lit(j))))
-            .collect()[0][0]
-        )
-        assert sig[j] == expect, f"slot {j} is not the min over permutation {j}"
-
-
 def test_minhash_lsh_finds_planted_near_dups(spark):
+    """Universal (a*x+b) mod p hashing is the textbook MinHash
+    construction: exact copies collide in every band and light mutations
+    are found at high recall."""
     docs = _docs_with_planted_dups(spark)
     pairs = {
         (r["a_id"], r["b_id"])
@@ -80,22 +53,26 @@ def test_minhash_lsh_finds_planted_near_dups(spark):
 
 
 def test_portable_minhash_finds_planted_near_dups(spark):
-    """The portable (cross-engine-exact) hash family must deliver the
-    same planted-duplicate recall contract as the xxhash64 ladder —
-    universal (a*x+b) mod p hashing is the textbook MinHash construction,
-    so swapping the mixer must not cost recall."""
+    """The portable (cross-engine-exact) hash family, evaluated as Spark
+    expressions, must deliver the same planted-duplicate recall contract
+    and the same verified pairs as the numpy signer behind
+    minhash_near_dup_pairs."""
     docs = _docs_with_planted_dups(spark)
-    pairs = {
-        (r["a_id"], r["b_id"])
-        for r in D.minhash_near_dup_pairs_portable(docs, tau=0.5).collect()
-    }
+    cands = D._pairs_from_banded(portable_banded_rows(docs), max_bucket=50)
+    rows = D._verified_pairs(cands, docs, 0.5, "doc_id", "text", 3).collect()
+    pairs = {(r["a_id"], r["b_id"]) for r in rows}
     for i in range(10):
         assert (i, i + 1000) in pairs, f"exact copy pair ({i},{i+1000}) missed"
     found_mutated = sum(1 for i in range(10) if (i, i + 2000) in pairs)
     assert found_mutated >= 8
     # verify stage exactness holds identically
-    for r in D.minhash_near_dup_pairs_portable(docs, tau=0.5).collect():
+    for r in rows:
         assert r["jaccard"] >= 0.5
+    fast = {
+        (r["a_id"], r["b_id"])
+        for r in D.minhash_near_dup_pairs(docs, tau=0.5).collect()
+    }
+    assert pairs == fast
 
 
 def test_minhash_verify_stage_is_exact(spark):
@@ -550,119 +527,44 @@ def test_clustered_embeddings_generator_and_measured_admit_rate(spark):
     assert stats["admit_rate"] < 0.30, stats  # the prune measurably pays
 
 
-def test_xxh64_numpy_kernels_match_spark(spark):
-    """r14: the numpy XXH64 kernels behind xxhash_banded_rows_fast must
-    reproduce F.xxhash64 bit-for-bit on longs, on (long, int) chains (the
-    per-permutation re-hash), and on 4-long chains (the band fold) —
-    random draws across the full int64 range plus the boundary values."""
-    import numpy as np
-
-    rng = np.random.default_rng(1234)
-    vals = np.concatenate(
-        [
-            rng.integers(-(2**63), 2**63 - 1, size=300, dtype=np.int64),
-            np.array(
-                [0, 1, -1, 2**63 - 1, -(2**63), 42, -42], dtype=np.int64
-            ),
-        ]
-    )
-    df = spark.createDataFrame(
-        [(int(v), int(i % 32)) for i, v in enumerate(vals)], "h long, i int"
-    )
-    got = df.select(
-        F.xxhash64("h").alias("g1"),
-        F.xxhash64("h", "i").alias("g2"),
-        F.xxhash64("h", "h", "h", "h").alias("g3"),
-    ).collect()
-    u = vals.view(np.uint64)
-    ii = np.array([i % 32 for i in range(len(vals))], dtype=np.int64).view(
-        np.uint64
-    )
-    base = D._xxh64_long(u, D._XXH64_SEED)
-    e1 = base.view(np.int64)
-    e2 = D._xxh64_int(ii, base).view(np.int64)
-    h = D._XXH64_SEED
-    for _ in range(4):
-        h = D._xxh64_long(u, h)
-    e3 = h.view(np.int64)
-    assert (np.array([r["g1"] for r in got]) == e1).all()
-    assert (np.array([r["g2"] for r in got]) == e2).all()
-    assert (np.array([r["g3"] for r in got]) == e3).all()
-
-
-def test_xxhash_fast_signer_parity(spark):
-    """xxhash_banded_rows_fast (numpy twin) must emit BIT-IDENTICAL
-    (__id, band, band_hash) rows to the signature-expression +
-    banded_rows plan, on fixture text and adversarial strings — the
-    same parity contract the portable family's fast signer carries."""
-    from crawling_vectordb_llm_spark.operators.incremental_dedup import (
-        xxhash_banded_rows,
-    )
-
-    docs = read_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    adv = spark.createDataFrame(
-        [
-            (0, "a  b c d"),
-            (1, "  x y z  "),
-            (2, "héllo wörld tëst ünïcode"),
-            (3, "😀 emoji 😀 test here"),
-            (4, "one two"),
-            (5, ""),
-            (6, None),
-            (7, " " * 10),
-            (8, "ab " * 50),
-        ],
-        "doc_id long, text string",
-    )
-    for df in (docs, adv):
-        sh = df.select(
-            F.col("doc_id"), D.word_shingles("text", 3).alias("sh")
-        ).where(F.size("sh") > 0)
-        hashed = sh.select(
-            "doc_id",
-            F.transform("sh", lambda s: F.xxhash64(s)).alias("hashes"),
-        )
-        a = (
-            D.xxhash_banded_rows_fast(hashed)
-            .toPandas()
-            .sort_values(["__id", "band"])
-            .reset_index(drop=True)
-        )
-        b = (
-            xxhash_banded_rows(df)
-            .toPandas()
-            .sort_values(["__id", "band"])
-            .reset_index(drop=True)
-        )
-        assert a.equals(b)
-
-
-def test_minhash_near_dup_pairs_matches_expression_form(spark):
-    """End-to-end r14 guard: minhash_near_dup_pairs (numpy-signed) must
-    return exactly the rows of the expression-form pipeline it replaced
-    (signatures -> lsh_candidate_pairs -> exact-Jaccard verify)."""
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_lsh_band_rows_keeps_id_type(spark, id_type):
+    """The band rows' __id takes the id column's type, and the near-dup
+    pipeline runs end to end on non-bigint ids with the same pairs."""
     docs = _docs_with_planted_dups(spark)
-    got = {
-        (r["a_id"], r["b_id"], r["jaccard"])
-        for r in D.minhash_near_dup_pairs(docs, tau=0.2).collect()
-    }
-    sh = docs.select(
-        F.col("doc_id"), D.word_shingles("text", 3).alias("sh")
-    ).where(F.size("sh") > 0)
-    cands = D.lsh_candidate_pairs(D.minhash_signatures(docs), "doc_id")
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    expect = {
-        (r["a_id"], r["b_id"], r["jaccard"])
-        for r in cands.join(a, "a_id")
-        .join(b, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            D.ngram_jaccard(F.col("a_sh"), F.col("b_sh")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= 0.2)
-        .collect()
-    }
-    assert got == expect
-    assert got  # non-vacuous: planted dups must appear
+    typed = docs.select(F.col("doc_id").cast(id_type).alias("doc_id"), "text")
+    rows = D.lsh_band_rows(typed)
+    assert rows.schema["__id"].dataType == typed.schema["doc_id"].dataType
+    assert rows.count() == D.lsh_band_rows(docs).count()
+    got = D.minhash_near_dup_pairs(typed, tau=0.5)
+    assert got.schema["a_id"].dataType == typed.schema["doc_id"].dataType
+
+    def unordered(df):  # string ids order lexicographically in a bucket
+        return {frozenset((str(r["a_id"]), str(r["b_id"]))) for r in df.collect()}
+
+    assert unordered(got) == unordered(D.minhash_near_dup_pairs(docs, tau=0.5))
+
+
+def test_lsh_band_rows_rejects_mismatched_geometry(spark):
+    """num_perm must equal bands * rows_per_band; the check runs when the
+    plan is built, before any job."""
+    docs = _docs_with_planted_dups(spark)
+    msg = r"num_perm=30.*bands=8.*rows_per_band=4"
+    with pytest.raises(ValueError, match=msg):
+        D.lsh_band_rows(docs, num_perm=30, bands=8, rows_per_band=4)
+    with pytest.raises(ValueError, match=msg):
+        D.minhash_near_dup_pairs(docs, num_perm=30)
+
+
+def test_near_dup_pipelines_leave_no_cache_entries(spark):
+    """The batch and incremental near-dup pipelines cache nothing: after
+    an action on each, Spark's cache manager is still empty."""
+    from crawling_vectordb_llm_spark.operators.incremental_dedup import (
+        incremental_near_dup,
+    )
+
+    spark.catalog.clearCache()
+    docs = _docs_with_planted_dups(spark)
+    assert D.minhash_near_dup_pairs(docs, tau=0.5).count() > 0
+    assert incremental_near_dup(docs, F.col("doc_id") >= 1000).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

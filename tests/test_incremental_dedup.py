@@ -4,22 +4,22 @@ cross-batch planted duplicates."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.catalog import read_table
 from crawling_vectordb_llm_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    minhash_near_dup_pairs_portable,
-    minhash_signatures,
+    lsh_band_rows,
+    minhash_near_dup_pairs,
 )
 from crawling_vectordb_llm_spark.operators.incremental_dedup import (
     incremental_candidate_pairs,
-    incremental_near_dup_portable,
-    portable_banded_rows,
-    xxhash_banded_rows,
+    incremental_near_dup,
 )
 
 from .conftest import SF_SMALL
+from .minhash_reference import portable_banded_rows
 
 
 def _pairs(df):
@@ -34,8 +34,8 @@ def test_batch_snapshot_equality_portable(spark):
     for k in (1, 2):
         upto = docs.where(F.col("doc_id") % 3 <= k)
         is_new = F.col("doc_id") % 3 == k
-        inc = _pairs(incremental_near_dup_portable(upto, is_new, tau=0.2))
-        full = minhash_near_dup_pairs_portable(upto, tau=0.2)
+        inc = _pairs(incremental_near_dup(upto, is_new, tau=0.2))
+        full = minhash_near_dup_pairs(upto, tau=0.2)
         batch_ids = {
             r["doc_id"] for r in upto.where(is_new).select("doc_id").collect()
         }
@@ -46,19 +46,6 @@ def test_batch_snapshot_equality_portable(spark):
         assert inc, f"batch {k} produced no pairs — vacuous fixture split"
 
 
-def test_candidate_parity_xxhash_family(spark):
-    """The production (xxhash64) family: incremental candidates == full
-    candidates involving new ids (same banding, same combined cap)."""
-    docs = read_table(spark, SF_SMALL, "documents")
-    old_rows = xxhash_banded_rows(docs.where(F.col("doc_id") % 2 == 0))
-    new_rows = xxhash_banded_rows(docs.where(F.col("doc_id") % 2 == 1))
-    inc = _pairs(incremental_candidate_pairs(old_rows, new_rows))
-    full = _pairs(lsh_candidate_pairs(minhash_signatures(docs)))
-    expected = {p for p in full if p[0] % 2 == 1 or p[1] % 2 == 1}
-    assert inc == expected
-    assert inc
-
-
 def test_cross_batch_planted_duplicate(spark):
     """A batch-2 doc whose text duplicates a batch-1 doc must surface as
     a cross-batch pair with jaccard 1.0."""
@@ -66,7 +53,7 @@ def test_cross_batch_planted_duplicate(spark):
     rows = [(i, f"filler words number {i} " + "pad " * (i % 4 + 3)) for i in range(2, 40, 2)]
     rows += [(100, text), (101, text)]  # 100 even=old, 101 odd=new
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = incremental_near_dup_portable(
+    out = incremental_near_dup(
         docs, F.col("doc_id") % 2 == 1, tau=0.2
     ).collect()
     hits = {(r["a_id"], r["b_id"]): r["jaccard"] for r in out}
@@ -87,20 +74,20 @@ def test_flood_cap_is_combined_and_append_only(spark):
         [(i, text) for i in range(4, 7)], "doc_id long, text string"
     )
     # batch 1 against an empty index: bucket size 4 <= cap 5 -> all pairs
-    empty = portable_banded_rows(b1.where(F.lit(False)))
+    empty = lsh_band_rows(b1.where(F.lit(False)))
     first = incremental_candidate_pairs(
-        empty, portable_banded_rows(b1), max_bucket=5
+        empty, lsh_band_rows(b1), max_bucket=5
     )
     assert len(_pairs(first)) == 6  # C(4,2)
     # batch 2: combined bucket size 7 > cap 5 -> flood-guarded, nothing
     second = incremental_candidate_pairs(
-        portable_banded_rows(b1), portable_banded_rows(b2), max_bucket=5
+        lsh_band_rows(b1), lsh_band_rows(b2), max_bucket=5
     )
     assert _pairs(second) == set()
     # and the full final-corpus run suppresses the bucket too
     full = incremental_candidate_pairs(
-        portable_banded_rows(b1.unionByName(b2).where(F.lit(False))),
-        portable_banded_rows(b1.unionByName(b2)),
+        lsh_band_rows(b1.unionByName(b2).where(F.lit(False))),
+        lsh_band_rows(b1.unionByName(b2)),
         max_bucket=5,
     )
     assert _pairs(full) == set()
@@ -111,9 +98,9 @@ def test_index_rows_compose(spark):
     exactly (same (__id, band, band_hash) multiset) — the invariant that
     makes the persisted index trustworthy after N increments."""
     docs = read_table(spark, SF_SMALL, "documents")
-    full = portable_banded_rows(docs)
+    full = lsh_band_rows(docs)
     parts = [
-        portable_banded_rows(docs.where(F.col("doc_id") % 3 == k))
+        lsh_band_rows(docs.where(F.col("doc_id") % 3 == k))
         for k in range(3)
     ]
     union = parts[0].unionByName(parts[1]).unionByName(parts[2])
@@ -124,14 +111,10 @@ def test_index_rows_compose(spark):
 
 
 def test_fast_signer_parity_fixture_and_unicode(spark):
-    """portable_banded_rows_fast (numpy) must be BIT-IDENTICAL to the
-    expression plan on real fixture text and on adversarial strings
-    (empty-token runs, unicode codepoints incl. non-BMP, combining
-    marks, too-short docs) — it is the stream's signer (VERDICT r6 #1)."""
-    from crawling_vectordb_llm_spark.operators.incremental_dedup import (
-        portable_banded_rows_fast,
-    )
-
+    """lsh_band_rows (numpy) must be BIT-IDENTICAL to the expression
+    plan on real fixture text and on adversarial strings (empty-token
+    runs, unicode codepoints incl. non-BMP, combining marks, too-short
+    docs) — it is the package's only MinHash signer."""
     docs = read_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     adv = spark.createDataFrame(
         [
@@ -148,7 +131,16 @@ def test_fast_signer_parity_fixture_and_unicode(spark):
         ],
         "doc_id long, text string",
     )
-    for df in (docs, adv):
+    rng = random.Random(7)  # random strings over a space-heavy unicode pool
+    pool = "ab  zé\u0301字😀𝔘"
+    rand = spark.createDataFrame(
+        [
+            (i, "".join(rng.choice(pool) for _ in range(rng.randrange(40))))
+            for i in range(300)
+        ],
+        "doc_id long, text string",
+    )
+    for df in (docs, adv, rand):
         a = (
             portable_banded_rows(df)
             .toPandas()
@@ -156,7 +148,7 @@ def test_fast_signer_parity_fixture_and_unicode(spark):
             .reset_index(drop=True)
         )
         b = (
-            portable_banded_rows_fast(df)
+            lsh_band_rows(df)
             .toPandas()
             .sort_values(["__id", "band"])
             .reset_index(drop=True)
@@ -200,7 +192,7 @@ def test_stream_process_batch_matches_snapshot_ladder(spark, tmp_path):
     for i, (lo, hi) in enumerate(cuts):
         batch = docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
         process_batch(batch, i, store, tau=0.2)
-        snap = incremental_near_dup_portable(
+        snap = incremental_near_dup(
             docs.where(F.col("doc_id") < hi),
             F.col("doc_id") >= lo,
             tau=0.2,

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.catalog import read_table
 from crawling_vectordb_llm_spark.operators.incremental_dedup import (
-    incremental_near_dup_portable,
+    incremental_near_dup,
 )
 from crawling_vectordb_llm_spark.streaming.incremental_dedup_stream import (
     process_batch,
@@ -59,7 +59,7 @@ def test_stream_matches_batch_snapshots(spark, tmp_path):
             .collect()
         }
         expected = _pairs(
-            incremental_near_dup_portable(
+            incremental_near_dup(
                 prefix, F.col("doc_id").isin(list(batch_ids)), tau=0.2
             )
         )

@@ -47,9 +47,15 @@ def test_build_index_and_search_from_artifacts(spark, tmp_path):
     rank1 = {r["query_id"]: r["doc_id"] for r in hits if r["rank"] == 1}
     assert rank1 == {0: 0, 1: 1, 2: 2}  # each doc finds itself
 
-    sigs = spark.read.parquet(arts["minhash_signatures"])
-    assert sigs.count() == docs.count()
-    assert len(sigs.first()["signature"]) == 32
+    # LSH index: one row per band (8) for every doc with >= 3 tokens
+    band_rows = spark.read.parquet(arts["lsh_band_rows"])
+    per_doc = {
+        r["__id"]: r["count"]
+        for r in band_rows.groupBy("__id").count().collect()
+    }
+    signed = collection.where(F.size(F.split("text", " ")) >= 3)
+    assert per_doc == {r["doc_id"]: 8 for r in signed.select("doc_id").collect()}
+    assert per_doc
 
 def test_ivf_assignment_layout_prunes_partitions(spark, tmp_path):
     """The centroid-partitioned layout is the whole point of IVF at scale:

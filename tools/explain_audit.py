@@ -47,7 +47,7 @@ AUDITED = [
     "session_path_patterns",
     "budget_water_fill",
     "ivf_pruned_near_dup",
-    "minhash_lsh_near_dup_portable",
+    "minhash_lsh_near_dup",
     "cross_encoder_rerank",
     "bpe_token_count",
     "quality_classifier_filter",
