@@ -496,21 +496,21 @@ def kmeans_centroids(
     with n for zero recall benefit (r6 slope fits; recall gates
     re-verified at all scales after the cap)."""
     sample_limit = min(sample_limit, max(10_000, 256 * n_centroids))
-    # r14 (VERDICT r13 #5): expose the collected sample + the corpus count
-    # the probe learned (sample_out = {rows, n, cap}) so a consumer whose
-    # OWN bounded sample would provably be the identical row list — i.e.
-    # when this sample already holds the ENTIRE corpus and the consumer's
-    # cap also covers it (ivfpq_topk's residual-codebook sample) — can
-    # reuse it instead of paying a second collect.  Reuse is gated on
-    # bit-identity, never on "close enough": above either cap the
-    # consumer samples exactly as before.
+    # sample_out = {x, n} exposes the normalized training matrix (one
+    # row per sampled vector, in bounded_random_sample's pinned order) and
+    # the corpus count the probe learned, so a consumer whose OWN bounded
+    # sample would provably be the identical row list — i.e. when this
+    # sample already holds the ENTIRE corpus and the consumer's cap also
+    # covers it — can reuse it instead of paying a second collect.  Reuse
+    # is gated on bit-identity, never on "close enough": above either cap
+    # the consumer samples exactly as before.
     nstat: dict = {}
     rows = bounded_random_sample(
         corpus, [vec_col], sample_limit, seed, n_out=nstat
     )
-    if sample_out is not None:
-        sample_out.update(rows=rows, n=nstat["n"], cap=sample_limit)
     x = _normalize(np.array([r[0] for r in rows], dtype=np.float64))
+    if sample_out is not None:
+        sample_out.update(x=x, n=nstat["n"])
     rng = np.random.default_rng(seed)
     cents = _kmeanspp_init(x, min(n_centroids, len(x)), rng)
     return _lloyd_sphere(x, cents, max_iter)
@@ -874,7 +874,6 @@ def ivf_pruned_threshold_join(
     score_col: str = "score",
     stats_out: dict | None = None,
     centroids: "np.ndarray | None" = None,
-    gemm_prefilter: bool = True,
 ) -> DataFrame:
     """EXACT cosine-threshold self-join through IVF-cell candidate pruning
     — the composed "candidates → verify" pipeline (VERDICT r2 #2) with
@@ -890,9 +889,9 @@ def ivf_pruned_threshold_join(
     is evaluated driver-side on the k x k centroid matrix (tiny).
 
     Stage 2 (verify): the surviving cell pairs run the same chunked
-    float64 GEMM as threshold_similarity_join(strategy="blocked") — one
-    cogrouped task per admissible pair, diagonal pairs triangular, cross
-    pairs oriented (a_id < b_id), nothing collected to the driver.
+    GEMM kernel as knn.threshold_similarity_join (`_chunked_tau_gemm`) —
+    one grouped task per admissible pair, diagonal pairs triangular,
+    cross pairs oriented (a_id < b_id), nothing collected to the driver.
     Output is bit-identical to the exact join: same normalize, same
     rounding, each unordered pair emitted exactly once.
 
@@ -906,7 +905,7 @@ def ivf_pruned_threshold_join(
     uniform corpus degrades to the full exact grid, which is the blocked
     join's already-bounded cost.  Replication per row = number of
     admissible pairs its cell participates in (<= K+1), versus the
-    unconditional P+1 of the unpruned grid.
+    unconditional P of the unpruned grid.
 
     `stats_out`: pass a dict to receive the measured prune plan —
     {n, n_cells, admissible_blocks, total_blocks, candidate_pairs,
@@ -945,8 +944,6 @@ def ivf_pruned_threshold_join(
             tau,
             gemm_chunk_rows,
             triangular=diagonal,
-            orient=True,
-            prefilter=gemm_prefilter,
         )
         return pd.DataFrame({"a_id": out[0], "b_id": out[1], score_col: out[2]})
 
@@ -1026,27 +1023,17 @@ def _ivf_pruned_replicated(
         # needing quantizer-grade cells pass `centroids` explicitly
         # (plans/index_build.py persists exactly that).
         #
-        # r13 (guide §1/§5): the fit is inlined (same steps as
-        # kmeans_centroids, bit-for-bit: capped bounded sample →
-        # normalize → k-means++ → 8 Lloyd rounds) so that when the
-        # sample probe already collected the ENTIRE corpus
-        # (len(rows) == n, true for every fixture-scale call), the
-        # per-cell radii/size stats can be computed on the driver from
-        # the same vectors with the exact executor math — skipping the
-        # eager distributed radius pass (one full mapInPandas
-        # materialization per join).  Above the sample cap the
-        # distributed radius pass runs unchanged.
-        # r14 (VERDICT r13 #4): was min(max(10_000, 64*k), max(10_000,
-        # 256*k)) — the first operand always wins, so write it plainly
-        eff_limit = max(10_000, 64 * k)
-        rows_s = bounded_random_sample(corpus, [vec_col], eff_limit, seed)
-        fit_x = _normalize(np.array([r[0] for r in rows_s], dtype=np.float64))
-        rng = np.random.default_rng(seed)
-        centroids = _lloyd_sphere(
-            fit_x, _kmeanspp_init(fit_x, min(k, len(fit_x)), rng), 8
+        # When the fit sample is the whole corpus (every fixture-scale
+        # call), the per-cell radii/size stats below are computed on the
+        # driver from the same normalized vectors with the exact executor
+        # math, skipping the eager distributed radius pass.
+        fit: dict = {}
+        centroids = kmeans_centroids(
+            corpus, k, vec_col, seed=seed, max_iter=8,
+            sample_limit=max(10_000, 64 * k), sample_out=fit,
         )
-        if len(rows_s) == n:
-            sample_x = fit_x
+        if len(fit["x"]) == n:
+            sample_x = fit["x"]
     k = centroids.shape[0]
     if hier is None:
         bc = spark.sparkContext.broadcast(centroids)
@@ -1340,7 +1327,6 @@ def ivf_pruned_topk_join(
     item_col: str = "item_id",
     neighbor_col: str = "neighbor_id",
     centroids: "np.ndarray | None" = None,
-    gemm_prefilter: bool = True,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """BOUNDED-OUTPUT composition of the IVF-cell prune and the per-item
@@ -1399,7 +1385,6 @@ def ivf_pruned_topk_join(
             k,
             gemm_chunk_rows,
             diagonal=diagonal,
-            prefilter=gemm_prefilter,
         )
         return pd.DataFrame(
             {item_col: out[0], neighbor_col: out[1], score_col: out[2]}

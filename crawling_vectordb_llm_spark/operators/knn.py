@@ -19,8 +19,13 @@ online ANN index, so the engine provides batch equivalents:
                        |partitions|×|queries|×k before the final window.
                        This is the 100 TB plan: shuffle size is independent
                        of corpus size.
-3. `threshold_similarity_join` — all pairs with cosine >= tau (the range-
-                       join flavor, SURVEY §2.5), used by near-dup dedup.
+3. `threshold_similarity_join` — the exact self-join: all pairs with
+                       cosine >= tau (the range-join flavor, SURVEY §2.5),
+                       used by near-dup dedup.  One plan: a triangular
+                       block grid, each row shuffled to its P block pairs
+                       (P·n rows), one chunked GEMM task per pair.  The
+                       bounded `topk_similarity_self_join` runs on the
+                       same grid.
 4. `ivf` (operators/ivf.py) — the approximate scale path: k-means
                        centroids, partition-by-centroid, probe nProbe cells.
 
@@ -167,175 +172,106 @@ def knn_topk_matrix(
 
 
 def threshold_similarity_join(
-    left: DataFrame,
-    right: DataFrame | None,
+    df: DataFrame,
     tau: float,
-    left_id: str = "vec_id",
-    left_vec: str = "embedding",
-    right_id: str | None = None,
-    right_vec: str | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
     score_col: str = "score",
-    strategy: str = "blocked",
     n_blocks: int | None = None,
     block_target_rows: int = 65_536,
     gemm_chunk_rows: int = 2_048,
-    max_broadcast_rows: int = 1_000_000,
 ) -> DataFrame:
-    """All pairs with cosine >= tau.  right=None → self-join (dedup shape):
-    emits each unordered pair once (a_id < b_id).
+    """All pairs of `df` with cosine >= tau (the dedup self-join shape):
+    each unordered pair once as (a_id < b_id, score rounded to 6 dp).
 
-    strategy="blocked" (default): EXACT distributed grid-blocked GEMM.
-    Every id is hashed into one of P blocks; each row is shuffled to the
-    block-PAIRS it participates in (triangular for the self-join: a row in
-    block b is the A side of pairs (b, j>=b) and the B side of pairs
-    (i<=b, b) — exactly P+1 copies per row regardless of b, so replication
-    is even).  One `applyInPandas` task per block pair runs a chunked
-    float64 GEMM and emits only the >= tau matches.  Nothing is ever
-    collected to the driver and no side is broadcast, so the operator
-    survives any corpus size: shuffle volume is (P+1)·n rows with
-    P ≈ n / block_target_rows, the per-task score matrix is bounded by
-    gemm_chunk_rows × block_target_rows, and compute parallelism is
-    P(P+1)/2 tasks.  This is the semdedup.py cogroup-GEMM shape applied to
-    an exact (unpruned) grid, per VERDICT r1 #1.
+    EXACT distributed grid-blocked GEMM.  Every id is hashed into one of
+    P blocks and each row is shuffled to the P block-PAIRS it
+    participates in (`_triangular_block_grid`), so shuffle volume is P·n
+    rows with P ≈ n / block_target_rows.  One `applyInPandas` task per
+    block pair runs a chunked GEMM (`_chunked_tau_gemm`) and emits only
+    the >= tau matches.  Nothing is collected to the driver and no side is
+    broadcast, so the operator survives any corpus size: the per-task
+    score matrix is bounded by gemm_chunk_rows × block_target_rows, and
+    compute parallelism is P(P+1)/2 tasks.  This is the semdedup.py
+    cogroup-GEMM shape applied to an exact (unpruned) grid.
 
-    strategy="broadcast" (alias "numpy", the r1 default): collect + broadcast
-    the right side as one L2-normalized float64 matrix; each left partition
-    does a single GEMM against it.  Fastest when the right side is small and
-    guarded by `max_broadcast_rows` — exceeding it raises instead of
-    OOM-ing the driver.
-
-    strategy="sql": pure codegen zip_with/aggregate cosine over a broadcast
-    nested-loop join — kept for the all-JVM plan shape.
-
-    All strategies are exact and quadratic in compute; at 100 TB prefer a
+    The join is exact and quadratic in compute; at 100 TB prefer a
     candidate generator (LSH bands, operators/dedup.py, or IVF cells,
-    operators/ivf.py) to prune the pair space first, then verify with this
-    operator on the candidates.
+    ivf.ivf_pruned_threshold_join) to prune the pair space first.
     """
-    self_join = right is None
-    right = left if right is None else right
-    right_id = right_id or left_id
-    right_vec = right_vec or left_vec
-
-    if strategy == "sql":
-        a = left.select(
-            F.col(left_id).alias("a_id"), V.l2_normalize(left_vec).alias("__av")
-        )
-        b = right.select(
-            F.col(right_id).alias("b_id"), V.l2_normalize(right_vec).alias("__bv")
-        )
-        pairs = F.broadcast(a).crossJoin(b)
-        if self_join:
-            pairs = pairs.where(F.col("a_id") < F.col("b_id"))
-        return (
-            pairs.withColumn(score_col, V.dot(F.col("__av"), F.col("__bv")))
-            .where(F.col(score_col) >= tau)
-            .select("a_id", "b_id", F.round(score_col, 6).alias(score_col))
-        )
-
-    if strategy in ("broadcast", "numpy"):
-        return _threshold_join_broadcast(
-            left, right, tau, self_join,
-            left_id, left_vec, right_id, right_vec, score_col,
-            max_broadcast_rows,
-        )
-
-    if strategy != "blocked":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    aid_t = left.schema[left_id].dataType.simpleString()
-    bid_t = right.schema[right_id].dataType.simpleString()
-
-    if self_join:
-        if n_blocks is None:
-            n = left.count()
-            n_blocks = _pick_blocks(
-                n, block_target_rows, left.sparkSession.sparkContext.defaultParallelism
-            )
-        P = n_blocks
-        blocked = left.select(
-            F.col(left_id).alias("__id"),
-            V.as_double_array(left_vec).alias("__v"),
-            F.pmod(F.xxhash64(F.col(left_id)), F.lit(P)).cast("int").alias("__b"),
-        )
-        # triangular replication: pk encodes the ordered block pair (i, j), i<=j
-        a_side = blocked.select(
-            "__id", "__v", "__b",
-            F.explode(F.sequence(F.col("__b"), F.lit(P - 1))).alias("__j"),
-        ).select(
-            "__id", "__v",
-            (F.col("__b") * P + F.col("__j")).alias("__pk"),
-            F.lit("a").alias("__role"),
-        )
-        b_side = blocked.select(
-            "__id", "__v", "__b",
-            F.explode(F.sequence(F.lit(0), F.col("__b"))).alias("__i"),
-        ).select(
-            "__id", "__v",
-            (F.col("__i") * P + F.col("__b")).alias("__pk"),
-            F.lit("b").alias("__role"),
-        )
-        replicated = a_side.unionByName(b_side)
-
-        def _gemm_self(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            i, j = divmod(int(key[0]), P)
-            if i == j:
-                # diagonal pair: both roles carry the same block — use one copy
-                a = pdf[pdf["__role"] == "a"]
-                b = a
-            else:
-                a = pdf[pdf["__role"] == "a"]
-                b = pdf[pdf["__role"] == "b"]
-            out = _chunked_tau_gemm(
-                a["__id"].to_numpy(), np.array(list(a["__v"]), dtype=np.float64),
-                b["__id"].to_numpy(), np.array(list(b["__v"]), dtype=np.float64),
-                tau, gemm_chunk_rows, triangular=(i == j), orient=True,
-            )
-            return pd.DataFrame(
-                {"a_id": out[0], "b_id": out[1], score_col: out[2]}
-            )
-
-        return replicated.groupBy("__pk").applyInPandas(
-            _gemm_self, schema=f"a_id {aid_t}, b_id {bid_t}, {score_col} double"
-        )
-
-    # distinct left/right relations: P x Q grid via cogroup
     if n_blocks is None:
-        par = left.sparkSession.sparkContext.defaultParallelism
-        nl, nr = left.count(), right.count()
-        # grid tasks = P*Q; split the parallelism target across both axes
-        side_par = max(1, int(par**0.5))
-        P = _pick_blocks(nl, block_target_rows, side_par, triangular=False)
-        Q = _pick_blocks(nr, block_target_rows, side_par, triangular=False)
-    else:
-        P = Q = n_blocks
-    lrep = left.select(
-        F.col(left_id).alias("__id"), V.as_double_array(left_vec).alias("__v"),
-        F.pmod(F.xxhash64(F.col(left_id)), F.lit(P)).cast("int").alias("__b"),
-        F.explode(F.sequence(F.lit(0), F.lit(Q - 1))).alias("__j"),
-    ).select("__id", "__v", (F.col("__b") * Q + F.col("__j")).alias("__pk"))
-    rrep = right.select(
-        F.col(right_id).alias("__id"), V.as_double_array(right_vec).alias("__v"),
-        F.pmod(F.xxhash64(F.col(right_id)), F.lit(Q)).cast("int").alias("__b"),
-        F.explode(F.sequence(F.lit(0), F.lit(P - 1))).alias("__i"),
-    ).select("__id", "__v", (F.col("__i") * Q + F.col("__b")).alias("__pk"))
+        n_blocks = _pick_blocks(
+            df.count(), block_target_rows,
+            df.sparkSession.sparkContext.defaultParallelism,
+        )
+    id_t = df.schema[id_col].dataType.simpleString()
 
-    def _gemm_cross(key: tuple, lp: pd.DataFrame, rp: pd.DataFrame) -> pd.DataFrame:
-        if len(lp) == 0 or len(rp) == 0:
-            return pd.DataFrame({"a_id": [], "b_id": [], score_col: []})
+    def _tau_pairs(a_ids, a_mat, b_ids, b_mat, diagonal: bool) -> pd.DataFrame:
         out = _chunked_tau_gemm(
-            lp["__id"].to_numpy(), np.array(list(lp["__v"]), dtype=np.float64),
-            rp["__id"].to_numpy(), np.array(list(rp["__v"]), dtype=np.float64),
-            tau, gemm_chunk_rows, triangular=False, orient=False,
+            a_ids, a_mat, b_ids, b_mat, tau, gemm_chunk_rows, triangular=diagonal
         )
         return pd.DataFrame({"a_id": out[0], "b_id": out[1], score_col: out[2]})
 
-    return (
-        lrep.groupBy("__pk")
-        .cogroup(rrep.groupBy("__pk"))
-        .applyInPandas(
-            _gemm_cross, schema=f"a_id {aid_t}, b_id {bid_t}, {score_col} double"
+    return _triangular_block_grid(
+        df, id_col, vec_col, n_blocks, _tau_pairs,
+        schema=f"a_id {id_t}, b_id {id_t}, {score_col} double",
+    )
+
+
+def _triangular_block_grid(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_blocks: int,
+    kernel,
+    schema: str,
+) -> DataFrame:
+    """Run `kernel` once per block pair (i <= j) of the exact self-join grid.
+
+    Every id hashes into one of P = n_blocks blocks.  A row in block b is
+    the 'a' side of pairs (b, j >= b) and the 'b' side of pairs (i < b, b):
+    exactly P copies per row whatever b is, so replication is even.  A
+    diagonal task (i == j) scores its 'a' rows against themselves, so no
+    'b' copy is shipped to it.  `kernel(a_ids, a_mat, b_ids, b_mat,
+    diagonal)` returns a pandas frame matching `schema`; the matrices are
+    float64, one row per id."""
+    P = n_blocks
+    blocked = df.select(
+        F.col(id_col).alias("__id"),
+        V.as_double_array(vec_col).alias("__v"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(P)).cast("int").alias("__b"),
+    )
+    a_side = blocked.select(
+        "__id", "__v", "__b",
+        F.explode(F.sequence(F.col("__b"), F.lit(P - 1))).alias("__j"),
+    ).select(
+        "__id", "__v",
+        (F.col("__b") * P + F.col("__j")).alias("__pk"),
+        F.lit("a").alias("__role"),
+    )
+    # A filter, not sequence(0, __b - 1): sequence(0, -1) is the Spark
+    # descending range [0, -1], not empty.
+    b_side = blocked.select(
+        "__id", "__v", "__b",
+        F.explode(F.sequence(F.lit(0), F.col("__b"))).alias("__i"),
+    ).where(F.col("__i") != F.col("__b")).select(
+        "__id", "__v",
+        (F.col("__i") * P + F.col("__b")).alias("__pk"),
+        F.lit("b").alias("__role"),
+    )
+
+    def _pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        i, j = divmod(int(key[0]), P)
+        a = pdf[pdf["__role"] == "a"]
+        b = a if i == j else pdf[pdf["__role"] == "b"]
+        return kernel(
+            a["__id"].to_numpy(), np.array(list(a["__v"]), dtype=np.float64),
+            b["__id"].to_numpy(), np.array(list(b["__v"]), dtype=np.float64),
+            i == j,
         )
+
+    return a_side.unionByName(b_side).groupBy("__pk").applyInPandas(
+        _pair, schema=schema
     )
 
 
@@ -380,7 +316,7 @@ def threshold_similarity_join(
 # the information cost of exact recall-1.0 top-k on structure-free
 # geometry, not an operator defect (FAISS exact = brute GEMM for the
 # same reason).  The dispatch still buys the smaller constant
-# (replication ≤ C+1 vs P+1) and the prune converts CLUSTER STRUCTURE
+# (replication ≤ C+1 vs P) and the prune converts CLUSTER STRUCTURE
 # into skipped blocks — with cluster count ∝ n the same 60k→180k step
 # runs at e≈1 (CLUSTERED_SF9_r11.json), which is the geometry real
 # encoder embeddings have at 100 TB.  The f32-prefilter/f64-verify
@@ -412,7 +348,6 @@ def topk_similarity_self_join(
     strategy: str = "auto",
     brute_max_rows: int = BRUTE_TOPK_MAX_ROWS,
     n_cells: "int | None" = None,
-    gemm_prefilter: bool = True,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """BOUNDED-OUTPUT similarity self-join (VERDICT r6 #1): for every item,
@@ -430,17 +365,17 @@ def topk_similarity_self_join(
     neighbors are exactly the edges that form its cluster).
 
     Physical shape: the same triangular block grid as
-    threshold_similarity_join(strategy="blocked") — every id hashes into
-    one of P blocks, each row is shuffled to its P+1 block-pairs — but
-    each block-pair task emits only each participating item's LOCAL top-k
-    (both directions of the pair), so per-task output is (|A|+|B|)·k
-    instead of the full >=tau pair volume.  A global grouped_topk merges
-    the per-task lists: any globally top-k neighbor of an item has local
-    rank < k in the one task that scored that pair (every candidate ahead
-    of it locally is ahead globally too), so local truncation is a strict
-    superset of the answer — the same admission argument as
-    ivf_search's per-cell rank cap.  Shuffle volume is n·(P+1)·k score
-    triples; nothing is collected to the driver.
+    threshold_similarity_join (`_triangular_block_grid`) — every id
+    hashes into one of P blocks, each row is shuffled to its P
+    block-pairs — but each block-pair task emits only each participating
+    item's LOCAL top-k (both directions of the pair), so per-task output
+    is (|A|+|B|)·k instead of the full >=tau pair volume.  A global
+    grouped_topk merges the per-task lists: any globally top-k neighbor
+    of an item has local rank < k in the one task that scored that pair
+    (every candidate ahead of it locally is ahead globally too), so local
+    truncation is a strict superset of the answer — the same admission
+    argument as ivf_search's per-cell rank cap.  Shuffle volume is at
+    most n·P·k score triples; nothing is collected to the driver.
 
     Determinism: local and global stages rank on the SAME total order —
     6-dp-rounded score desc, neighbor id asc (ids pre-sorted + stable
@@ -508,7 +443,6 @@ def topk_similarity_self_join(
             score_col=score_col,
             item_col=item_col,
             neighbor_col=neighbor_col,
-            gemm_prefilter=gemm_prefilter,
             stats_out=stats_out,
         )
     if stats_out is not None:
@@ -519,52 +453,18 @@ def topk_similarity_self_join(
         n_blocks = _pick_blocks(
             n, block_target_rows, spark.sparkContext.defaultParallelism
         )
-    P = n_blocks
     id_t = df.schema[id_col].dataType.simpleString()
-    blocked = df.select(
-        F.col(id_col).alias("__id"),
-        V.as_double_array(vec_col).alias("__v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(P)).cast("int").alias("__b"),
-    )
-    a_side = blocked.select(
-        "__id", "__v", "__b",
-        F.explode(F.sequence(F.col("__b"), F.lit(P - 1))).alias("__j"),
-    ).select(
-        "__id", "__v",
-        (F.col("__b") * P + F.col("__j")).alias("__pk"),
-        F.lit("a").alias("__role"),
-    )
-    # Diagonal tasks (i == j) score the 'a' copy against itself, so rows
-    # ship to their own block only in the 'a' role — excluding __i == __b
-    # here halves the largest tasks' input (ADVICE r7; the filter, not
-    # sequence(0, __b - 1), because sequence(0, -1) is the Spark
-    # descending range [0, -1], not empty).
-    b_side = blocked.select(
-        "__id", "__v", "__b",
-        F.explode(F.sequence(F.lit(0), F.col("__b"))).alias("__i"),
-    ).where(F.col("__i") != F.col("__b")).select(
-        "__id", "__v",
-        (F.col("__i") * P + F.col("__b")).alias("__pk"),
-        F.lit("b").alias("__role"),
-    )
-    replicated = a_side.unionByName(b_side)
 
-    def _topk_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        i, j = divmod(int(key[0]), P)
-        a = pdf[pdf["__role"] == "a"]
-        b = a if i == j else pdf[pdf["__role"] == "b"]
+    def _topk_pair(a_ids, a_mat, b_ids, b_mat, diagonal: bool) -> pd.DataFrame:
         out = _topk_tau_gemm(
-            a["__id"].to_numpy(), np.array(list(a["__v"]), dtype=np.float64),
-            b["__id"].to_numpy(), np.array(list(b["__v"]), dtype=np.float64),
-            tau, k, gemm_chunk_rows, diagonal=(i == j),
-            prefilter=gemm_prefilter,
+            a_ids, a_mat, b_ids, b_mat, tau, k, gemm_chunk_rows, diagonal=diagonal
         )
         return pd.DataFrame(
             {item_col: out[0], neighbor_col: out[1], score_col: out[2]}
         )
 
-    candidates = replicated.groupBy("__pk").applyInPandas(
-        _topk_pair,
+    candidates = _triangular_block_grid(
+        df, id_col, vec_col, n_blocks, _topk_pair,
         schema=f"{item_col} {id_t}, {neighbor_col} {id_t}, {score_col} double",
     )
     return grouped_topk(
@@ -666,8 +566,8 @@ def _topk_tau_gemm(
     with no cluster structure to skip, so compute is the full pairwise
     grid); this halves the constant on that regime — the exponent
     itself is the information cost of exact top-k at recall 1.0 on
-    structure-free geometry.  prefilter=False keeps the pure-f64 path
-    for A/B measurement."""
+    structure-free geometry.  prefilter=False is the pure-f64 reference
+    the kernel tests compare against."""
     empty = (np.array([]), np.array([]), np.array([]))
     if len(a_ids) == 0 or len(b_ids) == 0 or k <= 0:
         return empty
@@ -765,23 +665,18 @@ def _pick_blocks(
     n: int,
     block_target_rows: int,
     parallelism: int,
-    triangular: bool = True,
     min_block_rows: int = 256,
 ) -> int:
-    """Grid size P for the blocked GEMM: at least enough blocks that every
-    block fits block_target_rows (the MEMORY bound), and — when the data is
-    small relative to the cluster — enough block-pairs to occupy the
-    available cores (the PARALLELISM bound: P(P+1)/2 tasks for the
-    triangular self-join, P tasks per grid side otherwise), floored so
-    blocks never shrink below min_block_rows where per-task overhead would
-    dominate the GEMM."""
+    """Grid size P for the triangular block grid: at least enough blocks
+    that every block fits block_target_rows (the MEMORY bound), and — when
+    the data is small relative to the cluster — enough block-pairs to
+    occupy the available cores (the PARALLELISM bound: P(P+1)/2 tasks),
+    floored so blocks never shrink below min_block_rows where per-task
+    overhead would dominate the GEMM."""
     p_mem = max(1, -(-n // block_target_rows))
-    if triangular:
-        p_par = 1
-        while p_par * (p_par + 1) // 2 < parallelism:
-            p_par += 1
-    else:
-        p_par = parallelism
+    p_par = 1
+    while p_par * (p_par + 1) // 2 < parallelism:
+        p_par += 1
     p_cap = max(1, n // min_block_rows)
     return max(p_mem, min(p_par, p_cap))
 
@@ -794,19 +689,19 @@ def _chunked_tau_gemm(
     tau: float,
     chunk_rows: int,
     triangular: bool,
-    orient: bool,
     prefilter: bool = True,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """L2-normalize both sides, then score A against B in row-chunks of A so
-    the score matrix never exceeds chunk_rows × |B|.  triangular=True keeps
-    only a_id < b_id (self-join diagonal); orient=True emits each surviving
-    cross-block pair as (min_id, max_id) so the unordered pair appears once
-    with a_id < b_id regardless of which block hashed where.
+    the score matrix never exceeds chunk_rows × |B|.  Each surviving pair is
+    emitted as (min_id, max_id, round(score, 6)), so an unordered pair
+    appears once with a_id < b_id regardless of which block hashed where;
+    triangular=True (A and B are the same set: a self-join diagonal) keeps
+    only a_id < b_id, which drops self-pairs and mirror copies.
 
     prefilter=True (r11): f32 chunk GEMM + tau - _f32_margin(d) mask,
     f64 re-score of candidates only, re-cut at tau — same output as the
     f64 GEMM (up to summation-order ulps, see _topk_tau_gemm) at ~half
-    the flop-bound wall."""
+    the flop-bound wall.  prefilter=False is the pure-f64 reference."""
     if len(a_ids) == 0 or len(b_ids) == 0:
         empty = np.array([])
         return empty, empty, empty
@@ -825,26 +720,20 @@ def _chunked_tau_gemm(
             li, ri = np.nonzero(s32 >= tau32)
             if len(li) == 0:
                 continue
-            exact = _f64_rescore(am, b_mat, li, ri)
-            keep = exact >= tau
-            li, ri, exact = li[keep], ri[keep], exact[keep]
-            scores_at = exact
+            sc = _f64_rescore(am, b_mat, li, ri)
+            keep = sc >= tau
+            li, ri, sc = li[keep], ri[keep], sc[keep]
         else:
             scores = am @ b_mat.T
             li, ri = np.nonzero(scores >= tau)
-            scores_at = None
+            sc = scores[li, ri]
         if len(li) == 0:
             continue
         x_ids, y_ids = ai[li], b_ids[ri]
         if triangular:
             keep = x_ids < y_ids
-            if scores_at is not None:
-                scores_at = scores_at[keep]
-            x_ids, y_ids, li, ri = x_ids[keep], y_ids[keep], li[keep], ri[keep]
-        s = np.round(
-            scores_at if scores_at is not None else scores[li, ri], 6
-        )
-        if orient and not triangular:
+            x_ids, y_ids, sc = x_ids[keep], y_ids[keep], sc[keep]
+        else:
             swap = x_ids > y_ids
             x_ids, y_ids = (
                 np.where(swap, y_ids, x_ids),
@@ -852,71 +741,11 @@ def _chunked_tau_gemm(
             )
         outs_a.append(x_ids)
         outs_b.append(y_ids)
-        outs_s.append(s)
+        outs_s.append(np.round(sc, 6))
     if not outs_a:
         empty = np.array([])
         return empty, empty, empty
     return np.concatenate(outs_a), np.concatenate(outs_b), np.concatenate(outs_s)
-
-
-def _threshold_join_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    tau: float,
-    self_join: bool,
-    left_id: str,
-    left_vec: str,
-    right_id: str,
-    right_vec: str,
-    score_col: str,
-    max_broadcast_rows: int,
-) -> DataFrame:
-    """The r1 strategy: collect + broadcast the right side, one GEMM per left
-    partition.  Now opt-in (strategy="broadcast") and guarded: a right side
-    larger than max_broadcast_rows raises instead of OOM-ing the driver."""
-    spark = left.sparkSession
-    aid_t = left.schema[left_id].dataType.simpleString()
-    bid_t = right.schema[right_id].dataType.simpleString()
-    n_right = right.count()
-    if n_right > max_broadcast_rows:
-        raise ValueError(
-            f"strategy='broadcast' right side has {n_right} rows > "
-            f"max_broadcast_rows={max_broadcast_rows}; use strategy='blocked' "
-            "(distributed) instead"
-        )
-    rrows = right.select(right_id, right_vec).collect()
-    rids = np.array([r[0] for r in rrows])
-    rmat = np.array([r[1] for r in rrows], dtype=np.float64)
-    rmat = rmat / np.maximum(np.linalg.norm(rmat, axis=1, keepdims=True), 1e-30)
-    br = spark.sparkContext.broadcast((rids, rmat))
-
-    def score_block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_r, mat_r = br.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lmat = np.array(list(pdf[left_vec]), dtype=np.float64)
-            lmat = lmat / np.maximum(
-                np.linalg.norm(lmat, axis=1, keepdims=True), 1e-30
-            )
-            scores = lmat @ mat_r.T
-            lids = pdf[left_id].to_numpy()
-            li, ri = np.nonzero(scores >= tau)
-            a_ids, b_ids = lids[li], ids_r[ri]
-            if self_join:
-                keep = a_ids < b_ids
-                a_ids, b_ids, li, ri = a_ids[keep], b_ids[keep], li[keep], ri[keep]
-            yield pd.DataFrame(
-                {
-                    "a_id": a_ids,
-                    "b_id": b_ids,
-                    score_col: np.round(scores[li, ri], 6),
-                }
-            )
-
-    return left.select(left_id, left_vec).mapInPandas(
-        score_block, schema=f"a_id {aid_t}, b_id {bid_t}, {score_col} double"
-    )
 
 
 def knn_quantized_rerank(

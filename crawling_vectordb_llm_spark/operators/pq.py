@@ -313,21 +313,19 @@ def ivfpq_topk(
     # centroid_id is a function of the vector, so dropping it from the
     # sample-order pinning key changes nothing either.
     # r14 (VERDICT r13 #5): when the k-means fit sample already collected
-    # the ENTIRE corpus (n == len(rows), i.e. the corpus fit under the
-    # fit cap) and the residual cap also covers it, the residual sample
-    # IS that same pinned row list by bounded_random_sample's contract
+    # the ENTIRE corpus (n == len(x), i.e. the corpus fit under the fit
+    # cap) and the residual cap also covers it, the residual sample IS
+    # that same pinned row list by bounded_random_sample's contract
     # (probe returns everything, value-sorted — the seed never draws), so
-    # the second collect is skipped.  Above either cap the residual
-    # sample is drawn exactly as before — bit-identity is the gate.
+    # the second collect and its normalize are skipped.  Above either cap
+    # the residual sample is drawn exactly as before — bit-identity is the
+    # gate.
     resid_cap = max(20_000, 1_024 * n_codes)
-    if (
-        fit_sample["n"] == len(fit_sample["rows"])
-        and fit_sample["n"] <= resid_cap
-    ):
-        rows = fit_sample["rows"]
+    if fit_sample["n"] == len(fit_sample["x"]) and fit_sample["n"] <= resid_cap:
+        x = fit_sample["x"]
     else:
         rows = bounded_random_sample(corpus, [corpus_vec], resid_cap, seed)
-    x = _normalize(np.array([r[0] for r in rows], dtype=np.float64))
+        x = _normalize(np.array([r[0] for r in rows], dtype=np.float64))
     cid = np.argmax(x @ cents.T, axis=1)
     resid = x - cents[cid]
     dim = x.shape[1]

@@ -62,11 +62,10 @@ def global_topk_ranked(
 
 # Default bound for query-side collects across the ANN ladder.  The
 # bounded-collect contract (knn.py docstrings; reference issues one query
-# text at a time, main_server.py:41) assumes <= ~100k queries; 1M matches
-# knn._threshold_join_broadcast's max_broadcast_rows default and is still
-# well under driver memory at 1024 dims (float64 1M x 1024 = 8 GB would be
-# too big — but the guard's point is a CLEAR error before that allocation,
-# not a silent OOM; lower it per-call for wide vectors).
+# text at a time, main_server.py:41) assumes <= ~100k queries; 1M leaves
+# 10x headroom over that.  At 1024 dims 1M float64 rows would be 8 GB, too
+# big for the driver — but the guard's point is a CLEAR error before that
+# allocation, not a silent OOM; lower it per-call for wide vectors.
 DEFAULT_MAX_QUERY_ROWS = 1_000_000
 
 # (r14: the r6 id-only pre-count probe for large bounds is gone — the
@@ -90,8 +89,7 @@ def collect_query_rows(
     after materializing at most max_rows + 1 rows instead of OOM-ing on
     the full relation.  Below the cap the limit is a no-op and every row
     is returned (order is irrelevant — callers build per-query top-k,
-    never order-sensitive state).  Mirror of _threshold_join_broadcast's
-    guard (knn.py:399).
+    never order-sensitive state).
 
     r14 (guide §1/§5): ONE Arrow collect for every bound.  The r6 shape
     additionally pre-counted the id column for bounds above 100k rows so
@@ -113,9 +111,9 @@ def collect_query_rows(
         raise ValueError(
             f"{caller}: query side exceeds max_query_rows={max_rows}; "
             "the query relation is broadcast to every task and must stay "
-            "small — pre-aggregate, batch the queries, or use a "
-            "distributed similarity join (knn.threshold_join "
-            "strategy='blocked') instead"
+            "small — pre-aggregate, batch the queries, or use the "
+            "distributed similarity join (knn.threshold_similarity_join) "
+            "instead"
         )
     return list(zip(pdf[id_col].tolist(), pdf[vec_col].tolist()))
 

@@ -198,7 +198,7 @@ def q_embedding_near_dup_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame
     is quadratic at a loose tau (measured e=2.0); prefer
     `embedding_near_dup` (top-k emission) at scale."""
     emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    return threshold_similarity_join(emb, None, tau=0.35)
+    return threshold_similarity_join(emb, tau=0.35)
 
 
 _CLUSTER_TAIL = """, sym AS (
@@ -288,7 +288,7 @@ def q_dedup_clusters_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quadratic term (measured e=2.0) — kept for parity/verification,
     not the scale path."""
     emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    pairs = threshold_similarity_join(emb, None, tau=0.35).select("a_id", "b_id")
+    pairs = threshold_similarity_join(emb, tau=0.35).select("a_id", "b_id")
     return _cluster_query(spark, pairs, emb)
 
 
@@ -750,7 +750,7 @@ def q_triangle_count_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawling_vectordb_llm_spark.operators.components import triangle_counts
 
     emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    pairs = threshold_similarity_join(emb, None, tau=0.35).select("a_id", "b_id")
+    pairs = threshold_similarity_join(emb, tau=0.35).select("a_id", "b_id")
     return triangle_counts(pairs).select(
         F.col("node").alias("vec_id"), "n_triangles"
     )

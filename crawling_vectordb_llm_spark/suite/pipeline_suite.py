@@ -323,7 +323,7 @@ def q_recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
-    pairs = threshold_similarity_join(emb, None, tau=0.35).select("a_id", "b_id")
+    pairs = threshold_similarity_join(emb, tau=0.35).select("a_id", "b_id")
     sym = pairs.unionAll(
         pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     )

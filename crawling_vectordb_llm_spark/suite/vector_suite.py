@@ -88,7 +88,7 @@ WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
 )
 def q_similarity_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-join flavor of J1 (SURVEY §2.5): all pairs cosine >= tau."""
-    return threshold_similarity_join(_emb(spark, sf_dir), None, tau=0.4)
+    return threshold_similarity_join(_emb(spark, sf_dir), tau=0.4)
 
 
 @query(
@@ -872,7 +872,7 @@ def q_similarity_pagerank_allpairs(spark: SparkSession, sf_dir: str) -> DataFram
     the broadcast rank table plus one aggregation shuffle on the
     destination id."""
     emb = _emb(spark, sf_dir)
-    pairs = threshold_similarity_join(emb, None, tau=0.35).select("a_id", "b_id")
+    pairs = threshold_similarity_join(emb, tau=0.35).select("a_id", "b_id")
     return _pagerank_query(emb, pairs)
 
 

@@ -335,7 +335,7 @@ def test_ivf_pruned_threshold_join_exact_equality(spark):
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     exact = {
         (r["a_id"], r["b_id"], r["score"])
-        for r in threshold_similarity_join(emb, None, tau=0.35).collect()
+        for r in threshold_similarity_join(emb, tau=0.35).collect()
     }
     for kwargs in ({"n_cells": 8}, {"n_cells": 3, "max_cell_rows": 40}):
         got = [
@@ -373,7 +373,7 @@ def test_ivf_pruned_threshold_join_prunes_clustered_data(spark):
     pairs = {(r["a_id"], r["b_id"]) for r in got.collect()}
     exact = {
         (r["a_id"], r["b_id"])
-        for r in threshold_similarity_join(df, None, tau=0.9).collect()
+        for r in threshold_similarity_join(df, tau=0.9).collect()
     }
     assert pairs == exact
     # orthogonal anchors, tight clusters, tau=0.9 (theta ~ 0.45 rad):
@@ -519,7 +519,7 @@ def test_clustered_embeddings_generator_and_measured_admit_rate(spark):
     }
     exact = {
         (r["a_id"], r["b_id"], r["score"])
-        for r in threshold_similarity_join(emb, None, tau=0.7).collect()
+        for r in threshold_similarity_join(emb, tau=0.7).collect()
     }
     assert got == exact  # recall 1.0 held while pruning
     assert stats["n"] == 600 and stats["total_pairs"] == 600 * 599 // 2

@@ -69,7 +69,10 @@ def test_query_collect_guard_raises_over_cap(spark):
     cents = np.eye(3, dtype=np.float64)[:2]
     books = np.tile(np.eye(3, dtype=np.float64)[None, :2, :1], (3, 1, 1))
     codes = corpus.selectExpr("vec_id", "array(0, 0, 0) as codes")
-    with pytest.raises(ValueError, match="knn_join_numpy.*max_query_rows"):
+    with pytest.raises(
+        ValueError,
+        match="knn_join_numpy.*max_query_rows.*knn.threshold_similarity_join",
+    ):
         knn.knn_join_numpy(qs, corpus, k=2, corpus_id="vec_id", max_query_rows=5)
     with pytest.raises(ValueError, match="knn_quantized_rerank.*max_query_rows"):
         knn.knn_quantized_rerank(

@@ -203,8 +203,8 @@ def test_f32_prefilter_kernels_bit_identical():
         b_ids = ids_a if triangular else ids_b
         b_mat = base if triangular else mat_b
         ref = _chunked_tau_gemm(ids_a, base.copy(), b_ids, b_mat.copy(),
-                                tau, 128, triangular, True, prefilter=False)
+                                tau, 128, triangular, prefilter=False)
         fast = _chunked_tau_gemm(ids_a, base.copy(), b_ids, b_mat.copy(),
-                                 tau, 128, triangular, True, prefilter=True)
+                                 tau, 128, triangular, prefilter=True)
         for r, f in zip(ref, fast):
             assert np.array_equal(r, f)

@@ -72,7 +72,7 @@ def main(n: int = 40_000) -> None:
           f"assignment {t_assign:.2f}s\n")
 
     # --- threshold self-join: blocked exact vs IVF-pruned exact
-    blocked = lambda: threshold_similarity_join(emb, None, tau=tau).count()
+    blocked = lambda: threshold_similarity_join(emb, tau=tau).count()
     pruned = lambda: I.ivf_pruned_threshold_join(
         emb, tau=tau, n_cells=n_cells, centroids=centroids
     ).count()

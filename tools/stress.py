@@ -68,7 +68,7 @@ def main() -> None:
     # the measurement isolates the iterative CC kernel, not the O(n^2)
     # pair generation
     base_pairs = (
-        threshold_similarity_join(emb, None, tau=0.35)
+        threshold_similarity_join(emb, tau=0.35)
         .select("a_id", "b_id")
         .localCheckpoint()
     )
@@ -190,7 +190,7 @@ def tau_join_deep(copies: int = 10) -> None:
           f"shuffle rows=(P+1)*n={(P + 1) * n}, tasks={P * (P + 1) // 2}")
 
     t0 = time.time()
-    pairs = threshold_similarity_join(V, None, tau=0.35).select("a_id", "b_id")
+    pairs = threshold_similarity_join(V, tau=0.35).select("a_id", "b_id")
     pairs = pairs.localCheckpoint()
     n_pairs = pairs.count()
     t_join = time.time() - t0
