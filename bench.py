@@ -107,6 +107,10 @@ def run_query(fn, spark, sf_dir: str) -> float:
     n = df.count()
     took = time.time() - t0
     assert n >= 0
+    # every rep starts from an empty cache: a warm rep must not read what
+    # the previous rep of the same query persisted
+    spark.catalog.clearCache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     return took
 
 
@@ -130,7 +134,6 @@ def main() -> None:
         # run_query builds a fresh DataFrame, so prior runs' checkpointed
         # RDDs are pure block-manager ballast that turns into GC stalls
         # ~40 queries in (measured: a 1.4s query reading 5.9s mid-bench)
-        spark.catalog.clearCache()
         gc.collect()  # drop py-side refs so ContextCleaner can unpersist
         spark.sparkContext._jvm.System.gc()
 

@@ -16,8 +16,19 @@ Search:
   2. per query keep n_probe nearest cells
   3. exact-score only vectors in probed cells (knn numpy path), top-k.
 
-Recall is testable against exact kNN (tests/test_ivf.py); n_probe =
+Recall is testable against exact kNN
+(tests/test_extended_ops.py::test_ivf_recall_vs_exact); n_probe =
 n_centroids degrades to exact search.
+
+Exact pruned self-joins (ivf_pruned_threshold_join, ivf_pruned_topk_join):
+the same cells prune cell PAIRS that provably hold no pair >= tau
+(angular triangle inequality) and a chunked GEMM verifies the rest.  The
+filter only pays when it skips enough work, so with n_cells=None the
+join prices two exact grids with one model, candidate_pairs +
+REPL_PAIR_COST · replicated_rows, and runs the cheaper: the fine cell
+grid, or the triangular block grid every exact self-join in knn already
+runs (n(n−1)/2 pairs, P copies per row).  Both are exact, so the rows do
+not depend on the choice.
 """
 
 from __future__ import annotations
@@ -41,7 +52,7 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
 
 
-# --- geometry-adaptive cell planning for the exact pruned self-joins ---
+# --- geometry-adaptive cell sizing for the exact pruned self-joins ---
 #
 # CLUSTERED_SF9_r11.json showed the triangle-inequality prune runs the
 # bounded join at marginal exponent ~1 when cell COUNT tracks the corpus
@@ -67,9 +78,9 @@ ADAPTIVE_CELL_FLOOR = 16
 # assignment costs n·(√k + k/√k)·d instead of n·k·d.  k <= FLAT_CELL_CAP
 # keeps the r8-r12 flat driver-side fit bit-for-bit, so every existing
 # fixture/artifact geometry is unchanged.  The remaining cap-8192 bounds
-# the driver-side O(k²) admission matrix / planner (537 MB bools + a few
-# k² passes per ladder rung) — past ~2.6M rows per fit, per-cell size
-# grows again (the documented trade, now 4× later than r12).
+# the driver-side O(k²) admission matrix (537 MB of bools and a few k²
+# passes) — past ~2.6M rows per fit, per-cell size grows again (the
+# documented trade, now 4× later than r12).
 ADAPTIVE_CELL_CAP = 8_192
 FLAT_CELL_CAP = 2_048
 # coarse parents probed per row in the hierarchical two-step assignment
@@ -78,7 +89,7 @@ FLAT_CELL_CAP = 2_048
 # GEMM term, still ~10× under flat argmax at the cap
 HIER_ASSIGN_PROBES = 8
 
-# Cost-model constant for the grid planner: one replicated row costs
+# Cost-model constant for the grid choice: one replicated row costs
 # about as much as this many admitted candidate pairs.  Measured at the
 # r11 third scale point (EXP_SF9_DIAG_r11.json, sf9 side): replication/
 # prep 6.2 s for 3.06M shuffled rows (2.0e-6 s/row) vs GEMM 93.3 s for
@@ -120,206 +131,31 @@ def adaptive_cell_count(n: int) -> int:
     )
 
 
-# Parallelism floor for the grid planner: a grouping whose admitted
-# block-pair TASK count falls below this leaves executor slots idle no
-# matter how little it shuffles or scores (the degenerate case is the
-# admit-pattern grouping collapsing a structure-free corpus into ONE
-# giant self-block task).  The cand term — the parallelizable GEMM work
-# — is scaled by max(1, floor/tasks): an honest makespan proxy, since
-# wall ≈ flops / min(tasks, slots).
-PLAN_MIN_TASKS = 32
-
-
-def _grid_cost(
-    counts: np.ndarray,
-    admit: np.ndarray,
-    group: np.ndarray,
-    n_groups: int,
-    max_cell_rows: int,
-    min_tasks: int = PLAN_MIN_TASKS,
+def _grid_costs(
+    counts: np.ndarray, admit: np.ndarray, n_blocks: int, max_cell_rows: int
 ) -> tuple[float, float, float]:
-    """Exact (candidate_pairs, replicated_rows, model_cost) of running the
-    pruned join on a COARSENING of the fine cell grid: fine cell i is
-    merged into super-block group[i], a super-pair is admitted iff ANY
-    member fine-cell pair is admissible (so no triangle-bound information
-    is lost — merged blocks only ever ADD provably-safe coverage), and
-    oversized super-blocks hash-split per max_cell_rows exactly as the
-    executor will.  All driver-side numpy over the k×k admission matrix;
-    candidate_pairs is exact because sub-splitting partitions each block
-    (Σ over sub-pairs of a cell pair = n_i·n_j; diagonal = n_i(n_i−1)/2).
-    model_cost additionally scales the cand term by the parallelism
-    deficit max(1, min_tasks/tasks) — see PLAN_MIN_TASKS (r13)."""
-    P = n_groups
-    S = _group_or(admit, group, P)  # super-pair admission (OR over members)
-    M = np.bincount(group, weights=counts, minlength=P)  # rows per super-block
-    return _grid_cost_ms(M, S, max_cell_rows, min_tasks)
-
-
-def _grid_cost_ms(
-    M: np.ndarray,
-    S: np.ndarray,
-    max_cell_rows: int,
-    min_tasks: int = PLAN_MIN_TASKS,
-) -> tuple[float, float, float]:
-    """_grid_cost core on a PRE-AGGREGATED (rows-per-block M, super-pair
-    admission S) — the halving-chain planner (r13, XL_PHASE_r13) builds
-    each rung's (M, S) from the previous rung in O(P_prev²) instead of
-    re-aggregating the kf² fine matrix per rung, so it calls this
-    directly.  S is mutated (diagonal forced True — always admissible)."""
-    P = len(M)
-    np.fill_diagonal(S, True)  # a block with itself is always admissible
-    s_off = S & ~np.eye(P, dtype=bool)
-    cand = 0.5 * float(M @ (s_off @ M)) + float((M * (M - 1) / 2).sum())
-    nsub = np.maximum(1, np.ceil(M / max_cell_rows))
-    repl = float(M @ (s_off @ nsub)) + float((M * nsub).sum())
-    # admitted task count (with skew sub-splits): cross pairs spawn
-    # nsub_i·nsub_j tasks, the diagonal nsub_i(nsub_i+1)/2
-    occupied = M > 0
-    tasks = 0.5 * float(nsub[occupied] @ (s_off[np.ix_(occupied, occupied)] @ nsub[occupied])) + float(
-        (nsub[occupied] * (nsub[occupied] + 1) / 2).sum()
+    """(fine candidate_pairs, cells_cost, blocks_cost): the two exact
+    grids priced by one model, candidate_pairs + REPL_PAIR_COST ·
+    replicated_rows.  The fine cell grid has counts[i] rows in cell i and
+    the symmetric cell-pair admission `admit` (a cell with itself is
+    always admitted); cells larger than max_cell_rows hash-split into
+    sub-blocks exactly as the executor will, and candidate_pairs is
+    exact because sub-splitting partitions each cell (Σ over sub-pairs
+    of a cell pair = n_i·n_j; diagonal = n_i(n_i−1)/2).  The triangular
+    block grid on n_blocks = P blocks scores all n(n−1)/2 pairs and
+    ships P copies of every row."""
+    off = admit & ~np.eye(len(counts), dtype=bool)
+    cand = 0.5 * float(counts @ (off @ counts)) + float(
+        (counts * (counts - 1) / 2).sum()
     )
-    deficit = max(1.0, min_tasks / max(tasks, 1.0))
-    return cand, repl, cand * deficit + REPL_PAIR_COST * repl
-
-
-def _admit_pattern_groups(admit: np.ndarray, P: int, seed: int) -> np.ndarray:
-    """STRUCTURE-AWARE grouping for the coarsening ladder (VERDICT r12
-    #4): cluster the fine cells by their ADMISSION-PATTERN rows — cells
-    that admit (nearly) the same set of cells merge, so OR-admission
-    over a merged group adds (nearly) nothing to the candidate volume
-    while its replication contribution collapses.  On a mixed-geometry
-    corpus this is exactly the grouping modulo assignment can't express:
-    the diffuse cells (identical all-admitting rows) fold into one
-    block, the clustered cells (near-identity rows, mutually dissimilar)
-    stay separate.  Spherical k-means over the L2-normalized admit rows,
-    k-means++ seeded, deterministic for a fixed seed; the planner
-    evaluates the result with the same honest _grid_cost as every other
-    candidate, so a grouping that doesn't pay simply isn't picked."""
-    x = admit.astype(np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
-    rng = np.random.default_rng([seed, P])
-    cents = _kmeanspp_init(x, min(P, len(x)), rng)
-    for _ in range(4):
-        assign = np.argmax(x @ cents.T, axis=1)
-        new = cents.copy()
-        for j in np.unique(assign):
-            c = x[assign == j].mean(axis=0)
-            new[j] = c / max(float(np.linalg.norm(c)), 1e-30)
-        if np.allclose(new, cents, atol=1e-9):
-            break
-        cents = new
-    return np.argmax(x @ cents.T, axis=1)
-
-
-def _plan_cell_grid(
-    counts: np.ndarray,
-    admit: np.ndarray,
-    max_cell_rows: int,
-    p_floor: int,
-    seed: int = 42,
-    parent: "np.ndarray | None" = None,
-) -> tuple[np.ndarray, int, dict]:
-    """Choose the grid granularity for the pruned join by MEASURED cost,
-    not by fiat: evaluate the fine grid, an adjacent-pair halving chain
-    of coarsenings (each rung's (M, S) derived from the previous rung —
-    geometric total cost, see the chain comment below), a modulo
-    coarse anchor at exactly p_floor (the plain blocked grid), and — in
-    the flat regime — a structure-aware admit-pattern grouping per rung
-    (_admit_pattern_groups, r13); score each with the calibrated
-    cand + 350·repl model (REPL_PAIR_COST) plus the parallelism-deficit
-    term (_grid_cost), and keep the argmin.  On clustered geometry the
-    fine grid wins (admitted pairs collapse to ~diagonal blocks, worth
-    far more than its extra replication); on structure-free geometry
-    every granularity admits ~everything, so the model picks the
-    coarsest grid — replication (P_floor+1)·n, the same shape as the
-    unpruned blocked join — instead of the fine grid's k·n shuffle
-    blow-up; on MIXED geometry the admit-pattern rungs merge the
-    mutually-admitting (diffuse) cells while keeping the clustered ones
-    fine, a genuinely-selectable middle the modulo ladder never had
-    (VERDICT r12: modulo merges unrelated cells, so every mid rung was
-    nearly as permissive as the coarse end).  Every coarsening is
-    evaluated HONESTLY: super-pair admission is the OR over member
-    pairs, exactly what the built plan will execute, so a grouping that
-    loses pruning shows its real candidate volume here and simply
-    doesn't get picked — and the OUTPUT is identical under any grouping
-    (merged blocks only ever add provably-safe coverage)."""
-    kf = len(counts)
-    coarse_p = max(1, min(p_floor, kf))
-    ladder = [kf]
-    best = None
-
-    def _consider(how, group, P, cms):
-        nonlocal best
-        cand, repl, cost = cms
-        if best is None or cost < best[3]:
-            best = (group, P, cand, cost, repl, how)
-
-    def _ms(group, P):
-        S = _group_or(admit, group, P)
-        M = np.bincount(group, weights=counts, minlength=P)
-        return _grid_cost_ms(M, S, max_cell_rows)
-
-    # fine rung: identity grouping — evaluated directly, no aggregation
-    _consider(
-        "fine", np.arange(kf), kf,
-        _grid_cost_ms(counts.astype(np.float64), admit.copy(), max_cell_rows),
+    nsub = np.maximum(1, np.ceil(counts / max_cell_rows))
+    repl = float(counts @ (off @ nsub)) + float((counts * nsub).sum())
+    n = float(counts.sum())
+    return (
+        cand,
+        cand + REPL_PAIR_COST * repl,
+        n * (n - 1) / 2 + REPL_PAIR_COST * n_blocks * n,
     )
-    # halving chain (r13, XL_PHASE_r13): pair ADJACENT blocks at each
-    # rung — (M, S) for rung r come from rung r−1 by slice-OR in
-    # O(P_{r−1}²), so the whole chain costs a geometric ~1.3·kf² bool
-    # ops instead of the old from-scratch modulo ladder's rungs·kf²
-    # f32 segment-sum passes (22.6 s of per-join driver stall at
-    # kf=6.5k).  Adjacency is structure-AWARE in the hierarchical
-    # regime — fine centroids are sorted by coarse parent, so paired
-    # cells are siblings — and no blinder than modulo in the flat
-    # regime, where the admit-pattern rungs carry the structure duty.
-    S_c, M_c, shift = admit.copy(), counts.astype(np.float64), 0
-    while (len(M_c) + 1) // 2 > coarse_p:
-        if len(M_c) % 2:  # pad to even: one empty (0-row) phantom block
-            S_c = np.pad(S_c, ((0, 1), (0, 1)))
-            M_c = np.append(M_c, 0.0)
-        S_c = S_c[0::2] | S_c[1::2]
-        S_c = S_c[:, 0::2] | S_c[:, 1::2]
-        M_c = M_c[0::2] + M_c[1::2]
-        shift += 1
-        P = len(M_c)
-        ladder.append(P)
-        _consider("pair", np.arange(kf) >> shift, P,
-                  _grid_cost_ms(M_c, S_c, max_cell_rows))
-        if kf <= FLAT_CELL_CAP:
-            # admit-pattern k-means is O(kf²·P) per rung — cheap below
-            # the flat cap, a multi-minute driver stall above it (the
-            # hierarchical regime gets its structure rung from the
-            # parent grouping below instead)
-            g = _admit_pattern_groups(admit, P, seed)
-            _consider("admit_pattern", g, P, _ms(g, P))
-    if coarse_p < kf:
-        # coarse anchor: the plain blocked grid at exactly p_floor
-        g = np.arange(kf) % coarse_p
-        ladder.append(coarse_p)
-        _consider("modulo", g, coarse_p, _ms(g, coarse_p))
-        if kf <= FLAT_CELL_CAP:
-            g = _admit_pattern_groups(admit, coarse_p, seed)
-            _consider("admit_pattern", g, coarse_p, _ms(g, coarse_p))
-    if parent is not None:
-        # hierarchical fit (r13): merging fine cells back into their
-        # coarse PARENTS is the natural structure-aware rung — siblings
-        # are geometric neighbors by construction, so the merge only
-        # fuses mutually-close (usually mutually-admitting) cells
-        pg = np.unique(parent, return_inverse=True)[1]
-        _consider("parent", pg, int(pg.max()) + 1, _ms(pg, int(pg.max()) + 1))
-    group, P, cand, cost, repl, how = best
-    # compact labels: k-means groupings can leave empty groups, which
-    # would otherwise spawn empty (zero-row) block tasks downstream
-    uniq, group = np.unique(group, return_inverse=True)
-    P = len(uniq)
-    return group, P, {
-        "plan_candidate_pairs": int(cand),
-        "plan_replicated_rows": int(repl),
-        "plan_cost": float(cost),
-        "plan_ladder": [int(x) for x in ladder],
-        "plan_grouping": how,
-    }
 
 
 def bounded_random_sample(
@@ -402,28 +238,6 @@ def _segment_sums(x_sorted: np.ndarray, starts: np.ndarray, counts: np.ndarray) 
          np.cumsum(x_sorted, axis=0, dtype=dt)]
     )
     return csum[starts + counts] - csum[starts]
-
-
-def _group_or(admit: np.ndarray, group: np.ndarray, P: int) -> np.ndarray:
-    """OR-aggregate a kf×kf boolean matrix over a row/col grouping into
-    the P×P super-pair admission matrix, in O(kf²) — the dense kf×P
-    indicator matmul this replaces (r13) was O(kf²·P), which at the
-    raised cell cap (kf up to 8192) made every planner rung a multi-
-    second driver GEMM.  Sums are exact in f32 (each ≤ kf < 2²⁴).
-    Identity groupings short-circuit to a copy (the guardrail's
-    fine-grid evaluation would otherwise pay two full f32 passes over
-    the kf² matrix for a no-op, ~1 s at kf=6.5k — XL_PHASE_r13)."""
-    if P == len(group) and group[0] == 0 and group[-1] == P - 1:
-        ident = np.arange(P)
-        if np.array_equal(group, ident):
-            return admit.copy()
-    order = np.argsort(group, kind="stable")
-    counts = np.bincount(group, minlength=P)
-    starts = np.zeros(P, dtype=np.int64)
-    starts[1:] = np.cumsum(counts)[:-1]
-    rows = _segment_sums(admit[order].astype(np.float32), starts, counts) > 0.5
-    s_t = _segment_sums(rows.T[order].astype(np.float32), starts, counts) > 0.5
-    return s_t.T
 
 
 def _kmeanspp_init(x: np.ndarray, k: int, rng) -> np.ndarray:
@@ -576,12 +390,11 @@ def kmeans_centroids_hier(
 
     Returns (fine_centroids sorted by parent, parent_of_fine, coarse):
     fine is the L2-normalized (≤k)×d matrix, parent_of_fine[i] the
-    coarse parent that trained fine cell i (the planner's natural
-    merge-to-parents rung), coarse the level-1 matrix — together they
-    let assignment run TWO-STEP (argmax over √k parents, then argmax
-    over that parent's fine cells: n·(√k + k/√k)·d instead of n·k·d,
-    which at k ∝ n is the difference between O(n^1.5) and O(n²)
-    assignment flops).  A two-step assignment need not be the global
+    coarse parent that trained fine cell i, coarse the level-1 matrix —
+    together they let assignment run TWO-STEP (argmax over √k parents,
+    then argmax over that parent's fine cells: n·(√k + k/√k)·d instead
+    of n·k·d, which at k ∝ n is the difference between O(n^1.5) and
+    O(n²) assignment flops).  A two-step assignment need not be the global
     argmax near parent boundaries; exactness NEVER depends on that
     (radii are computed from the actual assignment), only prune
     tightness does, and only marginally.  Deterministic for a fixed
@@ -901,24 +714,30 @@ def ivf_pruned_threshold_join(
     how lopsided the clustering is — the semdedup.py max_cluster idea.
 
     Scale shape: prune efficiency is data-dependent — clustered corpora
-    (the 100 TB dedup regime) skip most of the grid; an adversarially
-    uniform corpus degrades to the full exact grid, which is the blocked
-    join's already-bounded cost.  Replication per row = number of
-    admissible pairs its cell participates in (<= K+1), versus the
-    unconditional P of the unpruned grid.
+    (the 100 TB dedup regime) skip most of the grid.  Replication per row
+    = number of admissible pairs its cell participates in (<= K+1),
+    versus the unconditional P of the unpruned grid.  With n_cells=None,
+    when the cells would cost more than the unpruned grid (little
+    structure to prune), the join runs `knn.threshold_similarity_join`
+    on that grid instead — see _ivf_pruned_replicated.
 
     `stats_out`: pass a dict to receive the measured prune plan —
-    {n, n_cells, admissible_blocks, total_blocks, candidate_pairs,
+    {n, n_cells, fine_*, grid, cells_cost, blocks_cost,
+    executed_blocks, admissible_blocks, total_blocks, candidate_pairs,
     total_pairs, admit_rate} — the instrumentation behind the SCALE.md
-    clustered-geometry measurements (VERDICT r3 #2).  Costs one extra
-    small aggregate over the (cell, sub) histogram; skipped when None.
+    clustered-geometry measurements (VERDICT r3 #2).  The executed_*,
+    admissible/total block and candidate/admit keys describe the grid
+    that ran; skipped when None.
 
     `centroids`: pass a persisted centroid matrix (plans/index_build.py)
     to skip the in-call k-means fit — the production regime, where the
     IVF index is built once per ingest and probed by every downstream
     join; the fit's driver-side Lloyd cost would otherwise be charged to
     every query at fixture scale."""
-    from crawling_vectordb_llm_spark.operators.knn import _chunked_tau_gemm
+    from crawling_vectordb_llm_spark.operators.knn import (
+        _chunked_tau_gemm,
+        threshold_similarity_join,
+    )
 
     spark = corpus.sparkSession
     prep = _ivf_pruned_replicated(
@@ -928,6 +747,11 @@ def ivf_pruned_threshold_join(
     if prep is None:
         return spark.createDataFrame(
             [], f"a_id long, b_id long, {score_col} double"
+        )
+    if isinstance(prep, int):
+        return threshold_similarity_join(
+            corpus, tau, id_col, vec_col, score_col, n_blocks=prep,
+            gemm_chunk_rows=gemm_chunk_rows,
         )
     replicated, diag_pks, id_t = prep
     bc_diag = spark.sparkContext.broadcast(diag_pks)
@@ -962,32 +786,40 @@ def _ivf_pruned_replicated(
     max_cell_rows: int,
     centroids: "np.ndarray | None",
     stats_out: dict | None = None,
-) -> "tuple[DataFrame, set, str] | None":
+) -> "tuple[DataFrame, set, str] | int | None":
     """Shared stage-1 machinery for the IVF-pruned self-joins: k-means
     cells, per-vector angle to centroid, triangle-inequality cell-pair
     admission, skew sub-splitting, and replication of every row to its
     admitted block-pair tasks.  Returns (replicated rows with
-    __id/__v/__pk/__role, diagonal pk set, id type) — None for an empty
-    corpus.  The caller supplies the per-block-pair kernel (threshold
-    emission or bounded top-k emission).
+    __id/__v/__pk/__role, diagonal pk set, id type) when the cell grid
+    runs — the caller supplies the per-block-pair kernel (threshold
+    emission or bounded top-k emission); an int P when the triangular
+    block grid runs instead — the caller hands off to the knn join on
+    P blocks; None for an empty corpus.
 
     n_cells=None (the default since r12) sizes the fine grid with
-    `adaptive_cell_count(n)` and then lets `_plan_cell_grid` pick the
-    executed granularity by measured cost — fine cells when the prune
-    converts cluster structure into skipped blocks, the coarse blocked
-    grid when it can't (VERDICT r11 #1a).  An explicit integer keeps the fixed
-    grid (planner disabled); OUTPUT is identical by exactness, but the
-    in-call centroid fit changed in r12 (k-means++ init, max_iter=8,
-    sample 64·k, new fp summation order), so prior rounds' admit/block
-    stats and timings are not reproducible — only the grid shape and
-    the exact output rows are (ADVICE r12).  Either way, when the
-    fine-granularity prune
-    admits most of the grid on a large corpus, an admit-rate guardrail
-    warns and names the recall-gated approximate ladder (VERDICT r11
-    #1b) — the difference between a warning and a silently-quadratic
-    job at 100 TB."""
+    `adaptive_cell_count(n)`, computes its admission, then makes ONE
+    comparison with the cost model candidate_pairs + REPL_PAIR_COST ·
+    replicated_rows: the fine cell grid (its admitted pairs and
+    replication) against the triangular block grid at
+    P = knn._pick_blocks(n, max_cell_rows, defaultParallelism) —
+    n(n−1)/2 pairs and P·n replicated rows.  Cells win when the prune
+    converts cluster structure into skipped pairs; the block grid wins
+    when most pairs are admitted anyway and the cells would only add
+    replication.  An explicit integer pins the cell grid.  OUTPUT is
+    identical either way by exactness, but the in-call centroid fit
+    changed in r12 (k-means++ init, max_iter=8, sample 64·k, new fp
+    summation order), so prior rounds' admit/block stats and timings are
+    not reproducible — only the grid shape and the exact output rows are
+    (ADVICE r12).  Either way, when the fine-granularity prune admits
+    most of the grid on a large corpus, an admit-rate guardrail warns
+    and names the recall-gated approximate ladder (VERDICT r11 #1b) —
+    the difference between a warning and a silently-quadratic job at
+    100 TB."""
     import logging
     import warnings
+
+    from crawling_vectordb_llm_spark.operators.knn import _pick_blocks
 
     spark = corpus.sparkSession
     n = corpus.count()
@@ -1174,10 +1006,14 @@ def _ivf_pruned_replicated(
     admit |= radii[:, None] + radii[None, :] >= np.pi - theta_tau
 
     # guardrail on the GEOMETRY (fine granularity), independent of the
-    # executed plan: admit_rate ~1 at scale means no exact method beats
+    # executed grid: admit_rate ~1 at scale means no exact method beats
     # ~n²/2 here — say so and point at the sub-quadratic ladder.
-    ident = np.arange(kf)
-    fine_cand, _, _ = _grid_cost(counts, admit, ident, kf, max_cell_rows)
+    n_blocks = _pick_blocks(
+        n, max_cell_rows, spark.sparkContext.defaultParallelism
+    )
+    fine_cand, cells_cost, blocks_cost = _grid_costs(
+        counts, admit, n_blocks, max_cell_rows
+    )
     total_pairs = n * (n - 1) // 2
     fine_admit_rate = fine_cand / max(total_pairs, 1)
     if n >= ADMIT_WARN_MIN_ROWS and fine_admit_rate >= ADMIT_WARN_RATE:
@@ -1207,33 +1043,45 @@ def _ivf_pruned_replicated(
         if stats_out is not None:
             stats_out["guardrail"] = msg
 
-    if adaptive and kf > ADAPTIVE_CELL_FLOOR:
-        group, n_groups, plan_stats = _plan_cell_grid(
-            counts, admit, max_cell_rows,
-            p_floor=_grid_p_floor(n, max_cell_rows, spark),
-            seed=seed,
-            parent=hier[1][cells] if hier is not None else None,
+    # the one grid choice (an explicit n_cells pins the cells)
+    use_blocks = adaptive and blocks_cost < cells_cost
+    if stats_out is not None:
+        stats_out.update(
+            n=n,
+            n_cells=k,
+            fine_cells=kf,
+            fine_candidate_pairs=int(fine_cand),
+            fine_admit_rate=fine_admit_rate,
+            grid="blocks" if use_blocks else "cells",
+            cells_cost=cells_cost,
+            blocks_cost=blocks_cost,
+            total_pairs=total_pairs,
         )
-    else:
-        group, n_groups, plan_stats = ident, kf, {}
+    if use_blocks:
+        if stats_out is not None:
+            tasks = n_blocks * (n_blocks + 1) // 2
+            stats_out.update(
+                executed_blocks=n_blocks,
+                admissible_blocks=tasks,
+                total_blocks=tasks,
+                candidate_pairs=total_pairs,
+                admit_rate=1.0,
+            )
+        return n_blocks
 
-    # executed grid: super-block pair admission is the OR over member
-    # fine-cell pairs (identity grouping = the fine grid itself)
-    S = _group_or(admit, group, n_groups)
-    np.fill_diagonal(S, True)
-    M = np.bincount(group, weights=counts, minlength=n_groups)
-    # oversized blocks hash-split into sub-blocks (skew guard)
-    n_subs = np.maximum(1, -(-M.astype(np.int64) // max_cell_rows))
+    np.fill_diagonal(admit, True)
+    # oversized cells hash-split into sub-blocks (skew guard)
+    n_subs = np.maximum(1, -(-counts.astype(np.int64) // max_cell_rows))
 
-    # admissible (node_a, node_b) pairs: (group, sub, pk, role) rows —
-    # iterate only the ADMITTED upper-triangle pairs (r13: the full
-    # n_groups² Python loop was a 43M-iteration driver stall at the
-    # raised cell cap; whenever n_groups is large the admission is
-    # sparse — that's why the planner kept it large)
-    adm_pairs = np.argwhere(np.triu(S))
+    # admissible (cell_a, cell_b) pairs: (cell, sub, pk, role) rows —
+    # iterate only the ADMITTED upper-triangle pairs (r13: the full kf²
+    # Python loop was a 43M-iteration driver stall at the raised cell
+    # cap; the cell grid runs only when its admission is sparse enough
+    # to beat the block grid)
+    adm_pairs = np.argwhere(np.triu(admit))
     gi_a, gj_a = adm_pairs[:, 0], adm_pairs[:, 1]
     d_mask = gi_a == gj_a
-    Mi, Mj = M[gi_a].astype(np.int64), M[gj_a].astype(np.int64)
+    Mi, Mj = counts[gi_a].astype(np.int64), counts[gj_a].astype(np.int64)
     cand = int((Mi[d_mask] * (Mi[d_mask] - 1) // 2).sum()) + int(
         (Mi[~d_mask] * Mj[~d_mask]).sum()
     )
@@ -1256,12 +1104,9 @@ def _ivf_pruned_replicated(
         pair_rows, "__grp int, __sub int, __pk int, __role string"
     )
 
-    # fine cell -> (executed block, its sub count): one tiny broadcast map
+    # cell id -> (cell index, its sub count): one tiny broadcast map
     cell_map = spark.createDataFrame(
-        [
-            (int(c), int(group[i]), int(n_subs[group[i]]))
-            for i, c in enumerate(cells)
-        ],
+        [(int(c), i, int(n_subs[i])) for i, c in enumerate(cells)],
         "__cell int, __grp int, __nsub int",
     )
     with_sub = (
@@ -1278,39 +1123,21 @@ def _ivf_pruned_replicated(
 
     if stats_out is not None:
         # all upper-triangle block counts, closed form (r13: the old
-        # O(n_groups²) generator was a driver stall at the raised cap)
+        # O(kf²) generator was a driver stall at the raised cap)
         ns_tot = int(n_subs.sum())
-        ns_sq = int((n_subs.astype(np.int64) ** 2).sum())
+        ns_sq = int((n_subs ** 2).sum())
         total_blocks = (ns_tot * ns_tot - ns_sq) // 2 + int(
-            (n_subs.astype(np.int64) * (n_subs.astype(np.int64) + 1) // 2).sum()
+            (n_subs * (n_subs + 1) // 2).sum()
         )
         stats_out.update(
-            n=n,
-            n_cells=k,
-            fine_cells=kf,
-            fine_candidate_pairs=int(fine_cand),
-            fine_admit_rate=fine_admit_rate,
-            executed_blocks=n_groups,
+            executed_blocks=kf,
             admissible_blocks=pk,
             total_blocks=total_blocks,
             candidate_pairs=cand,
-            total_pairs=total_pairs,
             admit_rate=cand / max(total_pairs, 1),
-            **plan_stats,
         )
 
     return replicated, diag_pks, id_t
-
-
-def _grid_p_floor(n: int, max_cell_rows: int, spark) -> int:
-    """Coarsest grid the planner may fall back to: the same block count
-    the unpruned blocked join would pick (memory bound + enough
-    triangular block-pairs to occupy the cluster)."""
-    from crawling_vectordb_llm_spark.operators.knn import _pick_blocks
-
-    return _pick_blocks(
-        n, max_cell_rows, spark.sparkContext.defaultParallelism
-    )
 
 
 def ivf_pruned_topk_join(
@@ -1343,21 +1170,29 @@ def ivf_pruned_topk_join(
     global grouped_topk merges, the same superset argument as
     knn.topk_similarity_self_join.
 
+    With n_cells=None the join makes the same one grid choice as
+    ivf_pruned_threshold_join: when the triangular block grid is cheaper
+    it runs the block-grid arm of knn.topk_similarity_self_join on the
+    P blocks the choice priced, with the n already counted.
+
     `stats_out`: same contract as ivf_pruned_threshold_join — pass a
     dict to receive the measured prune plan (n, fine_cells,
-    fine_admit_rate, executed_blocks, candidate_pairs, admit_rate,
-    plan_*, and `guardrail` when the admit-rate warning fires).  Added
-    r13 (VERDICT r12 #3): the near-dup pipelines all reach the prune
-    through THIS form, so the machine-readable telemetry a 100 TB
-    orchestrator branches on must be reachable here, not only from the
-    threshold form.
+    fine_admit_rate, grid, cells_cost, blocks_cost, executed_blocks,
+    candidate_pairs, admit_rate, and `guardrail` when the admit-rate
+    warning fires).  Added r13 (VERDICT r12 #3): the near-dup pipelines
+    all reach the prune through THIS form, so the machine-readable
+    telemetry a 100 TB orchestrator branches on must be reachable here,
+    not only from the threshold form.
 
     Scale: candidate GENERATION is cell-pruned (clustered corpora skip
     most of the grid), and EMISSION is capped at n·k — the full
     candidates → verify → bounded-output pipeline that survives 100 TB
     where a loose-tau all-pairs join cannot (measured pair-volume
     exponent 2.0, BENCH_SF1_r06 slope fits)."""
-    from crawling_vectordb_llm_spark.operators.knn import _topk_tau_gemm
+    from crawling_vectordb_llm_spark.operators.knn import (
+        _block_grid_topk,
+        _topk_tau_gemm,
+    )
 
     spark = corpus.sparkSession
     prep = _ivf_pruned_replicated(
@@ -1368,6 +1203,11 @@ def ivf_pruned_topk_join(
         return spark.createDataFrame(
             [],
             f"{item_col} long, {neighbor_col} long, rank int, {score_col} double",
+        )
+    if isinstance(prep, int):
+        return _block_grid_topk(
+            corpus, k, tau, id_col, vec_col, prep, gemm_chunk_rows,
+            score_col, item_col, neighbor_col,
         )
     replicated, diag_pks, id_t = prep
     bc_diag = spark.sparkContext.broadcast(diag_pks)

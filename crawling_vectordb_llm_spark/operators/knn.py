@@ -276,10 +276,11 @@ def _triangular_block_grid(
 
 
 # Corpus-size threshold for the hybrid bounded-join dispatch: at or below
-# this many vectors the exact triangular-grid GEMM is cheaper than paying
-# IVF's k-means + cell-replication overhead; above it the Θ(n²·d) GEMM
-# flops take over (brute marginal exponent 1.75, AB_EXPONENT_POST_r08 —
-# vs ~1.0 IVF-composed).  Measured bracket at d=64 (AB_HYBRID_r10.json,
+# this many vectors the exact triangular-grid GEMM runs without even
+# paying IVF's k-means fit; above it the pruned join fits cells and keeps
+# them when they skip enough of the Θ(n²·d) GEMM flops (brute marginal
+# exponent 1.75, AB_EXPONENT_POST_r08 — vs ~1.0 IVF-composed), else it
+# runs this same block grid.  Measured bracket at d=64 (AB_HYBRID_r10.json,
 # interleaved 7-rep medians of per-rep ratios, fixed-size slices labeled
 # by measured count — supersedes AB_HYBRID_r09.json, whose mid point a
 # slice bug displaced to 16,362 rows and whose 5-rep 60k walls spanned
@@ -345,8 +346,6 @@ def topk_similarity_self_join(
     score_col: str = "score",
     item_col: str = "item_id",
     neighbor_col: str = "neighbor_id",
-    strategy: str = "auto",
-    brute_max_rows: int = BRUTE_TOPK_MAX_ROWS,
     n_cells: "int | None" = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
@@ -387,47 +386,20 @@ def topk_similarity_self_join(
     consumers symmetrize with `topk_edges` (union of directions, each
     unordered pair once).
 
-    HYBRID DISPATCH (VERDICT r8 #3): `strategy="auto"` (the default, and
-    what the `similarity_topk_join` registry entry and every graph/dedup
-    consumer use) counts the corpus once and routes
-
-      n <= brute_max_rows  ->  the exact triangular block-GEMM below
-      n  > brute_max_rows  ->  `ivf_pruned_topk_join` (angular
-                               triangle-inequality cell prune, recall
-                               1.0 — outputs verified bit-identical,
-                               tests/test_topk_join.py)
-
-    so a 100 TB caller reaching for the primitive BY NAME gets the
-    linear-exponent form automatically (the brute form's quadratic GEMM
-    flops measured e≈1.75, AB_EXPONENT_POST_r08), while small corpora —
-    including every per-cell subproblem the IVF form itself creates —
-    keep the cheaper exact kernel.  `strategy="brute"`/`"ivf"` force a
-    side (the A/B harness and the bit-identity tests use this).
-
-    `n_cells=None` (the r12 default) makes the IVF arm's prune
-    granularity GEOMETRY-ADAPTIVE: the fine grid is sized by
-    `ivf.adaptive_cell_count(n)` (cells ∝ n, the sizing the clustered
-    e=1.056 scale point needed hand-set in r11 — CLUSTERED_SF9_r11) and
-    `ivf._plan_cell_grid` falls back to the coarse blocked grid by a
-    measured cost model when the corpus has no structure to prune, with
-    an admit-rate guardrail naming the recall-gated approximate ladder
-    (VERDICT r11 #1).  An explicit integer pins the historical fixed
-    grid.
+    Dispatch: the corpus is counted once.  At most BRUTE_TOPK_MAX_ROWS
+    rows (read at call time) run the block grid directly — no k-means
+    fit — and `stats_out` receives {n, grid: "blocks"}.  Larger corpora
+    go to `ivf.ivf_pruned_topk_join`, which fits the cells and prices
+    the fine cell grid against this same block grid with one cost model
+    (`n_cells=None`, cells sized by `ivf.adaptive_cell_count(n)`), runs
+    the cheaper one, and reports the choice in `stats_out["grid"]`; an
+    explicit `n_cells` pins the cell grid.  Both grids are exact
+    (recall 1.0 by the angular triangle inequality), so the rows never
+    depend on the route — tests/test_topk_join.py checks them
+    bit-identical.
     """
-    spark = df.sparkSession
-    if strategy not in ("auto", "brute", "ivf"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    # Count only when the dispatch or the brute block picker needs it —
-    # a forced strategy="ivf" call must not pay a full scan for a value
-    # the ivf branch never reads (ADVICE r9).
-    n = (
-        df.count()
-        if (strategy == "auto" or (strategy == "brute" and n_blocks is None))
-        else None
-    )
-    if strategy == "auto":
-        strategy = "brute" if n <= brute_max_rows else "ivf"
-    if strategy == "ivf":
+    n = df.count()
+    if n > BRUTE_TOPK_MAX_ROWS:
         from crawling_vectordb_llm_spark.operators.ivf import (
             ivf_pruned_topk_join,
         )
@@ -446,13 +418,33 @@ def topk_similarity_self_join(
             stats_out=stats_out,
         )
     if stats_out is not None:
-        # the brute arm has no prune plan to report, but a caller
-        # branching on the telemetry should still learn which arm ran
-        stats_out.update(n=n, strategy="brute")
+        stats_out.update(n=n, grid="blocks")
     if n_blocks is None:
-        n_blocks = _pick_blocks(
-            n, block_target_rows, spark.sparkContext.defaultParallelism
-        )
+        parallelism = df.sparkSession.sparkContext.defaultParallelism
+        n_blocks = _pick_blocks(n, block_target_rows, parallelism)
+    return _block_grid_topk(
+        df, k, tau, id_col, vec_col, n_blocks, gemm_chunk_rows,
+        score_col, item_col, neighbor_col,
+    )
+
+
+def _block_grid_topk(
+    df: DataFrame,
+    k: int,
+    tau: float,
+    id_col: str,
+    vec_col: str,
+    n_blocks: int,
+    gemm_chunk_rows: int,
+    score_col: str,
+    item_col: str,
+    neighbor_col: str,
+) -> DataFrame:
+    """The block-grid arm of topk_similarity_self_join: per-pair local
+    top-k on `_triangular_block_grid`, merged by one grouped_topk.  The
+    caller sizes n_blocks from the row count it already holds, so this
+    runs no count job of its own (ivf_pruned_topk_join hands off here
+    when the block grid wins its grid choice)."""
     id_t = df.schema[id_col].dataType.simpleString()
 
     def _topk_pair(a_ids, a_mat, b_ids, b_mat, diagonal: bool) -> pd.DataFrame:

@@ -139,11 +139,12 @@ BOUNDED_GRAPH_CTES = """scored AS (
 
 def _bounded_edges(emb: DataFrame) -> DataFrame:
     """The bounded k-NN graph every headline consumer runs on, via the
-    HYBRID dispatch (r9): `topk_similarity_self_join(strategy="auto")`
-    routes small corpora to the exact triangular block-GEMM and large
-    ones to the IVF-cell-pruned composition (`ivf_pruned_topk_join`,
-    recall 1.0 by the angular triangle inequality — outputs bit-identical,
-    so the one oracle covers both paths).  This recovers the r7
+    HYBRID dispatch (r9): `topk_similarity_self_join` routes small
+    corpora to the exact triangular block-GEMM and large ones to the
+    IVF-cell-pruned composition (`ivf_pruned_topk_join`, which itself
+    falls back to the block grid when pruning would not pay; recall 1.0
+    by the angular triangle inequality — outputs bit-identical, so the
+    one oracle covers every path).  This recovers the r7
     small-corpus walls the unconditional IVF switch had regressed
     1.4–1.5× (VERDICT r8 'what's wrong'): sf1/sf3 fixtures
     (20k/60k vectors) stay on the IVF path, driver fixtures (<=2k) on

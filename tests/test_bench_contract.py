@@ -51,3 +51,15 @@ def test_headline_queries_all_registered():
 
     missing = [n for n in bench.HEADLINE if n not in QUERIES]
     assert not missing
+
+
+def test_run_query_leaves_an_empty_cache(spark):
+    """Every timed rep starts cold: a query that persists must not leave
+    its cache entry for the next rep of the same query to read."""
+
+    def persisting_query(spark, sf_dir):
+        return spark.range(100).selectExpr("id * 2 AS x").persist()
+
+    for _ in range(2):
+        assert bench.run_query(persisting_query, spark, "unused") >= 0
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

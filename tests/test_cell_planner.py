@@ -1,6 +1,7 @@
 """Geometry-adaptive cell planning for the exact pruned self-joins
-(VERDICT r11 #1): adaptive default n_cells, the measured-cost grid
-planner, and the admit-rate guardrail.
+(VERDICT r11 #1): adaptive default n_cells, the one measured-cost
+choice between the fine cell grid and the triangular block grid, and
+the admit-rate guardrail.
 
 Reference semantics: J1 at corpus scale (main_server.py:41-44) — the
 engine, not the caller, must keep the exact bounded join off the n²
@@ -15,6 +16,7 @@ import numpy as np
 import pytest
 
 from crawling_vectordb_llm_spark.operators import ivf as I
+from crawling_vectordb_llm_spark.operators.knn import _pick_blocks
 
 
 def test_adaptive_cell_count_rule():
@@ -27,102 +29,37 @@ def test_adaptive_cell_count_rule():
     # the SemDeDup k ∝ n recipe)
     assert I.adaptive_cell_count(60_000) == 187
     assert I.adaptive_cell_count(180_000) == 562
-    # cap: the O(k²) admission matrix / planner stay bounded (raised
+    # cap: the O(k²) admission matrix stays bounded (raised
     # 2048 -> 8192 in r13 — the hierarchical fit regime past the old
     # flat cap; fit/assignment above FLAT_CELL_CAP are two-level)
     assert I.adaptive_cell_count(1_000_000) == 3_125
     assert I.adaptive_cell_count(10_000_000) == 8_192
 
 
-def test_plan_cell_grid_keeps_fine_grid_on_clustered_geometry():
-    # block-diagonal admission (tight, well-separated clusters): the
-    # fine grid's candidate volume is ~n·cell_size, worth far more than
-    # its extra replication — the planner must keep it
-    kf = 40
-    counts = np.full(kf, 300.0)
-    admit = np.eye(kf, dtype=bool)
-    group, P, st = I._plan_cell_grid(counts, admit, 65_536, p_floor=4)
-    assert P == kf
-    assert np.array_equal(group, np.arange(kf))
-    # diagonal-only candidates: kf * C(300, 2)
-    assert st["plan_candidate_pairs"] == kf * (300 * 299 // 2)
-
-
-def test_plan_cell_grid_coarsens_on_structure_free_geometry():
-    # all-admitted (isotropic) geometry: candidates are ~n²/2 at ANY
-    # granularity, so the planner must pick the coarsest grid and not
-    # pay the fine grid's k·n replication shuffle
+def test_grid_choice_blocks_on_structure_free_cells_on_clustered():
+    """The one grid choice, priced by cand + REPL_PAIR_COST · repl.
+    All-admitted (isotropic) geometry: the cells score the same ~n²/2
+    pairs as the block grid and ship every row to all 64 cells' pairs
+    instead of P, so the block grid must win.  Block-diagonal admission
+    (tight, well-separated clusters): the cells score ~n·cell_size
+    pairs, worth far more than their replication, so the cells must
+    win."""
     kf = 64
     counts = np.full(kf, 1_000.0)
     admit = np.ones((kf, kf), dtype=bool)
-    group, P, st = I._plan_cell_grid(counts, admit, 65_536, p_floor=8)
-    assert P == 8
     n = int(counts.sum())
-    assert st["plan_candidate_pairs"] == n * (n - 1) // 2
-    # replication at the coarse grid: every row ships to its P admitted
-    # block-pairs (deg = P with diag once)
-    assert st["plan_replicated_rows"] == n * P
+    cand, cells, blocks = I._grid_costs(counts, admit, 8, 65_536)
+    assert cand == n * (n - 1) // 2
+    assert cells == cand + I.REPL_PAIR_COST * kf * n
+    assert blocks == n * (n - 1) // 2 + I.REPL_PAIR_COST * 8 * n
+    assert blocks < cells
 
-
-def test_plan_cell_grid_picks_mid_ladder_on_mixed_geometry():
-    """VERDICT r12 #4 done-criterion: a half-clustered/half-diffuse
-    corpus must get a MIDDLE option — the structure-aware admit-pattern
-    rungs merge the mutually-admitting diffuse cells while keeping the
-    clustered cells fine, with measured cost strictly below BOTH
-    extremes (the modulo ladder could only ever choose fine vs coarse:
-    modulo merges unrelated cells, so every mid rung admitted nearly as
-    much as the coarse end)."""
-    kf = 32
-    counts = np.full(kf, 3_000.0)
-    # cells 0..15: tight clusters (admit self only); 16..31: diffuse
-    # (big radii — admit every pair they participate in)
-    admit = np.zeros((kf, kf), dtype=bool)
-    np.fill_diagonal(admit, True)
-    admit[16:, :] = True
-    admit[:, 16:] = True
-    group, P, st = I._plan_cell_grid(counts, admit, 65_536, p_floor=4)
-    assert 4 < P < kf, P
-    assert st["plan_grouping"] == "admit_pattern"
-    # fine extreme: every diffuse cell replicates to all 32 blocks
-    _, _, fine_cost = I._grid_cost(
-        counts, admit, np.arange(kf), kf, 65_536
-    )
-    # coarse extreme: every group mixes in a diffuse cell -> admits all
-    _, _, coarse_cost = I._grid_cost(
-        counts, admit, np.arange(kf) % 4, 4, 65_536
-    )
-    assert st["plan_cost"] < fine_cost
-    assert st["plan_cost"] < coarse_cost
-    # the chosen grouping keeps clustered cells out of the diffuse
-    # blob: at least 8 groups hold exactly one clustered cell
-    clustered_groups = group[:16]
-    diffuse_groups = set(group[16:].tolist())
-    solo = sum(
-        1
-        for g in np.unique(clustered_groups)
-        if (clustered_groups == g).sum() <= 2 and g not in diffuse_groups
-    )
-    assert solo >= 8, (group, solo)
-
-
-def test_grid_cost_penalizes_single_task_plans():
-    """The parallelism-deficit term: collapsing a structure-free corpus
-    into one mono-group minimizes shuffle but serializes all the GEMM
-    work onto one task — the model must not pick it (PLAN_MIN_TASKS)."""
-    kf = 16
-    counts = np.full(kf, 4_000.0)
-    admit = np.ones((kf, kf), dtype=bool)
-    _, _, mono = I._grid_cost(counts, admit, np.zeros(kf, dtype=int), 1, 65_536)
-    _, _, coarse = I._grid_cost(counts, admit, np.arange(kf) % 8, 8, 65_536)
-    assert coarse < mono
-
-
-def test_plan_cell_grid_respects_p_floor_above_fine_k():
-    # degenerate: fine grid already at/below the coarse floor — identity
-    counts = np.array([100.0, 120.0, 80.0])
-    admit = np.ones((3, 3), dtype=bool)
-    group, P, _ = I._plan_cell_grid(counts, admit, 65_536, p_floor=8)
-    assert P == 3 and np.array_equal(group, np.arange(3))
+    kf = 40
+    counts = np.full(kf, 300.0)
+    admit = np.eye(kf, dtype=bool)
+    cand, cells, blocks = I._grid_costs(counts, admit, 4, 65_536)
+    assert cand == kf * (300 * 299 // 2)  # diagonal-only candidates
+    assert cells < blocks
 
 
 def _clustered_df(spark, per=60, dim=16, n_anchors=8, seed=11):
@@ -144,21 +81,28 @@ def _clustered_df(spark, per=60, dim=16, n_anchors=8, seed=11):
 
 
 def test_adaptive_default_is_exact_through_the_planner(spark, monkeypatch):
-    """n_cells=None end to end: shrink the target so a 480-row corpus
-    plans a fine grid ABOVE the floor (planner actually engaged), and
-    the bounded join must still match the brute-force answer exactly —
-    the planner only regroups provably-safe coverage."""
+    """n_cells=None end to end, steered to each side of the grid choice
+    through REPL_PAIR_COST (free replication → the cell grid always
+    wins; prohibitive replication → the block grid does): a 480-row
+    corpus with a fine grid ABOVE the floor must match the brute-force
+    answer exactly on both grids."""
     from tests.test_topk_join import _expected
 
     monkeypatch.setattr(I, "ADAPTIVE_CELL_TARGET_ROWS", 20)
     df, mat = _clustered_df(spark)
-    assert I.adaptive_cell_count(480) == 24  # planner path, > floor 16
+    assert I.adaptive_cell_count(480) == 24  # fine grid > floor 16
     exp = _expected(mat, k=4, tau=0.6)
-    got = {
-        (r["item_id"], r["neighbor_id"], r["rank"], r["score"])
-        for r in I.ivf_pruned_topk_join(df, tau=0.6, k=4).collect()
-    }
-    assert got == exp
+    for repl_cost, grid in ((0.0, "cells"), (1e9, "blocks")):
+        monkeypatch.setattr(I, "REPL_PAIR_COST", repl_cost)
+        stats: dict = {}
+        got = {
+            (r["item_id"], r["neighbor_id"], r["rank"], r["score"])
+            for r in I.ivf_pruned_topk_join(
+                df, tau=0.6, k=4, stats_out=stats
+            ).collect()
+        }
+        assert stats["grid"] == grid
+        assert got == exp, grid
 
 
 def test_adaptive_stats_report_plan_and_fine_geometry(spark, monkeypatch):
@@ -169,16 +113,21 @@ def test_adaptive_stats_report_plan_and_fine_geometry(spark, monkeypatch):
     assert stats["n"] == 480
     assert stats["fine_cells"] > I.ADAPTIVE_CELL_FLOOR
     assert 0.0 < stats["fine_admit_rate"] <= 1.0
-    assert stats["executed_blocks"] <= stats["fine_cells"]
-    assert stats["plan_ladder"][0] == stats["fine_cells"]
     assert stats["candidate_pairs"] >= stats["fine_candidate_pairs"] > 0
-    # at 480 rows the cost model rightly COARSENS (extra replication at
-    # 350 pairs/row dwarfs any prune savings this small — pruning only
-    # pays once candidate savings clear the shuffle term, see
-    # test_plan_cell_grid_keeps_fine_grid_on_clustered_geometry for the
-    # regime where fine wins): executed grid is coarser than fine, and
-    # the fine-geometry telemetry still reports the cluster structure
-    assert stats["executed_blocks"] < stats["fine_cells"]
+    # at 480 rows the cost model rightly picks the BLOCK grid (extra
+    # replication at 350 pairs/row dwarfs any prune savings this small —
+    # pruning only pays once candidate savings clear the shuffle term,
+    # see test_grid_choice_blocks_on_structure_free_cells_on_clustered
+    # for the regime where cells win): the executed keys describe the
+    # block grid, and the fine-geometry telemetry still reports the
+    # cluster structure
+    assert stats["grid"] == "blocks"
+    assert stats["blocks_cost"] < stats["cells_cost"]
+    assert stats["executed_blocks"] == _pick_blocks(
+        480, 65_536, spark.sparkContext.defaultParallelism
+    )
+    assert stats["candidate_pairs"] == stats["total_pairs"]
+    assert stats["admit_rate"] == 1.0
     assert stats["fine_admit_rate"] < 0.5
 
 
@@ -239,16 +188,17 @@ def test_hier_fit_shape_and_determinism(spark, monkeypatch):
 
 
 def test_hier_path_exact_through_planner(spark, monkeypatch):
-    """Force the hierarchical regime (two-level fit, two-step assignment,
-    parent rung in the planner) at fixture scale by shrinking
-    FLAT_CELL_CAP: the bounded join must still match brute force
-    EXACTLY — the hier machinery only changes which cell a vector lands
-    in, never the triangle-bound admission soundness (radii are computed
-    from the actual assignment)."""
+    """Force the hierarchical regime (two-level fit, two-step assignment)
+    at fixture scale by shrinking FLAT_CELL_CAP, and keep the cell grid
+    by making replication free: the bounded join must still match brute
+    force EXACTLY — the hier machinery only changes which cell a vector
+    lands in, never the triangle-bound admission soundness (radii are
+    computed from the actual assignment)."""
     from tests.test_topk_join import _expected
 
     monkeypatch.setattr(I, "ADAPTIVE_CELL_TARGET_ROWS", 20)
     monkeypatch.setattr(I, "FLAT_CELL_CAP", 8)
+    monkeypatch.setattr(I, "REPL_PAIR_COST", 0.0)
     df, mat = _clustered_df(spark)
     assert I.adaptive_cell_count(480) == 24  # > patched flat cap -> hier
     stats: dict = {}
@@ -261,8 +211,7 @@ def test_hier_path_exact_through_planner(spark, monkeypatch):
     }
     assert got == exp
     assert stats["fine_cells"] <= 24
-    # the planner saw the parent rung (ladder stats present either way)
-    assert "plan_grouping" in stats
+    assert stats["grid"] == "cells"
 
 
 def test_hier_threshold_join_identical_to_flat(spark, monkeypatch):
@@ -364,6 +313,7 @@ def test_stats_out_reachable_through_topk_form(spark, monkeypatch):
     TOP-K form, so plan telemetry (and the guardrail) must land through
     ivf_pruned_topk_join and topk_similarity_self_join's IVF arm too —
     not only the threshold form."""
+    from crawling_vectordb_llm_spark.operators import knn
     from crawling_vectordb_llm_spark.operators.knn import (
         topk_similarity_self_join,
     )
@@ -384,19 +334,21 @@ def test_stats_out_reachable_through_topk_form(spark, monkeypatch):
     assert stats["n"] == 150 and stats["fine_cells"] == 4
     assert stats["admit_rate"] > 0
 
+    # past the shortcut threshold: the IVF arm runs and reports
     stats2: dict = {}
-    with pytest.warns(RuntimeWarning):
-        topk_similarity_self_join(
-            df, k=3, tau=0.1, strategy="ivf", n_cells=4, stats_out=stats2
-        ).count()
+    with monkeypatch.context() as m:
+        m.setattr(knn, "BRUTE_TOPK_MAX_ROWS", 100)
+        with pytest.warns(RuntimeWarning):
+            topk_similarity_self_join(
+                df, k=3, tau=0.1, n_cells=4, stats_out=stats2
+            ).count()
     assert "guardrail" in stats2 and stats2["n"] == 150
+    assert stats2["grid"] == "cells"
 
-    # brute arm: no prune plan, but the caller learns which arm ran
+    # small-corpus shortcut: no prune plan, but the caller learns the grid
     stats3: dict = {}
-    topk_similarity_self_join(
-        df, k=3, tau=0.1, strategy="auto", stats_out=stats3
-    ).count()
-    assert stats3 == {"n": 150, "strategy": "brute"}
+    topk_similarity_self_join(df, k=3, tau=0.1, stats_out=stats3).count()
+    assert stats3 == {"n": 150, "grid": "blocks"}
 
 
 def test_guardrail_suggests_adaptive_before_approximate_ladder(spark, monkeypatch):
@@ -427,4 +379,4 @@ def test_explicit_n_cells_keeps_fixed_grid(spark):
     stats: dict = {}
     I.ivf_pruned_threshold_join(df, tau=0.6, n_cells=12, stats_out=stats).count()
     assert stats["executed_blocks"] == stats["fine_cells"] == 12
-    assert "plan_ladder" not in stats
+    assert stats["grid"] == "cells"

@@ -35,7 +35,7 @@ def test_docs_still_scanned(tmp_path):
 
 def test_repo_scan_includes_knn_and_suite_sources():
     paths = {os.path.basename(p) for p in citation_paths()}
-    assert {"knn.py", "dedup_suite.py", "hybrid_ab.py", "SCALE.md"} <= paths
+    assert {"knn.py", "dedup_suite.py", "selfcheck.py", "SCALE.md"} <= paths
 
 
 def test_pattern_matches_round_artifacts_only():

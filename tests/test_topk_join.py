@@ -111,12 +111,14 @@ def test_output_bounded_at_nk(spark):
     assert out.count() == 200 * 2
 
 
-def test_hybrid_dispatch_bit_identical(spark):
-    # The r9 hybrid contract: forced-brute, forced-ivf, and both auto
-    # routes (below and above the crossover, steered via brute_max_rows)
-    # must produce the SAME rows — recall 1.0 through the IVF prune and
-    # the shared 6-dp/id-asc total order make the dispatch invisible to
-    # callers and to the one shared oracle.
+def test_hybrid_dispatch_bit_identical(spark, monkeypatch):
+    # The r9 hybrid contract: the pinned cell grid and both dispatch
+    # routes (below and above the shortcut threshold, steered via
+    # knn.BRUTE_TOPK_MAX_ROWS) must produce the SAME rows — recall 1.0
+    # through the IVF prune and the shared 6-dp/id-asc total order make
+    # the dispatch invisible to callers and to the one shared oracle.
+    from crawling_vectordb_llm_spark.operators import knn
+
     df, mat = _fixture(spark, n=180, seed=17)
     exp = _expected(mat, k=3, tau=0.2)
 
@@ -126,19 +128,11 @@ def test_hybrid_dispatch_bit_identical(spark):
             for r in out.collect()
         }
 
-    brute = rows(topk_similarity_self_join(df, k=3, tau=0.2, strategy="brute"))
-    ivf = rows(topk_similarity_self_join(df, k=3, tau=0.2, strategy="ivf"))
+    cells = rows(ivf_pruned_topk_join(df, tau=0.2, k=3, n_cells=16))
     auto_small = rows(topk_similarity_self_join(df, k=3, tau=0.2))
-    auto_big = rows(
-        topk_similarity_self_join(df, k=3, tau=0.2, brute_max_rows=50)
-    )
-    assert brute == ivf == auto_small == auto_big == exp
-
-
-def test_hybrid_dispatch_rejects_unknown_strategy(spark):
-    df, _ = _fixture(spark, n=20)
-    with pytest.raises(ValueError, match="strategy"):
-        topk_similarity_self_join(df, k=2, tau=0.5, strategy="exact")
+    monkeypatch.setattr(knn, "BRUTE_TOPK_MAX_ROWS", 50)
+    auto_big = rows(topk_similarity_self_join(df, k=3, tau=0.2))
+    assert cells == auto_small == auto_big == exp
 
 
 def test_empty_and_single_row(spark):

@@ -156,12 +156,13 @@ def main() -> None:
         "",
         "r12 re-generation notes: the pruned-join entries "
         "(ivf_pruned_near_dup, similarity_topk_join, the _allpairs "
-        "family) now run through the geometry-adaptive cell planner "
-        "(ivf.adaptive_cell_count + _plan_cell_grid; the per-row cell "
-        "map join carries __grp instead of the old per-cell __nsub "
-        "join) — at the sf0.01 audit scale the adaptive floor keeps the "
-        "historical 16-cell geometry, so block counts match prior "
-        "rounds.  The r11 f32-prefilter GEMM paths live inside the "
+        "family) now size their fine grid with ivf.adaptive_cell_count "
+        "and then make one cost-model choice between that cell grid "
+        "and the triangular block grid of knn.threshold_similarity_join "
+        "(the cell grid's per-row cell map join carries __grp; the "
+        "block grid plans as the unpruned self-join) — at the sf0.01 "
+        "audit scale most pairs are admitted, so these entries plan "
+        "the block grid.  The r11 f32-prefilter GEMM paths live inside the "
         "applyInPandas task bodies and do not change plan shapes "
         "(GEMM_PREFILTER_AB_r12.json carries the sf3 AND sf9 output-"
         "identity assertions).",
