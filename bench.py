@@ -127,7 +127,7 @@ def main() -> None:
 
     for name in HEADLINE:
         fn = QUERIES[name]
-        run_query(fn, spark, sf_dir)  # cold: plan compile + cache warm
+        run_query(fn, spark, sf_dir)  # cold: plan compile / JIT warm-up
         warm = sorted(run_query(fn, spark, sf_dir) for _ in range(n_runs))
         results[name] = round(warm[len(warm) // 2], 3)  # median
         # reap blocks pinned by this query's localCheckpoints: each

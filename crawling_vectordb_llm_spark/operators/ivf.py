@@ -727,7 +727,8 @@ def ivf_pruned_threshold_join(
     total_pairs, admit_rate} — the instrumentation behind the SCALE.md
     clustered-geometry measurements (VERDICT r3 #2).  The executed_*,
     admissible/total block and candidate/admit keys describe the grid
-    that ran; skipped when None.
+    that ran; the fine_* keys are the fit sample's estimate when the
+    sample alone picked the block grid; skipped when None.
 
     `centroids`: pass a persisted centroid matrix (plans/index_build.py)
     to skip the in-call k-means fit — the production regime, where the
@@ -806,7 +807,11 @@ def _ivf_pruned_replicated(
     n(n−1)/2 pairs and P·n replicated rows.  Cells win when the prune
     converts cluster structure into skipped pairs; the block grid wins
     when most pairs are admitted anyway and the cells would only add
-    replication.  An explicit integer pins the cell grid.  OUTPUT is
+    replication.  Past the in-call fit sample the grids are first priced
+    on the sample, whose cell radii are lower bounds: when even that
+    admission prices the block grid cheaper, the choice is made without
+    the full-corpus radius pass (the fine_* stats are then the sample's
+    estimate).  An explicit integer pins the cell grid.  OUTPUT is
     identical either way by exactness, but the in-call centroid fit
     changed in r12 (k-means++ init, max_iter=8, sample 64·k, new fp
     summation order), so prior rounds' admit/block stats and timings are
@@ -839,7 +844,7 @@ def _ivf_pruned_replicated(
             corpus, k, vec_col, seed=seed, max_iter=8, n=n,
         )
         hier = (coarse_c, parent_of)
-    sample_x: "np.ndarray | None" = None
+    fit_x: "np.ndarray | None" = None
     if centroids is None and k <= FLAT_CELL_CAP:
         # Cell centroids are a PARTITIONING device, not a quantizer:
         # exactness never depends on them (radii are computed from the
@@ -855,17 +860,15 @@ def _ivf_pruned_replicated(
         # needing quantizer-grade cells pass `centroids` explicitly
         # (plans/index_build.py persists exactly that).
         #
-        # When the fit sample is the whole corpus (every fixture-scale
-        # call), the per-cell radii/size stats below are computed on the
-        # driver from the same normalized vectors with the exact executor
-        # math, skipping the eager distributed radius pass.
+        # The fit sample also prices the two grids on the driver (below):
+        # exactly when it is the whole corpus (every fixture-scale call),
+        # as a lower-bound admission otherwise.
         fit: dict = {}
         centroids = kmeans_centroids(
             corpus, k, vec_col, seed=seed, max_iter=8,
             sample_limit=max(10_000, 64 * k), sample_out=fit,
         )
-        if len(fit["x"]) == n:
-            sample_x = fit["x"]
+        fit_x = fit["x"]
     k = centroids.shape[0]
     if hier is None:
         bc = spark.sparkContext.broadcast(centroids)
@@ -950,70 +953,85 @@ def _ivf_pruned_replicated(
         _assign_theta,
         schema=f"__id {id_t}, __v {vec_t}, __cell int, __theta double",
     )
-    if sample_x is None:
-        # cache: the radius pass and the replicated verify pass both scan it
-        assigned = assigned.localCheckpoint(eager=False)
-        cell_stats = {
-            int(r["__cell"]): (float(r["r"]), int(r["n"]))
-            for r in assigned.groupBy("__cell")
-            .agg(F.max("__theta").alias("r"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    else:
-        # r13: the fit sample IS the corpus — per-cell max-theta/size are
-        # computed here with the exact executor expressions (normalize →
-        # GEMM → argmax → arccos(clip)); max and count are
+    theta_tau = float(np.arccos(np.clip(tau, -1.0, 1.0)))
+    n_blocks = _pick_blocks(
+        n, max_cell_rows, spark.sparkContext.defaultParallelism
+    )
+
+    def _price(cell_stats: dict, scale: float) -> tuple:
+        cells = sorted(cell_stats)
+        radii = np.array([cell_stats[c][0] for c in cells])
+        counts = scale * np.array(
+            [cell_stats[c][1] for c in cells], dtype=np.float64
+        )
+        # fine-grid admission: cell pair (i, j) can hold a qualifying
+        # vector pair only if angle(c_i, c_j) - r_i - r_j <= theta_tau.
+        # Evaluated in the COS domain (r13, XL_PHASE_r13):
+        #   angle ≤ θτ + r_i + r_j  ⟺  dot ≥ cos(min(θτ + r_i + r_j, π))
+        # and with x_i = θτ/2 + r_i the threshold cos(x_i + x_j) expands
+        # by angle addition into just TWO outer products of per-cell
+        # cos/sin — no kf² arccos (the transcendental was 7.5 s of the
+        # per-join driver stall at kf=6.5k).  The angle-domain +1e-9
+        # slack maps to ≥ cosT − sinT·1e-9 with sinT ≤ 1, so subtracting
+        # 2e-9 is a conservative superset — a borderline difference only
+        # ever ADDS provably-safe blocks.
+        C = _normalize(centroids)[cells]
+        dots = C @ C.T
+        x = radii + 0.5 * theta_tau
+        cos_t = np.outer(np.cos(x), np.cos(x))
+        cos_t -= np.outer(np.sin(x), np.sin(x))
+        cos_t -= 2e-9
+        admit = dots >= cos_t
+        # θτ + r_i + r_j ≥ π: the bound can't exclude anything on a sphere
+        admit |= radii[:, None] + radii[None, :] >= np.pi - theta_tau
+        return (cells, counts, admit) + _grid_costs(
+            counts, admit, n_blocks, max_cell_rows
+        )
+
+    priced = None
+    if fit_x is not None:
+        # Price the fit sample first, with the exact executor expressions
+        # (normalize → GEMM → argmax → arccos(clip)); max and count are
         # order-independent, so the sorted sample order is immaterial.
-        # `assigned` then has a single consumer (the replication join)
-        # and stays fully lazy — no eager materialization pass at all.
-        sims_s = sample_x @ centroids.T
+        # When the sample IS the corpus (every fixture-scale call) this is
+        # the exact admission and `assigned` stays fully lazy.  Otherwise
+        # the sample's cell radii are lower bounds, so its admission is a
+        # subset of the corpus's: when even that prices the block grid
+        # cheaper, the block grid runs without the full-corpus radius
+        # pass, and the fine_* stats are the sample's estimate.
+        sims_s = fit_x @ centroids.T
         cid_s = np.argmax(sims_s, axis=1)
         theta_s = np.arccos(
             np.clip(sims_s[np.arange(len(cid_s)), cid_s], -1.0, 1.0)
         )
-        cell_stats = {
-            int(c): (
-                float(theta_s[cid_s == c].max()),
-                int((cid_s == c).sum()),
-            )
-            for c in np.unique(cid_s)
-        }
-    cells = sorted(cell_stats)
+        priced = _price(
+            {
+                int(c): (float(theta_s[cid_s == c].max()), int((cid_s == c).sum()))
+                for c in np.unique(cid_s)
+            },
+            n / len(fit_x),
+        )
+        if len(fit_x) < n and not (adaptive and priced[-1] < priced[-2]):
+            priced = None
+    radius_pass = priced is None
+    if radius_pass:
+        # cache: the radius pass and the replicated verify pass both scan it
+        assigned = assigned.localCheckpoint(eager=False)
+        priced = _price(
+            {
+                int(r["__cell"]): (float(r["r"]), int(r["n"]))
+                for r in assigned.groupBy("__cell")
+                .agg(F.max("__theta").alias("r"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            },
+            1.0,
+        )
+    cells, counts, admit, fine_cand, cells_cost, blocks_cost = priced
     kf = len(cells)
-    radii = np.array([cell_stats[c][0] for c in cells])
-    counts = np.array([cell_stats[c][1] for c in cells], dtype=np.float64)
-
-    theta_tau = float(np.arccos(np.clip(tau, -1.0, 1.0)))
-    # fine-grid admission: cell pair (i, j) can hold a qualifying vector
-    # pair only if angle(c_i, c_j) - r_i - r_j <= theta_tau.  Evaluated
-    # in the COS domain (r13, XL_PHASE_r13):
-    #   angle ≤ θτ + r_i + r_j  ⟺  dot ≥ cos(min(θτ + r_i + r_j, π))
-    # and with x_i = θτ/2 + r_i the threshold cos(x_i + x_j) expands by
-    # angle addition into just TWO outer products of per-cell cos/sin —
-    # no kf² arccos (the transcendental was 7.5 s of the per-join
-    # driver stall at kf=6.5k).  The angle-domain +1e-9 slack maps to
-    # ≥ cosT − sinT·1e-9 with sinT ≤ 1, so subtracting 2e-9 is a
-    # conservative superset — a borderline difference only ever ADDS
-    # provably-safe blocks.
-    C = _normalize(centroids)[cells]
-    dots = C @ C.T
-    x = radii + 0.5 * theta_tau
-    cos_t = np.outer(np.cos(x), np.cos(x))
-    cos_t -= np.outer(np.sin(x), np.sin(x))
-    cos_t -= 2e-9
-    admit = dots >= cos_t
-    # θτ + r_i + r_j ≥ π: the bound can't exclude anything on a sphere
-    admit |= radii[:, None] + radii[None, :] >= np.pi - theta_tau
 
     # guardrail on the GEOMETRY (fine granularity), independent of the
     # executed grid: admit_rate ~1 at scale means no exact method beats
     # ~n²/2 here — say so and point at the sub-quadratic ladder.
-    n_blocks = _pick_blocks(
-        n, max_cell_rows, spark.sparkContext.defaultParallelism
-    )
-    fine_cand, cells_cost, blocks_cost = _grid_costs(
-        counts, admit, n_blocks, max_cell_rows
-    )
     total_pairs = n * (n - 1) // 2
     fine_admit_rate = fine_cand / max(total_pairs, 1)
     if n >= ADMIT_WARN_MIN_ROWS and fine_admit_rate >= ADMIT_WARN_RATE:
@@ -1058,6 +1076,10 @@ def _ivf_pruned_replicated(
             total_pairs=total_pairs,
         )
     if use_blocks:
+        if radius_pass:
+            # the block grid never reads `assigned`'s local checkpoint:
+            # unpin its blocks now, not when the ContextCleaner reaps them
+            assigned._jdf.queryExecution().logical().rdd().unpersist(False)
         if stats_out is not None:
             tasks = n_blocks * (n_blocks + 1) // 2
             stats_out.update(

@@ -275,62 +275,20 @@ def _triangular_block_grid(
     )
 
 
-# Corpus-size threshold for the hybrid bounded-join dispatch: at or below
-# this many vectors the exact triangular-grid GEMM runs without even
-# paying IVF's k-means fit; above it the pruned join fits cells and keeps
-# them when they skip enough of the Θ(n²·d) GEMM flops (brute marginal
-# exponent 1.75, AB_EXPONENT_POST_r08 — vs ~1.0 IVF-composed), else it
-# runs this same block grid.  Measured bracket at d=64 (AB_HYBRID_r10.json,
-# interleaved 7-rep medians of per-rep ratios, fixed-size slices labeled
-# by measured count — supersedes AB_HYBRID_r09.json, whose mid point a
-# slice bug displaced to 16,362 rows and whose 5-rep 60k walls spanned
-# 1.25–12.5 s): brute 2.34×/2.54×/2.86×/2.46× faster at
-# n=2,000/8,165/12,232/16,362; 1.69× at 20,000; IVF 1.09×/1.13× faster
-# at 40,798/60,000 — the d=64 crossover sits at ≈25–40k.  The threshold
-# sits below that on purpose: the give-up is bounded at the measured
-# ≈1.7× in the narrow 16k–25k window (seconds either way), while the
-# payoff is that a by-name 100 TB caller is never on the e≈1.75 path —
-# and the crossover is geometry-dependent (it shrinks as clustering
-# strengthens or admit-rate falls; the isotropic fixture is IVF's worst
-# case because the angular prune admits almost every cell pair).
-# Dimension: measured at the reference's d=1024 operating point
-# (AB_DIM_r10.json, hash-embedded document text, same interleaved
-# protocol at 5 reps/side vs the d=64 run's 7), d does
-# NOT simply cancel — IVF's k-means/replication overheads scale with d
-# harder than BLAS GEMM does, so brute leads 3.40×/4.95×/3.04×/2.88× at
-# n=2,015/8,226/16,513/20,147, converging to 1.20× at 60,020 (crossover
-# above 60k at d=1024).  The dispatch therefore never slows the d=1024
-# caller below the threshold (brute is the faster side everywhere
-# there), and above it gives up a bounded, n-shrinking ≤2.9× constant
-# in exchange for the prune's structure-dependent win (see below).
-# All four d=1024 ANN-ladder recall gates and the pruned-join
-# bit-identity (recall 1.0 at any d by the angular triangle inequality)
-# are green in the same artifact.
-#
-# r11 third-scale-point CORRECTION (AB_EXPONENT_SF9_r11.json +
-# EXP_SF9_DIAG_r11.json): the "~1.0 IVF-composed" exponent the r8/r10
-# two-point pairs measured was fixed overhead still amortizing.  On
-# ISOTROPIC corpora the angular prune admits the full cell grid
-# (admit_rate 1.0000 at 60k AND 180k, candidate ratio exactly 9.0=n²),
-# so BOTH dispatch arms are Θ(n²·d) flops — at 180k the GEMM is 94% of
-# the wall and the measured sf3→sf9 exponents ran 1.41–1.83.  That is
-# the information cost of exact recall-1.0 top-k on structure-free
-# geometry, not an operator defect (FAISS exact = brute GEMM for the
-# same reason).  The dispatch still buys the smaller constant
-# (replication ≤ C+1 vs P) and the prune converts CLUSTER STRUCTURE
-# into skipped blocks — with cluster count ∝ n the same 60k→180k step
-# runs at e≈1 (CLUSTERED_SF9_r11.json), which is the geometry real
-# encoder embeddings have at 100 TB.  The f32-prefilter/f64-verify
-# kernel below (r11) halves the DRAM-bandwidth-bound constant on both
-# arms with output identical up to f64 summation-order ulps — the
-# rescore sums via einsum, the pure path via BLAS dgemm, so a cosine
-# within ~1 ulp of tau or of a 6-dp rounding boundary could in
-# principle round differently; validated empirically by 0-row
-# symmetric diffs on the full sf3 and sf9 fixtures plus adversarial
-# planted near-tau pairs (KERNEL_DECOMP_r11.json,
-# GEMM_PREFILTER_AB_r11.json); the gated approximate ladder (IVF probe
-# / PQ / LSH) remains the sub-quadratic path when the corpus genuinely
-# has no structure.
+# Corpus-size threshold of topk_similarity_self_join's dispatch: at or
+# below this many vectors the triangular block grid runs directly, with
+# no k-means fit; above it ivf_pruned_topk_join fits cells and runs the
+# fine cell grid or this same block grid, whichever its cost model
+# prices cheaper.  The bracket predates that block-grid fallback: it was
+# measured against the pruned join when it always ran a cell grid (d=64,
+# AB_HYBRID_r10.json, interleaved 7-rep medians: brute 2.3–2.9× faster
+# at n=2k–16k, 1.7× at 20k, the pruned join 1.1× faster at 40k–60k;
+# d=1024, AB_DIM_r10.json: brute 2.9–5.0× faster up to 20k).  Now the
+# shortcut saves only the fit and the grid pricing, and the threshold
+# has not been re-measured against that default.
+# On isotropic corpora the prune admits every cell pair, so both grids
+# are Θ(n²·d) (AB_EXPONENT_SF9_r11.json); cluster structure is what
+# the cells turn into skipped pairs (CLUSTERED_SF9_r11.json).
 BRUTE_TOPK_MAX_ROWS = 16_384
 
 
@@ -661,13 +619,17 @@ def _pick_blocks(
 ) -> int:
     """Grid size P for the triangular block grid: at least enough blocks
     that every block fits block_target_rows (the MEMORY bound), and — when
-    the data is small relative to the cluster — enough block-pairs to
-    occupy the available cores (the PARALLELISM bound: P(P+1)/2 tasks),
-    floored so blocks never shrink below min_block_rows where per-task
+    the data is small relative to the cluster — about three block-pairs
+    per core (the PARALLELISM bound on the P(P+1)/2 tasks): with only one
+    per core the half-size diagonal tasks and the hashing of pair keys
+    into shuffle partitions leave cores idle behind the largest task
+    (60k isotropic d=64 vectors, top-16 at tau 0.5, 4 cores, medians of
+    5 interleaved reps: 12.4/12.2/9.9/10.4/10.9 s at P=3/4/5/6/8).
+    Floored so blocks never shrink below min_block_rows where per-task
     overhead would dominate the GEMM."""
     p_mem = max(1, -(-n // block_target_rows))
     p_par = 1
-    while p_par * (p_par + 1) // 2 < parallelism:
+    while p_par * (p_par + 1) // 2 < 3 * parallelism:
         p_par += 1
     p_cap = max(1, n // min_block_rows)
     return max(p_mem, min(p_par, p_cap))

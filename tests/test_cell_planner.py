@@ -105,6 +105,52 @@ def test_adaptive_default_is_exact_through_the_planner(spark, monkeypatch):
         assert got == exp, grid
 
 
+def test_sample_priced_choice_past_the_fit_sample(spark, monkeypatch):
+    """Past the in-call fit sample the grids are priced on the sample
+    first.  Isotropic: the sample already prices the block grid cheaper,
+    so no full-corpus radius pass (no local checkpoint) runs.  Clustered
+    with free replication: the sample prices the cells cheaper, so the
+    exact radius pass runs and the cell grid executes.  Rows equal the
+    brute-force answer either way."""
+    from tests.test_topk_join import _expected
+
+    fit = I.kmeans_centroids
+    monkeypatch.setattr(
+        I, "kmeans_centroids", lambda *a, **kw: fit(*a, **{**kw, "sample_limit": 200})
+    )
+    monkeypatch.setattr(I, "ADAPTIVE_CELL_TARGET_ROWS", 20)
+    rng = np.random.default_rng(5)
+    iso = rng.standard_normal((480, 16))
+    iso_df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(iso)],
+        "vec_id long, embedding array<double>",
+    )
+    clustered_df, clustered = _clustered_df(spark)
+    checkpoints = []
+    cls = type(iso_df)
+    orig = cls.localCheckpoint
+    monkeypatch.setattr(
+        cls, "localCheckpoint",
+        lambda self, *a, **kw: checkpoints.append(1) or orig(self, *a, **kw),
+    )
+    for df, mat, repl_cost, grid in (
+        (iso_df, iso, I.REPL_PAIR_COST, "blocks"),
+        (clustered_df, clustered, 0.0, "cells"),
+    ):
+        monkeypatch.setattr(I, "REPL_PAIR_COST", repl_cost)
+        checkpoints.clear()
+        stats: dict = {}
+        got = {
+            (r["item_id"], r["neighbor_id"], r["rank"], r["score"])
+            for r in I.ivf_pruned_topk_join(
+                df, tau=0.6, k=4, stats_out=stats
+            ).collect()
+        }
+        assert stats["grid"] == grid
+        assert len(checkpoints) == (grid == "cells")
+        assert got == _expected(mat, k=4, tau=0.6), grid
+
+
 def test_adaptive_stats_report_plan_and_fine_geometry(spark, monkeypatch):
     monkeypatch.setattr(I, "ADAPTIVE_CELL_TARGET_ROWS", 20)
     df, _ = _clustered_df(spark)
