@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(mem_bytes: int) -> str:
+    """The driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half the
+    host's RAM, between 1g and 24g.  local[N] runs every task thread in
+    this one heap; at 8g on 32 cores GC stalls tripled query times
+    (interval_overlap_join 2.4s -> 5.5s), and 24g is ample at 128 GiB."""
+    return f"{max(1, min(24, mem_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "crawling_vectordb_llm_spark",
     cpus: int | None = None,
@@ -30,6 +38,9 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -58,12 +69,7 @@ def get_spark(
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # auto-broadcast stays on (10 MB); we additionally hint explicitly
         # in operators where we KNOW the side is small (dims, query sets).
-        # local[32] runs 32 task threads in ONE heap: at 8g the block
-        # manager starts evicting localCheckpoint blocks ~40 queries into
-        # a bench run and GC stalls triple query times (measured 2.4s ->
-        # 5.5s on interval_overlap_join); 24g keeps storage+execution
-        # comfortable on the 128 GiB box while staying far under it
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",

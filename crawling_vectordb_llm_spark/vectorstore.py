@@ -8,11 +8,15 @@ A user of the reference works through the tcvectordb client:
                                                    (main_server.py:40-44)
 
 This class reproduces that contract on parquet + the engine's operators:
-server-side embedding → the batch embed stage; HNSW → IVF artifacts;
-upsert-by-id → merge write; filtered search → predicate pushdown before
-scoring.  Batch-first: `search_by_text` takes a LIST of queries and
-answers them in one Spark job (the reference loops one HTTP call per
-query — SURVEY §4's first deleted bottleneck).
+server-side embedding → the batch embed stage; HNSW → an IVF index whose
+cell is a column of the collection; upsert-by-id → merge write; filtered
+search → predicate pushdown before scoring.  As in the reference, the
+index is part of the write: every version stores each row's
+`centroid_id`, assigned in the pass that embeds the row, so a search
+ranks the snapshot it reads with no side table to join.  Batch-first:
+`search_by_text` takes a LIST of queries and answers them in one Spark
+job (the reference loops one HTTP call per query — SURVEY §4's first
+deleted bottleneck).
 """
 
 from __future__ import annotations
@@ -25,12 +29,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crawling_vectordb_llm_spark import mor
+from crawling_vectordb_llm_spark import versioning as V
 from crawling_vectordb_llm_spark.embedding import hash_encode_batch, make_embed_udf
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
 from crawling_vectordb_llm_spark.operators.ivf import (
-    assign_centroids,
     ivf_search_matrix,
     kmeans_centroids,
+    nearest_centroid,
 )
 from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
 from crawling_vectordb_llm_spark.operators.merge import upsert_by_key
@@ -38,7 +44,10 @@ from crawling_vectordb_llm_spark.operators.merge import upsert_by_key
 
 class VectorCollection:
     """Parquet-backed vector collection with embed-on-write, merge upsert,
-    and (optionally IVF-accelerated) cosine search."""
+    and (optionally IVF-accelerated) cosine search.  Every version has a
+    nullable `centroid_id int` column: null until the first index build,
+    then each write assigns its rows' cells against the stored
+    centroids."""
 
     def __init__(
         self,
@@ -73,132 +82,106 @@ class VectorCollection:
         return os.path.join(self.path, "collection")
 
     @property
-    def _assignment(self) -> str:
-        return os.path.join(self.path, "ivf_assignment")
-
-    @property
     def _centroids_path(self) -> str:
         return os.path.join(self.path, "ivf_centroids")
 
     def exists(self) -> bool:
-        from crawling_vectordb_llm_spark import versioning as V
-
         return V.latest_version(self._table) is not None
 
     def documents(self, version: int | None = None) -> DataFrame:
         """Current (or pinned — time travel) snapshot of the collection."""
-        from crawling_vectordb_llm_spark import mor
-        from crawling_vectordb_llm_spark import versioning as V
-
         if self.write_mode == "mor":
             return mor.mor_read(self.spark, self._table, key="id", version=version)
         return V.read_version(self.spark, self._table, version)
 
     def delta_chain_length(self) -> int:
         """MOR read amplification (0 for cow): deltas a read must merge."""
-        from crawling_vectordb_llm_spark import mor
-
         return mor.delta_chain_length(self._table) if self.write_mode == "mor" else 0
 
     def compact(self) -> int:
         """Fold MOR deltas into a fresh base (or rewrite the cow snapshot
         at a sane file count) as a NEW version — pinned readers untouched."""
-        from crawling_vectordb_llm_spark import mor
-        from crawling_vectordb_llm_spark import versioning as V
-
         if self.write_mode == "mor":
             return mor.mor_compact(self.spark, self._table, key="id")
         return V.compact(self.spark, self._table)
 
     # ------------------------------------------------------------ writes
 
-    def upsert(self, docs: DataFrame, build_index: bool | str = True) -> None:
-        """Embed-on-write + merge-by-id (last writer wins), then optional
-        index artifact rebuild — the TencentVDB.py:63-79 contract, bulk.
-        build_index: True = full rebuild, "incremental" = assign only the
-        ingest delta against the existing centroids (the 100 TB cadence),
-        False = defer.
+    def upsert(self, docs: DataFrame, build_index: bool = True) -> None:
+        """Embed-on-write + merge-by-id (last writer wins) — the
+        TencentVDB.py:63-79 contract, bulk.  The rows written get their
+        cells in the pass that embeds them.
+
+        build_index=True is a full build: centroids are fitted on the
+        merged rows and those rows are written once, with cells, as the
+        one new version (a new base in "mor" mode).  build_index=False
+        assigns only the incoming rows against the stored centroids (the
+        100 TB ingest cadence); an updated id gets its new cell, and
+        before the first build the cells stay null.
 
         The merge reads version N and writes version N+1 directly
         (versioning.py): no staging double-write — the old version stays
         immutable under concurrent readers until the pointer flips, which
         is also what lets the merge read its own input safely."""
-        from crawling_vectordb_llm_spark import versioning as V
-
-        from crawling_vectordb_llm_spark import mor
-
-        incoming = (
-            docs.withColumn("vector", self._embed_udf(F.col("text")))
-            .withColumn("vector", l2_normalize("vector").cast("array<float>"))
-            .dropDuplicates(["id"])
+        exists = self.exists()
+        embedded = docs.withColumn("vector", self._embed_udf(F.col("text"))).withColumn(
+            "vector", l2_normalize("vector").cast("array<float>")
         )
-        if self.write_mode == "mor":
-            if self.exists():
-                mor.mor_upsert(incoming, self._table, key="id")
-            else:
-                mor.mor_write_base(
-                    incoming.repartition(self.shards, "id"), self._table
-                )
-        elif self.exists():
-            merged = upsert_by_key(self.documents(), incoming, key="id")
-            V.versioned_write(merged.repartition(self.shards, "id"), self._table)
+        # a full build assigns every cell after its fit: null until then.
+        # Deduplicating last lets the merge's own dedup fold into this one.
+        incoming = self._with_cells(
+            embedded, None if build_index else self._load_centroids()
+        ).dropDuplicates(["id"])
+        if exists and self.write_mode == "mor" and not build_index:
+            mor.mor_upsert(incoming, self._table, key="id")
+            return
+        rows = upsert_by_key(self.documents(), incoming, key="id") if exists else incoming
+        if build_index:
+            self._build(rows)
         else:
-            V.versioned_write(incoming.repartition(self.shards, "id"), self._table)
-        if build_index == "incremental":
-            self.build_index(incremental=True)
-        elif build_index:
-            self.build_index()
+            self._write_full(rows)
 
     def build_index(self, incremental: bool = False) -> None:
-        """Rebuild the IVF artifacts, or (incremental=True) extend them.
+        """Full build: fit the centroids on the current snapshot, rewrite
+        it with every row's cell as a new version (a new base in "mor"
+        mode, as compact() writes), and persist the centroid table, so a
+        fresh session — or another node — can assign and search without
+        refitting.  incremental=True builds only when no index exists:
+        once one does, every write already assigns its rows' cells."""
+        if not (incremental and os.path.exists(self._centroids_path)):
+            self._build(self.documents())
 
-        Full build: retrain centroids on the current snapshot, assign
-        every vector, overwrite the partitioned assignment, persist the
-        centroid table (so a fresh session — or another node — can search
-        without retraining).
-
-        Incremental (the 100 TB ingest cadence — a full rebuild per crawl
-        batch would re-scan the whole collection the reference-style
-        `build_index=True`-per-upsert way): keep the trained centroids,
-        assign ONLY ids not yet in the assignment, append their cells.
-        Updated ids keep their old cell until the next full build — a
-        bounded recall drift, never a consistency issue (search joins the
-        assignment to the live snapshot and scores current vectors);
-        deleted ids are filtered by that same join.  Falls back to a full
-        build when no index exists yet."""
-        coll = self.documents()
-        if incremental and os.path.exists(self._assignment):
-            cents = self._ensure_centroids()
-            existing = self.spark.read.parquet(self._assignment).select("id")
-            delta = coll.join(existing, "id", "left_anti")
-            assign_centroids(
-                delta, cents, id_col="id", vec_col="vector"
-            ).select("id", "centroid_id").write.mode("append").partitionBy(
-                "centroid_id"
-            ).parquet(self._assignment)
-            return
-        self.centroids = kmeans_centroids(coll, self.n_centroids, vec_col="vector")
-        # the artifact stores ONLY (id, centroid_id): search always joins
-        # back to the live snapshot for vectors (snapshot consistency), so
-        # persisting vectors here would double the collection's footprint
-        # for bytes nothing reads
-        assign_centroids(
-            coll, self.centroids, id_col="id", vec_col="vector"
-        ).select("id", "centroid_id").write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(self._assignment)
+    def _build(self, rows: DataFrame) -> int:
+        """Fit centroids on `rows`, write them with cells as the next full
+        version and persist the centroids.  Returns the new version."""
+        self.centroids = kmeans_centroids(rows, self.n_centroids, vec_col="vector")
+        v = self._write_full(self._with_cells(rows, self.centroids))
         self.spark.createDataFrame(
             [(i, [float(x) for x in self.centroids[i]]) for i in range(len(self.centroids))],
             "centroid_id int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(self._centroids_path)
+        return v
 
-    def _ensure_centroids(self):
-        """Centroid matrix from this session or the persisted table."""
-        import numpy as np
+    def _write_full(self, rows: DataFrame) -> int:
+        """`rows` as the next full version: a cow snapshot or a mor base."""
+        rows = rows.repartition(self.shards, "id")
+        if self.write_mode == "mor":
+            return mor.mor_write_base(rows, self._table)
+        return V.versioned_write(rows, self._table)
 
-        if self.centroids is None:
-            if not os.path.exists(self._centroids_path):
-                raise ValueError("index not built (no persisted centroids)")
+    def _with_cells(self, rows: DataFrame, centroids: np.ndarray | None) -> DataFrame:
+        """`rows` with `centroid_id` set to each vector's nearest centroid,
+        or null when there are no centroids."""
+        cell = (
+            F.lit(None).cast("int") if centroids is None
+            else nearest_centroid(self.spark, centroids)(F.col("vector"))
+        )
+        return rows.withColumn("centroid_id", cell)
+
+    def _load_centroids(self) -> np.ndarray | None:
+        """Centroid matrix from this instance or the persisted table; None
+        before the first index build."""
+        if self.centroids is None and os.path.exists(self._centroids_path):
             rows = sorted(
                 self.spark.read.parquet(self._centroids_path).collect(),
                 key=lambda r: r["centroid_id"],
@@ -208,26 +191,17 @@ class VectorCollection:
 
     def delete(self, ids: list[str], build_index: bool = False) -> int:
         """Delete-by-id (the CRUD op the reference approximates with
-        upsert-overwrite): anti-join against the current snapshot, write
-        the survivors as the next version.  Returns the new version —
-        readers pinned to older versions still see the deleted rows, so
-        a delete is also an auditable event, not a destructive rewrite."""
-        from crawling_vectordb_llm_spark import mor
-        from crawling_vectordb_llm_spark import versioning as V
-
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
-        if self.write_mode == "mor":
-            v = mor.mor_delete(ids_df, self._table, key="id")
-        else:
-            survivors = self.documents().join(
-                F.broadcast(ids_df), "id", "left_anti"
-            )
-            v = V.versioned_write(
-                survivors.repartition(self.shards, "id"), self._table
-            )
-        if build_index:
-            self.build_index()
-        return v
+        upsert-overwrite): filter the ids out of the current snapshot and
+        write the survivors as the next version (a delete-key delta in
+        "mor" mode; with build_index=True, a full build of the survivors).
+        Returns the new version — readers pinned to older versions still
+        see the deleted rows, so a delete is also an auditable event, not
+        a destructive rewrite."""
+        if self.write_mode == "mor" and not build_index:
+            ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
+            return mor.mor_delete(ids_df, self._table, key="id")
+        survivors = self.documents().where(~F.col("id").isin(ids))
+        return self._build(survivors) if build_index else self._write_full(survivors)
 
     # ------------------------------------------------------------ search
 
@@ -241,7 +215,10 @@ class VectorCollection:
     ) -> DataFrame:
         """Batch searchByText: embed every query text, cosine top-`limit`
         per query, optional SQL predicate applied BEFORE scoring (J3).
-        Returns (query_id, id, rank, score) — query_id indexes `texts`."""
+        use_index=True probes the `n_probe` nearest cells of the snapshot
+        it ranks whenever centroids exist, and searches exactly before
+        the first index build.  Returns (query_id, id, rank, score) —
+        query_id indexes `texts`."""
         # the queries are encoded here, on the driver: the matrix entry
         # points take them as they are, with no DataFrame round trip
         qids = np.arange(len(texts), dtype=np.int64)
@@ -249,31 +226,14 @@ class VectorCollection:
         corpus = self.documents()
         if filter:
             corpus = corpus.where(filter)
-        if use_index and os.path.exists(self._assignment):
-            self._ensure_centroids()
-            # Always pin the (possibly stale) index assignment to the CURRENT
-            # snapshot: after delete()/upsert() with build_index=False the
-            # assignment still carries dropped ids and pre-update vectors —
-            # scoring it as-is would return deleted rows (violating the J4
-            # snapshot-read contract) or rank by stale embeddings.  Joining
-            # on id keeps only live rows AND scores with the snapshot's
-            # current vector; rows inserted since the last build_index are a
-            # documented recall gap (they have no cell yet), never a
-            # consistency violation.
-            assigned = (
-                self.spark.read.parquet(self._assignment)
-                .select("id", "centroid_id")
-                .join(corpus.select("id", "vector"), "id")
-            )
-            hits = ivf_search_matrix(
-                qids, qmat, assigned, self.centroids, k=limit, n_probe=n_probe,
+        if use_index and self._load_centroids() is not None:
+            return ivf_search_matrix(
+                qids, qmat, corpus, self.centroids, k=limit, n_probe=n_probe,
                 corpus_id="id", corpus_vec="vector",
             )
-        else:
-            hits = knn_topk_matrix(
-                qids, qmat, corpus, k=limit, corpus_id="id", corpus_vec="vector"
-            )
-        return hits
+        return knn_topk_matrix(
+            qids, qmat, corpus, k=limit, corpus_id="id", corpus_vec="vector"
+        )
 
     def search_results_with_docs(self, hits: DataFrame) -> DataFrame:
         """Join hits back to full documents (the reference returns whole

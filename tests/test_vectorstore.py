@@ -12,7 +12,11 @@ from crawling_vectordb_llm_spark.vectorstore import VectorCollection
 from .conftest import SF_SMALL
 
 
-def _fresh(spark, tmp_path, **kw):
+#: the indexed-search tests run under both write modes
+MODES = ("cow", "mor")
+
+
+def _fresh(spark, tmp_path, write_mode="cow", **kw):
     docs = (
         read_table(spark, SF_SMALL, "documents")
         .where(F.col("doc_id") < 100)
@@ -22,7 +26,9 @@ def _fresh(spark, tmp_path, **kw):
             "lang",
         )
     )
-    coll = VectorCollection(spark, str(tmp_path / "coll"), dim=64, **kw)
+    coll = VectorCollection(
+        spark, str(tmp_path / write_mode), dim=64, write_mode=write_mode, **kw
+    )
     coll.upsert(docs, build_index=True)
     return coll, docs
 
@@ -63,18 +69,21 @@ def test_filtered_search(spark, tmp_path):
 
 
 def test_indexed_search_matches_exact_mostly(spark, tmp_path):
-    coll, docs = _fresh(spark, tmp_path, n_centroids=8)
-    texts = [r["text"] for r in docs.limit(5).collect()]
-    exact = {
-        (r["query_id"], r["id"])
-        for r in coll.search_by_text(texts, limit=5).collect()
-    }
-    approx = {
-        (r["query_id"], r["id"])
-        for r in coll.search_by_text(texts, limit=5, use_index=True, n_probe=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, recall
+    for mode in MODES:
+        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=8)
+        texts = [r["text"] for r in docs.limit(5).collect()]
+        exact = {
+            (r["query_id"], r["id"])
+            for r in coll.search_by_text(texts, limit=5).collect()
+        }
+        approx = {
+            (r["query_id"], r["id"])
+            for r in coll.search_by_text(
+                texts, limit=5, use_index=True, n_probe=4
+            ).collect()
+        }
+        recall = len(exact & approx) / len(exact)
+        assert recall >= 0.6, (mode, recall)
 
 
 def test_search_results_with_docs(spark, tmp_path):
@@ -104,68 +113,127 @@ def test_delete_by_id_versions_and_preserves_old_snapshot(spark, tmp_path):
 
 def test_indexed_search_excludes_deleted_ids(spark, tmp_path):
     """ADVICE r1 regression: after delete() (default build_index=False) an
-    UNFILTERED indexed search must not surface the deleted ids — the stale
-    ivf_assignment must be pinned to the current snapshot on read."""
-    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
-    texts = [r["text"] for r in docs.limit(5).collect()]
-    deleted = ["https://x/0", "https://x/3"]
-    coll.delete(deleted)  # build_index stays False: assignment is now stale
-    hits = coll.search_by_text(texts, limit=5, use_index=True, n_probe=4)
-    ids = {r["id"] for r in hits.collect()}
-    assert ids and not (ids & set(deleted))
+    UNFILTERED indexed search must not surface the deleted ids — the
+    search ranks the post-delete snapshot itself."""
+    for mode in MODES:
+        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
+        texts = [r["text"] for r in docs.limit(5).collect()]
+        deleted = ["https://x/0", "https://x/3"]
+        coll.delete(deleted)  # build_index stays False: no refit, no rewrite
+        hits = coll.search_by_text(texts, limit=5, use_index=True, n_probe=4)
+        ids = {r["id"] for r in hits.collect()}
+        assert ids and not (ids & set(deleted)), mode
 
 
 def test_indexed_search_scores_current_vectors_after_upsert(spark, tmp_path):
     """A doc re-upserted with new text (index NOT rebuilt) must be scored by
-    its current embedding, not the stale one stored in the assignment."""
-    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
-    new_text = "entirely different replacement content xyz"
-    update = spark.createDataFrame(
-        [("https://x/7", new_text, "en")], "id string, text string, lang string"
-    )
-    coll.upsert(update, build_index=False)
-    # exact search for the OLD text must not return a perfect 1.0 for x/7
-    old_text = docs.where(F.col("id") == "https://x/7").first()["text"]
-    hits = coll.search_by_text([old_text], limit=100, use_index=True, n_probe=4)
-    x7 = [r for r in hits.collect() if r["id"] == "https://x/7"]
-    assert all(abs(r["score"] - 1.0) > 1e-6 for r in x7)
+    its current embedding, not the one it had before the update."""
+    for mode in MODES:
+        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
+        new_text = "entirely different replacement content xyz"
+        update = spark.createDataFrame(
+            [("https://x/7", new_text, "en")], "id string, text string, lang string"
+        )
+        coll.upsert(update, build_index=False)
+        # indexed search for the OLD text must not return a perfect 1.0 for x/7
+        old_text = docs.where(F.col("id") == "https://x/7").first()["text"]
+        hits = coll.search_by_text([old_text], limit=100, use_index=True, n_probe=4)
+        x7 = [r for r in hits.collect() if r["id"] == "https://x/7"]
+        assert all(abs(r["score"] - 1.0) > 1e-6 for r in x7), mode
 
 
 def test_incremental_index_update_finds_new_docs(spark, tmp_path):
-    """upsert(build_index='incremental'): the ingest delta is assigned to
-    the EXISTING centroids and appended — new docs become indexed-search
-    visible without a full rebuild, and the centroid table is untouched."""
+    """upsert(build_index=False) on an indexed collection assigns the
+    ingest rows to the EXISTING centroids as it writes them — new docs
+    become indexed-search visible without a full rebuild, and the
+    centroid table is untouched."""
     import numpy as np
 
-    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
-    cents_before = coll._ensure_centroids().copy()
+    for mode in MODES:
+        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
+        cents_before = coll._load_centroids().copy()
 
-    new = spark.createDataFrame(
-        [("https://y/1", "totally novel incremental document body", "en")],
-        "id string, text string, lang string",
-    )
-    coll.upsert(new, build_index="incremental")
-    assert np.array_equal(coll._ensure_centroids(), cents_before)
+        new = spark.createDataFrame(
+            [("https://y/1", "totally novel incremental document body", "en")],
+            "id string, text string, lang string",
+        )
+        coll.upsert(new, build_index=False)
+        assert np.array_equal(coll._load_centroids(), cents_before)
 
-    hits = coll.search_by_text(
-        ["totally novel incremental document body"], limit=3,
-        use_index=True, n_probe=4,
-    ).collect()
-    top = [r for r in hits if r["rank"] == 1][0]
-    assert top["id"] == "https://y/1"
-    assert abs(top["score"] - 1.0) < 1e-6
+        hits = coll.search_by_text(
+            ["totally novel incremental document body"], limit=3,
+            use_index=True, n_probe=4,
+        ).collect()
+        top = [r for r in hits if r["rank"] == 1][0]
+        assert top["id"] == "https://y/1", mode
+        assert abs(top["score"] - 1.0) < 1e-6
 
 
 def test_indexed_search_from_fresh_session_instance(spark, tmp_path):
     """Centroids persist with the index: a NEW VectorCollection object on
     the same path answers indexed searches without retraining (the
     cross-session / cross-node story)."""
-    from crawling_vectordb_llm_spark.vectorstore import VectorCollection
+    for mode in MODES:
+        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
+        target = docs.where(F.col("id") == "https://x/9").first()
+
+        fresh = VectorCollection(
+            spark, coll.path, dim=64, n_centroids=4, write_mode=mode
+        )
+        assert fresh.centroids is None
+        hits = fresh.search_by_text(
+            [target["text"]], limit=3, use_index=True
+        ).collect()
+        assert [r for r in hits if r["rank"] == 1][0]["id"] == "https://x/9", mode
+
+
+def test_updated_doc_is_found_in_its_new_cell(spark, tmp_path):
+    """An update without a rebuild moves the doc to the cell of its new
+    vector: probing that one cell finds it (a cell kept from before the
+    update would hide it)."""
+    coll, docs = _fresh(spark, tmp_path, n_centroids=8)
+
+    def cell_of_x7():
+        return coll.documents().where("id = 'https://x/7'").first()["centroid_id"]
+
+    old_cell = cell_of_x7()
+    new_text = "zebra quantum harbor"
+    update = spark.createDataFrame(
+        [("https://x/7", new_text, "en")], "id string, text string, lang string"
+    )
+    coll.upsert(update, build_index=False)
+    assert cell_of_x7() != old_cell
+    hits = coll.search_by_text([new_text], limit=1, use_index=True, n_probe=1).collect()
+    assert hits[0]["id"] == "https://x/7"
+    assert abs(hits[0]["score"] - 1.0) < 1e-6
+
+
+def test_fresh_instance_upsert_assigns_stored_cells(spark, tmp_path):
+    """A new VectorCollection on an indexed path loads the persisted
+    centroids for its first write, so its rows are indexed at once."""
+    coll, _ = _fresh(spark, tmp_path, n_centroids=4)
+    fresh = VectorCollection(spark, coll.path, dim=64, n_centroids=4)
+    text = "a document written by a second collection instance"
+    fresh.upsert(
+        spark.createDataFrame(
+            [("https://z/1", text, "en")], "id string, text string, lang string"
+        ),
+        build_index=False,
+    )
+    hits = fresh.search_by_text([text], limit=3, use_index=True).collect()
+    assert [r for r in hits if r["rank"] == 1][0]["id"] == "https://z/1"
+
+
+def test_indexed_search_plan_has_no_join(spark, tmp_path):
+    """The cell is a column of the collection: an indexed search scans
+    the snapshot alone — no join in the executed plan and no side table
+    on disk."""
+    import os
 
     coll, docs = _fresh(spark, tmp_path, n_centroids=4)
-    target = docs.where(F.col("id") == "https://x/9").first()
-
-    fresh = VectorCollection(spark, str(tmp_path / "coll"), dim=64, n_centroids=4)
-    assert fresh.centroids is None
-    hits = fresh.search_by_text([target["text"]], limit=3, use_index=True).collect()
-    assert [r for r in hits if r["rank"] == 1][0]["id"] == "https://x/9"
+    hits = coll.search_by_text([docs.first()["text"]], limit=3, use_index=True)
+    assert len(hits.collect()) == 3
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert "centroid_id" in plan  # the indexed path ran
+    assert "Join" not in plan, plan
+    assert not os.path.exists(os.path.join(coll.path, "ivf_assignment"))
