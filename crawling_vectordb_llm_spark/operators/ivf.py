@@ -35,6 +35,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -477,54 +478,30 @@ def kmeans_centroids_hier(
     return fine, parent_of, coarse
 
 
-def _nearest_cells(vectors, centroids: np.ndarray) -> np.ndarray:
-    """Nearest (cosine) centroid of each vector, as int32 cell ids."""
-    mat = np.array(list(vectors), dtype=np.float64).reshape(-1, centroids.shape[1])
-    return np.argmax(_normalize(mat) @ centroids.T, axis=1).astype(np.int32)
-
-
-def nearest_centroid(spark, centroids: np.ndarray):
-    """A pandas UDF mapping a vector column to its nearest centroid id,
-    for callers that keep every other column of their rows."""
-    bc = spark.sparkContext.broadcast(centroids)
-
-    @F.pandas_udf("int")
-    def _cell(vectors: pd.Series) -> pd.Series:
-        return pd.Series(_nearest_cells(vectors, bc.value))
-
-    return _cell
-
-
 def assign_centroids(
     corpus: DataFrame,
     centroids: np.ndarray,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """One GEMM pass per partition: nearest (cosine) centroid per vector.
-    Not a select over `nearest_centroid`: that form measured 2.8 -> 5.1 s
-    of semantic_dedup executor time on 2000 vectors (4 cores)."""
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
+    """`corpus` with `centroid_id` (the nearest cosine centroid of each
+    vector) set on every row: one GEMM per Arrow batch, over the vector
+    column alone, so a plan that reads no cell prunes the pass.
+    Callers select the columns they need."""
+    bc = corpus.sparkSession.sparkContext.broadcast(centroids)
 
-    def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf("int")
+    def _cell(vecs: pa.Array) -> pa.Array:
         cents = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "centroid_id": _nearest_cells(pdf[vec_col], cents),
-                }
-            )
+        flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+        mat = _normalize(flat.reshape(len(vecs), cents.shape[1]))
+        return pa.array(np.argmax(mat @ cents.T, axis=1).astype(np.int32))
 
-    vec_type = corpus.schema[vec_col].dataType.simpleString()
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    return corpus.select(id_col, vec_col).mapInPandas(
-        _assign, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, centroid_id int"
-    )
+    # The cell is deterministic, but a join on it infers an
+    # isnotnull(centroid_id) filter, and the optimizer pushes that filter
+    # below the projection with a copy of the UDF: every batch ran the
+    # GEMM twice (semantic_dedup's plan had 4 UDF passes instead of 2).
+    # A nondeterministic UDF is not copied.
+    return corpus.withColumn("centroid_id", _cell.asNondeterministic()(F.col(vec_col)))
 
 
 def ivf_search(
@@ -688,7 +665,7 @@ def ivf_topk(
     vec_col = cols.get("corpus_vec", "embedding")
     id_col = cols.get("corpus_id", "vec_id")
     centroids = kmeans_centroids(corpus, n_centroids, vec_col)
-    assigned = assign_centroids(corpus, centroids, id_col, vec_col)
+    assigned = assign_centroids(corpus.select(id_col, vec_col), centroids, vec_col)
     return ivf_search(queries, assigned, centroids, k, n_probe, **cols)
 
 

@@ -297,7 +297,7 @@ def ivfpq_topk(
     cents = kmeans_centroids(
         corpus, n_centroids, corpus_vec, seed=seed, sample_out=fit_sample
     )
-    assigned = assign_centroids(corpus, cents, corpus_id, corpus_vec)
+    assigned = assign_centroids(corpus.select(corpus_id, corpus_vec), cents, corpus_vec)
 
     # --- train PQ on residuals (seeded random driver sample) ---
     from crawling_vectordb_llm_spark.operators.ivf import bounded_random_sample

@@ -88,8 +88,9 @@ def semantic_dedup(
     kept set of the CELL, not the whole centroid.
     """
     assigned = assign_centroids(
-        corpus, kmeans_centroids(corpus, n_clusters, vec_col=vec_col, seed=seed),
-        id_col=id_col, vec_col=vec_col,
+        corpus.select(id_col, vec_col),
+        kmeans_centroids(corpus, n_clusters, vec_col=vec_col, seed=seed),
+        vec_col=vec_col,
     )
     # bound the per-task quadratic: deterministic sub-cell split of any
     # cluster larger than max_cluster.  The per-cluster counts are k rows —

@@ -83,7 +83,7 @@ def build_index(
 
     assigned_path = os.path.join(out_dir, "ivf_assignment")
     assign_centroids(
-        collection, centroids, id_col="doc_id", vec_col="vector"
+        collection.select("doc_id", "vector"), centroids, vec_col="vector"
     ).write.mode("overwrite").partitionBy("centroid_id").parquet(assigned_path)
 
     bands_path = os.path.join(out_dir, "lsh_band_rows")

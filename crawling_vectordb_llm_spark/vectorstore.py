@@ -34,9 +34,9 @@ from crawling_vectordb_llm_spark import versioning as V
 from crawling_vectordb_llm_spark.embedding import hash_encode_batch, make_embed_udf
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
 from crawling_vectordb_llm_spark.operators.ivf import (
+    assign_centroids,
     ivf_search_matrix,
     kmeans_centroids,
-    nearest_centroid,
 )
 from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
 from crawling_vectordb_llm_spark.operators.merge import upsert_by_key
@@ -117,13 +117,15 @@ class VectorCollection:
         one new version (a new base in "mor" mode).  build_index=False
         assigns only the incoming rows against the stored centroids (the
         100 TB ingest cadence); an updated id gets its new cell, and
-        before the first build the cells stay null.
+        before the first build the cells stay null.  A collection written
+        before the cell was a column raises ValueError, before writing,
+        until build_index() adds the column.
 
         The merge reads version N and writes version N+1 directly
         (versioning.py): no staging double-write — the old version stays
         immutable under concurrent readers until the pointer flips, which
         is also what lets the merge read its own input safely."""
-        exists = self.exists()
+        current = self._with_cell_column(self.documents()) if self.exists() else None
         embedded = docs.withColumn("vector", self._embed_udf(F.col("text"))).withColumn(
             "vector", l2_normalize("vector").cast("array<float>")
         )
@@ -132,10 +134,10 @@ class VectorCollection:
         incoming = self._with_cells(
             embedded, None if build_index else self._load_centroids()
         ).dropDuplicates(["id"])
-        if exists and self.write_mode == "mor" and not build_index:
+        if current is not None and self.write_mode == "mor" and not build_index:
             mor.mor_upsert(incoming, self._table, key="id")
             return
-        rows = upsert_by_key(self.documents(), incoming, key="id") if exists else incoming
+        rows = incoming if current is None else upsert_by_key(current, incoming, key="id")
         if build_index:
             self._build(rows)
         else:
@@ -153,9 +155,16 @@ class VectorCollection:
 
     def _build(self, rows: DataFrame) -> int:
         """Fit centroids on `rows`, write them with cells as the next full
-        version and persist the centroids.  Returns the new version."""
-        self.centroids = kmeans_centroids(rows, self.n_centroids, vec_col="vector")
-        v = self._write_full(self._with_cells(rows, self.centroids))
+        version and persist the centroids.  Returns the new version.
+        `rows` is cached across the fit and the write, so the plan under
+        it (an upsert's embedding and merge) runs once and the centroids
+        are fitted on the very vectors that are written."""
+        rows = rows.persist()
+        try:
+            self.centroids = kmeans_centroids(rows, self.n_centroids, vec_col="vector")
+            v = self._write_full(self._with_cells(rows, self.centroids))
+        finally:
+            rows.unpersist()
         self.spark.createDataFrame(
             [(i, [float(x) for x in self.centroids[i]]) for i in range(len(self.centroids))],
             "centroid_id int, centroid array<double>",
@@ -172,11 +181,22 @@ class VectorCollection:
     def _with_cells(self, rows: DataFrame, centroids: np.ndarray | None) -> DataFrame:
         """`rows` with `centroid_id` set to each vector's nearest centroid,
         or null when there are no centroids."""
-        cell = (
-            F.lit(None).cast("int") if centroids is None
-            else nearest_centroid(self.spark, centroids)(F.col("vector"))
-        )
-        return rows.withColumn("centroid_id", cell)
+        if centroids is None:
+            return rows.withColumn("centroid_id", F.lit(None).cast("int"))
+        return assign_centroids(rows, centroids, vec_col="vector")
+
+    def _with_cell_column(self, snapshot: DataFrame) -> DataFrame:
+        """`snapshot`, checked to have the `centroid_id` column: a
+        collection written before the cell was a column has none, and a
+        write or an indexed search on it would fail or, in "mor" mode,
+        leave a version that no longer reads."""
+        if "centroid_id" not in snapshot.columns:
+            raise ValueError(
+                f"{self.path} has no centroid_id column (it was written before "
+                "the IVF cell was a column of the collection): run build_index() "
+                "on it once"
+            )
+        return snapshot
 
     def _load_centroids(self) -> np.ndarray | None:
         """Centroid matrix from this instance or the persisted table; None
@@ -191,16 +211,16 @@ class VectorCollection:
 
     def delete(self, ids: list[str], build_index: bool = False) -> int:
         """Delete-by-id (the CRUD op the reference approximates with
-        upsert-overwrite): filter the ids out of the current snapshot and
-        write the survivors as the next version (a delete-key delta in
+        upsert-overwrite): anti-join the ids out of the current snapshot
+        and write the survivors as the next version (a delete-key delta in
         "mor" mode; with build_index=True, a full build of the survivors).
         Returns the new version — readers pinned to older versions still
         see the deleted rows, so a delete is also an auditable event, not
         a destructive rewrite."""
+        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
         if self.write_mode == "mor" and not build_index:
-            ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
             return mor.mor_delete(ids_df, self._table, key="id")
-        survivors = self.documents().where(~F.col("id").isin(ids))
+        survivors = self.documents().join(F.broadcast(ids_df), "id", "left_anti")
         return self._build(survivors) if build_index else self._write_full(survivors)
 
     # ------------------------------------------------------------ search
@@ -228,7 +248,7 @@ class VectorCollection:
             corpus = corpus.where(filter)
         if use_index and self._load_centroids() is not None:
             return ivf_search_matrix(
-                qids, qmat, corpus, self.centroids, k=limit, n_probe=n_probe,
+                qids, qmat, self._with_cell_column(corpus), self.centroids, k=limit, n_probe=n_probe,
                 corpus_id="id", corpus_vec="vector",
             )
         return knn_topk_matrix(

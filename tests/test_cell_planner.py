@@ -195,7 +195,7 @@ def test_kmeanspp_covers_separated_clusters(spark):
     # sizing regime); d=48 keeps random centers near-orthogonal
     df = clustered_embeddings(spark, 1_200, dim=48, k=24, sigma=0.10, seed=5)
     cents = I.kmeans_centroids(df, 48, "embedding", seed=42)
-    assigned = I.assign_centroids(df, cents, "vec_id", "embedding")
+    assigned = I.assign_centroids(df, cents, "embedding")
     # max angle to assigned centroid across the whole corpus
     rows = assigned.collect()
     worst = 0.0

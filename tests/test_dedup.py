@@ -383,7 +383,7 @@ def test_ivf_pruned_threshold_join_prunes_clustered_data(spark):
     # Verify via the physical pair table the operator builds: re-run the
     # driver-side prune logic on the same assignment.
     cents = I.kmeans_centroids(df, 8, "embedding", seed=1)
-    assigned = I.assign_centroids(df, cents, "vec_id", "embedding")
+    assigned = I.assign_centroids(df, cents, "embedding")
     theta = np.arccos(np.clip(I._normalize(cents) @ I._normalize(cents).T, -1, 1))
     # member angles per cell
     rows2 = assigned.collect()

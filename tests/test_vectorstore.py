@@ -4,6 +4,7 @@ indexed), build_index."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.catalog import read_table
@@ -237,3 +238,63 @@ def test_indexed_search_plan_has_no_join(spark, tmp_path):
     assert "centroid_id" in plan  # the indexed path ran
     assert "Join" not in plan, plan
     assert not os.path.exists(os.path.join(coll.path, "ivf_assignment"))
+
+
+def test_upsert_embeds_each_doc_once(spark, tmp_path):
+    """An upsert encodes each incoming doc once: a full build fits the
+    centroids and writes the rows from one evaluation of the embedding,
+    and the merge's id-only anti-join side runs no embedding."""
+    from crawling_vectordb_llm_spark.embedding import hash_encode_batch
+
+    encoded = spark.sparkContext.accumulator(0)
+
+    def counting_encoder(texts, dim):
+        encoded.add(len(texts))
+        return hash_encode_batch(texts, dim)
+
+    coll = VectorCollection(
+        spark, str(tmp_path / "c"), dim=16, n_centroids=4, encode_batch=counting_encoder
+    )
+    docs = spark.createDataFrame(
+        [(f"u{i}", f"text number {i} alpha beta") for i in range(50)],
+        "id string, text string",
+    )
+    coll.upsert(docs, build_index=True)
+    assert encoded.value == 50
+    coll.upsert(docs.where(F.col("id").startswith("u1")), build_index=True)  # 11 docs
+    assert encoded.value == 61
+    coll.upsert(docs.where(F.col("id").startswith("u2")), build_index=False)
+    assert encoded.value == 72
+    assert coll.documents().count() == 50
+
+
+def test_collection_without_cell_column_is_refused_until_rebuilt(spark, tmp_path):
+    """A collection written before the cell was a column has no
+    `centroid_id`: upsert and indexed search raise ValueError before
+    writing anything, the collection still reads, and build_index()
+    adds the column."""
+    from crawling_vectordb_llm_spark import mor
+    from crawling_vectordb_llm_spark import versioning as V
+
+    for mode in MODES:
+        coll, _ = _fresh(spark, tmp_path, mode, n_centroids=4)
+        # the old layout: a full version without the column, beside the
+        # persisted centroid table
+        write = mor.mor_write_base if mode == "mor" else V.versioned_write
+        old = coll.documents().drop("centroid_id").repartition(coll.shards, "id")
+        version = write(old, coll._table)
+        text = "a late arrival about harbor zebras"
+        new = spark.createDataFrame(
+            [("https://y/1", text, "en")], "id string, text string, lang string"
+        )
+        with pytest.raises(ValueError, match="build_index"):
+            coll.upsert(new, build_index=False)
+        with pytest.raises(ValueError, match="build_index"):
+            coll.search_by_text([text], use_index=True)
+        assert V.latest_version(coll._table) == version
+        assert coll.documents().count() == 100
+
+        coll.build_index()
+        coll.upsert(new, build_index=False)
+        hits = coll.search_by_text([text], limit=1, use_index=True).collect()
+        assert hits[0]["id"] == "https://y/1", mode

@@ -65,7 +65,7 @@ def main(n: int = 40_000) -> None:
     # one-time index build (amortized across every probe at scale)
     t_fit, centroids = timed(lambda: I.kmeans_centroids(emb, n_cells, "embedding"))
     t_assign, assigned = timed(
-        lambda: I.assign_centroids(emb, centroids, "vec_id", "embedding")
+        lambda: I.assign_centroids(emb, centroids, "embedding")
         .localCheckpoint()
     )
     print(f"index build (once per ingest): kmeans fit {t_fit:.2f}s, "

@@ -187,7 +187,7 @@ def main(n: int = 2_000_000) -> None:
         t_fit, centroids = timed(
             lambda: I.kmeans_centroids(emb, n_cells, "embedding")
         )
-        assigned = I.assign_centroids(emb, centroids, "vec_id", "embedding")
+        assigned = I.assign_centroids(emb, centroids, "embedding")
         part_path = os.path.join(base, "ivf_assignment")
         t_write, _ = timed(
             lambda: assigned.repartition(n_cells, "centroid_id")
