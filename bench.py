@@ -7,7 +7,9 @@ Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 warm time is reported per query — single-shot numbers on a box with
 external load spikes are 3-10x noisy (VERDICT r1), and a median of 3
 makes round-over-round regression comparisons trustworthy.  Cold JVM
-startup is excluded for the same steady-state reason.
+startup is excluded for the same steady-state reason.  BENCH_FULL also
+records how many classes each warm rep compiled: a warm rep should
+compile none, so a nonzero count is a defect to chase.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from crawling_vectordb_llm_spark.session import get_spark
+from crawling_vectordb_llm_spark.session import codegen_compiles, get_spark
 from crawling_vectordb_llm_spark.suite import QUERIES
 
 # representative headline set: flagship RAG, both kNN paths, similarity
@@ -101,17 +103,20 @@ HEADLINE = [
 ]
 
 
-def run_query(fn, spark, sf_dir: str) -> float:
+def run_query(fn, spark, sf_dir: str) -> tuple[float, int]:
+    """One rep: (seconds, classes codegen compiled during it)."""
+    c0 = codegen_compiles(spark)
     t0 = time.time()
     df = fn(spark, sf_dir)
     n = df.count()
     took = time.time() - t0
+    compiled = codegen_compiles(spark) - c0
     assert n >= 0
     # every rep starts from an empty cache: a warm rep must not read what
     # the previous rep of the same query persisted
     spark.catalog.clearCache()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    return took
+    return took, compiled
 
 
 def main() -> None:
@@ -123,13 +128,16 @@ def main() -> None:
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     results: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}
     import gc
 
     for name in HEADLINE:
         fn = QUERIES[name]
         run_query(fn, spark, sf_dir)  # cold: plan compile / JIT warm-up
-        warm = sorted(run_query(fn, spark, sf_dir) for _ in range(n_runs))
+        reps = [run_query(fn, spark, sf_dir) for _ in range(n_runs)]
+        warm = sorted(t for t, _ in reps)
         results[name] = round(warm[len(warm) // 2], 3)  # median
+        compiles[name] = [c for _, c in reps]
         # reap blocks pinned by this query's localCheckpoints: each
         # run_query builds a fresh DataFrame, so prior runs' checkpointed
         # RDDs are pure block-manager ballast that turns into GC stalls
@@ -219,7 +227,7 @@ def main() -> None:
     )
     try:
         with open(full_path, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
+            json.dump(full_artifact(payload, compiles), f, indent=1, sort_keys=True)
             f.write("\n")
     except OSError:
         pass  # read-only checkout must not sink the bench
@@ -229,6 +237,14 @@ def main() -> None:
     # headline line and the round lost its official comparison).  Pinned
     # by tests/test_bench_contract.py against emit_headline_line.
     emit_headline_line(payload)
+
+
+def full_artifact(payload: dict, warm_compiles: dict[str, list[int]]) -> dict:
+    """BENCH_FULL's content: the headline payload plus each headline
+    query's codegen compiles per warm rep.  The per-query lists stay out
+    of the one-line JSON so they cannot push its head out of a tail
+    capture."""
+    return {**payload, "warm_codegen_compiles": warm_compiles}
 
 
 def emit_headline_line(payload: dict) -> None:

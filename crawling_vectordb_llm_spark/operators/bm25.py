@@ -14,9 +14,9 @@ A. one small aggregation over `posexplode_outer(hit)` yields `df` per
    the exact `decimal(22,6)` sum of `dl` for `avgdl`;
 B. the documents with a hit explode `hit`, take
    `tf = dl - size(array_remove(words, term))`, broadcast-join the
-   `(query_id, term, df)` literal relation and sum the per-term scores per
-   (query, doc) behind one exchange on query_id, which the per-query rank
-   window reuses.
+   `(query_id, term, df, n, avgdl)` literal relation and sum the per-term
+   scores per (query, doc) behind one exchange on query_id, which the
+   per-query rank window reuses.
 
 Shuffle volume is therefore bounded by (documents with a hit) x (query
 terms they contain), not by the corpus token stream; `dl` rides the
@@ -151,9 +151,16 @@ def _bm25(
     n_docs, avgdl = total["n"], total["a"]
     if not dfreq:
         return spark.createDataFrame([], out_schema)
+    # n and avgdl ride as columns of the broadcast pairs, not literals:
+    # Spark inlines a double literal into the generated Java, so a corpus
+    # that grew would compile new classes on every call
     qt = spark.createDataFrame(
-        [(q, t, dfreq[t]) for q, t in pairs if t in dfreq],
-        f"query_id {qid_t}, term string, df long",
+        [
+            (q, t, dfreq[t], float(n_docs), float(avgdl))
+            for q, t in pairs
+            if t in dfreq
+        ],
+        f"query_id {qid_t}, term string, df long, n double, avgdl double",
     )
 
     # B: score only the documents with a hit (explode drops the rest)
@@ -166,9 +173,9 @@ def _bm25(
             (F.col("dl") - F.size(F.array_remove("words", F.col("term")))).alias("tf"),
         )
     )
-    idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     tf_part = (F.col("tf") * (K1 + 1)) / (
-        F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.lit(float(avgdl)))
+        F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))
     )
     partial = F.broadcast(qt).join(tf, "term").select(
         "query_id",

@@ -163,6 +163,7 @@ def bounded_random_sample(
     sample_limit: int,
     seed: int,
     n_out: "dict | None" = None,
+    n: "int | None" = None,
 ) -> list:
     """Collect a seeded RANDOM sample of up to sample_limit rows — the
     shared trainer-sampling primitive for every codebook/centroid fit.
@@ -185,7 +186,9 @@ def bounded_random_sample(
     Cost note: corpora at or under sample_limit (every training set is,
     by definition of the limit) pay exactly ONE collect — the limit+1
     probe detects that everything fit and no count/sample jobs run.  Only
-    a genuinely larger corpus pays the count + sampled second pass."""
+    a genuinely larger corpus pays the count + sampled second pass.  A
+    caller that already counted the corpus passes that count as `n`; above
+    the limit, the probe and the count are then skipped."""
     import random
 
     def _pinned(rows: list) -> list:
@@ -201,12 +204,13 @@ def bounded_random_sample(
     # over-cap branch counts anyway — expose it through n_out so callers
     # that need n for sizing (pq_knn_rerank's adaptive shortlist) don't
     # pay a separate count job for a number this call already knows.
-    rows = df.select(*cols).limit(sample_limit + 1).collect()
-    if len(rows) <= sample_limit:
-        if n_out is not None:
-            n_out["n"] = len(rows)
-        return _pinned(rows)
-    n = df.count()
+    if n is None or n <= sample_limit:
+        rows = df.select(*cols).limit(sample_limit + 1).collect()
+        if len(rows) <= sample_limit:
+            if n_out is not None:
+                n_out["n"] = len(rows)
+            return _pinned(rows)
+        n = df.count()
     if n_out is not None:
         n_out["n"] = n
     fraction = min(1.0, 1.2 * sample_limit / n)
@@ -291,6 +295,7 @@ def kmeans_centroids(
     max_iter: int = 15,
     sample_limit: int = 200_000,
     sample_out: "dict | None" = None,
+    n: "int | None" = None,
 ) -> np.ndarray:
     """Centroid fit on a bounded sample — standard IVF practice at any
     scale (FAISS trains on ~max(10k, 50*k) points): one distributed pass
@@ -307,7 +312,8 @@ def kmeans_centroids(
     cap — the round-6 three-point bench showed the 200k-or-corpus
     sample made every kmeans-built query's train term grow linearly
     with n for zero recall benefit (r6 slope fits; recall gates
-    re-verified at all scales after the cap)."""
+    re-verified at all scales after the cap).  `n`, when the caller has
+    already counted the corpus, spares the sampler its own count."""
     sample_limit = min(sample_limit, max(10_000, 256 * n_centroids))
     # sample_out = {x, n} exposes the normalized training matrix (one
     # row per sampled vector, in bounded_random_sample's pinned order) and
@@ -319,7 +325,7 @@ def kmeans_centroids(
     # the consumer samples exactly as before.
     nstat: dict = {}
     rows = bounded_random_sample(
-        corpus, [vec_col], sample_limit, seed, n_out=nstat
+        corpus, [vec_col], sample_limit, seed, n_out=nstat, n=n
     )
     x = _normalize(np.array([r[0] for r in rows], dtype=np.float64))
     if sample_out is not None:
@@ -408,7 +414,7 @@ def kmeans_centroids_hier(
         coarse_k = max(ADAPTIVE_CELL_FLOOR, int(np.ceil(np.sqrt(k))))
     coarse = kmeans_centroids(
         corpus, coarse_k, vec_col, seed=seed, max_iter=max_iter,
-        sample_limit=max(10_000, points_per_cell * coarse_k),
+        sample_limit=max(10_000, points_per_cell * coarse_k), n=n,
     )
     bc = spark.sparkContext.broadcast(coarse)
 
@@ -860,7 +866,7 @@ def _ivf_pruned_replicated(
         fit: dict = {}
         centroids = kmeans_centroids(
             corpus, k, vec_col, seed=seed, max_iter=8,
-            sample_limit=max(10_000, 64 * k), sample_out=fit,
+            sample_limit=max(10_000, 64 * k), sample_out=fit, n=n,
         )
         fit_x = fit["x"]
     k = centroids.shape[0]

@@ -13,11 +13,15 @@ from __future__ import annotations
 
 import os
 import tempfile
+import warnings
 import zipfile
 
 from pyspark.sql import SparkSession
 
+from crawling_vectordb_llm_spark.session import CODEGEN_CACHE_CONF, CODEGEN_CACHE_FLOOR
+
 _SHIPPED: set[int] = set()
+_CODEGEN_CHECKED: set[int] = set()
 
 
 def _package_zip() -> str:
@@ -137,7 +141,9 @@ def ensure_session_confs(spark: SparkSession) -> None:
     - nanosAsLong: the events fixture is TIMESTAMP(NANOS), which Spark's
       parquet reader rejects otherwise
     - UTC session timezone: oracle comparisons are against UTC-naive DuckDB
-    Both are runtime-settable SQL confs (verified)."""
+    Both are runtime-settable SQL confs (verified).  The compiled-class
+    cache size is static, so it is only checked: a cap under
+    CODEGEN_CACHE_FLOOR warns once per SparkContext."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # r14: the bounded driver transfers (connected_components' mode probe,
@@ -148,3 +154,23 @@ def ensure_session_confs(spark: SparkSession) -> None:
     # session — heal it like the confs above so a driver-built session
     # doesn't silently fall back to boxed-Row transfers.
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    key = id(spark.sparkContext)
+    if key not in _CODEGEN_CHECKED:
+        _CODEGEN_CHECKED.add(key)
+        msg = codegen_cache_warning(int(spark.conf.get(CODEGEN_CACHE_CONF)))
+        if msg:
+            warnings.warn(msg, RuntimeWarning, stacklevel=2)
+
+
+def codegen_cache_warning(cap: int) -> str | None:
+    """The warning for a session whose compiled-class cache holds fewer
+    than CODEGEN_CACHE_FLOOR classes, or None when it holds enough."""
+    if cap >= CODEGEN_CACHE_FLOOR:
+        return None
+    return (
+        f"{CODEGEN_CACHE_CONF}={cap} is below the engine's floor of "
+        f"{CODEGEN_CACHE_FLOOR}: queries that repeat in this session will "
+        "recompile their generated classes each time; build the session "
+        f"with --conf {CODEGEN_CACHE_CONF}={CODEGEN_CACHE_FLOOR} or more "
+        "(it cannot be changed once the session exists)"
+    )

@@ -61,5 +61,24 @@ def test_run_query_leaves_an_empty_cache(spark):
         return spark.range(100).selectExpr("id * 2 AS x").persist()
 
     for _ in range(2):
-        assert bench.run_query(persisting_query, spark, "unused") >= 0
+        took, _ = bench.run_query(persisting_query, spark, "unused")
+        assert took >= 0
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_warm_rep_compile_counts_ride_bench_full(spark):
+    """run_query counts the classes each rep compiled; a warm rep of a
+    repeated query compiles none.  BENCH_FULL adds the per-rep counts
+    under `warm_codegen_compiles` and keeps every headline field as is."""
+
+    def query(spark, sf_dir):
+        return spark.range(1000).selectExpr("id % 13 AS k").groupBy("k").count()
+
+    bench.run_query(query, spark, "unused")
+    _, compiled = bench.run_query(query, spark, "unused")
+    assert compiled == 0
+
+    payload = {"metric": "headline_queries_total_time", "value": 1.0, "queries": {"q": 1.0}}
+    full = bench.full_artifact(payload, {"q": [0, 0, 0]})
+    assert {k: full[k] for k in payload} == payload
+    assert full["warm_codegen_compiles"] == {"q": [0, 0, 0]}

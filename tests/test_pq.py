@@ -168,3 +168,40 @@ def test_bounded_sample_reuse_contract_and_ivfpq_identity(spark):
         tuple(r) for r in ivfpq_topk(queries, emb, k=5, n_probe=8).collect()
     )
     assert len(out) == 25 and len({t[0] for t in out}) == 5
+
+
+def test_known_count_skips_the_sample_probe_and_count(spark):
+    """Above the sample limit, a caller that already counted the corpus
+    passes n: the fit then runs no limit probe and no count, and samples
+    the identical rows."""
+    from crawling_vectordb_llm_spark.operators.ivf import kmeans_centroids
+
+    rng = np.random.default_rng(0)
+    n = 12_000  # above kmeans_centroids' 10k sample floor
+    rows = [(i, rng.standard_normal(8).tolist()) for i in range(n)]
+    df = (
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        .repartition(4)
+        .localCheckpoint()
+    )
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def fit_jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            cents = kmeans_centroids(df, 4, "embedding", seed=1, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+        return cents, [store.job(j).name() for j in ids]
+
+    probed, probed_jobs = fit_jobs("test-kmeans-probe")
+    known, known_jobs = fit_jobs("test-kmeans-known-n", n=n)
+    assert np.array_equal(probed, known)
+    # jobs are named by call site: the sampled collect alone remains; the
+    # probe's collect and the count are gone
+    assert len(set(known_jobs)) == 1 and set(known_jobs) < set(probed_jobs)
+    assert len(set(probed_jobs) - set(known_jobs)) == 2

@@ -1,8 +1,24 @@
-"""Session defaults sized from the host."""
+"""Session defaults sized from the host, and the compile-once contract:
+the compiled-class cache holds the engine's working set, so a plan shape
+that repeats within a session is not compiled again."""
 
 from __future__ import annotations
 
-from crawling_vectordb_llm_spark.session import default_driver_memory
+import warnings
+
+import pytest
+
+from crawling_vectordb_llm_spark import shipping
+from crawling_vectordb_llm_spark.catalog import read_table
+from crawling_vectordb_llm_spark.session import (
+    CODEGEN_CACHE_CONF,
+    CODEGEN_CACHE_ENTRIES,
+    CODEGEN_CACHE_FLOOR,
+    codegen_compiles,
+    default_driver_memory,
+)
+
+from .conftest import SF_SMALL
 
 GIB = 2**30
 
@@ -14,3 +30,76 @@ def test_default_driver_memory_is_half_the_ram_capped_at_24g():
     assert default_driver_memory(128 * GIB) == "24g"  # the cap
     assert default_driver_memory(48 * GIB) == "24g"
     assert default_driver_memory(1 * GIB) == "1g"  # the floor
+
+
+def test_get_spark_codegen_cache_covers_the_floor(spark):
+    assert CODEGEN_CACHE_ENTRIES >= CODEGEN_CACHE_FLOOR
+    assert int(spark.conf.get(CODEGEN_CACHE_CONF)) == CODEGEN_CACHE_ENTRIES
+
+
+def _curation_sequence(spark) -> None:
+    """The operators of one curation round, at fixture scale."""
+    from crawling_vectordb_llm_spark.operators.components import connected_components
+    from crawling_vectordb_llm_spark.operators.dedup import minhash_near_dup_pairs
+    from crawling_vectordb_llm_spark.operators.ivf import ivf_pruned_topk_join
+    from crawling_vectordb_llm_spark.operators.semdedup import semantic_dedup
+    from crawling_vectordb_llm_spark.suite import QUERIES
+
+    docs = read_table(spark, SF_SMALL, "documents")
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    connected_components(minhash_near_dup_pairs(docs)).toPandas()
+    ivf_pruned_topk_join(emb, tau=0.9, k=8).toPandas()
+    semantic_dedup(emb, tau=0.9, n_clusters=8).toPandas()
+    QUERIES["tpch_q6_shape"](spark, SF_SMALL).toPandas()
+
+
+def test_repeated_curation_sequence_compiles_nothing(spark):
+    _curation_sequence(spark)
+    before = codegen_compiles(spark)
+    _curation_sequence(spark)
+    assert codegen_compiles(spark) - before == 0
+
+
+def test_bm25_over_a_grown_corpus_compiles_nothing(spark):
+    """The corpus constants (n, avgdl) change as the corpus grows; they
+    must reach the plan as data, not as literals in generated code."""
+    from crawling_vectordb_llm_spark.operators.bm25 import bm25_topk
+
+    rows = [(i, f"spark engine doc{i % 7} " + "data " * (i % 5)) for i in range(60)]
+    queries = [(0, "spark data"), (1, "engine doc3")]
+
+    def corpus(n):
+        return spark.createDataFrame(rows[:n], "doc_id long, text string")
+
+    bm25_topk(corpus(40), queries, k=3).collect()
+    before = codegen_compiles(spark)
+    grown = bm25_topk(corpus(60), queries, k=3).collect()
+    assert codegen_compiles(spark) - before == 0
+    assert {r["query_id"] for r in grown} == {0, 1}
+
+
+class _Conf(dict):
+    def set(self, key, value):
+        self[key] = value
+
+
+class _Session:
+    """Just what ensure_session_confs reads and sets."""
+
+    def __init__(self, cap: int):
+        self.conf = _Conf({CODEGEN_CACHE_CONF: str(cap)})
+        self.sparkContext = object()
+
+
+def test_small_codegen_cache_warns_once_naming_conf_and_floor():
+    msg = shipping.codegen_cache_warning(100)
+    assert CODEGEN_CACHE_CONF in msg and str(CODEGEN_CACHE_FLOOR) in msg
+    assert shipping.codegen_cache_warning(CODEGEN_CACHE_FLOOR) is None
+
+    small = _Session(100)
+    with pytest.warns(RuntimeWarning, match=CODEGEN_CACHE_CONF):
+        shipping.ensure_session_confs(small)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        shipping.ensure_session_confs(small)  # once per context
+        shipping.ensure_session_confs(_Session(CODEGEN_CACHE_ENTRIES))
