@@ -53,37 +53,6 @@ def hash_encode_batch(texts: list[str], dim: int) -> np.ndarray:
     return out
 
 
-def embed_map_in_arrow(
-    df,
-    text_col: str = "text",
-    out_col: str = "vector",
-    dim: int = 64,
-    encode_batch: Callable[[list[str], int], np.ndarray] | None = None,
-):
-    """mapInArrow embedding stage — the 100 TB path (SURVEY §1.3): Arrow
-    RecordBatches flow straight through without a pandas materialization,
-    which matters when rows carry wide payloads next to the text column.
-    Appends `out_col` (fixed-size list<float32> as a regular list column);
-    results are identical to the pandas_udf path (tested)."""
-    import pyarrow as pa
-
-    encoder = encode_batch or hash_encode_batch
-
-    def _embed(batches):
-        for batch in batches:
-            texts = batch.column(text_col).to_pylist()
-            mat = encoder([t or "" for t in texts], dim).astype(np.float32)
-            vecs = pa.array(list(mat), type=pa.list_(pa.float32()))
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, vecs], names=[*batch.schema.names, out_col]
-            )
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    return df.mapInArrow(_embed, schema=f"{schema}, {out_col} array<float>")
-
-
 # Model ↔ dimension contract of the reference's server-side embedding
 # (TencentVDB.py:38-44); the collection's vector index dim must match the
 # model (TencentVDB.py:46,49).

@@ -187,8 +187,10 @@ def bounded_random_sample(
     by definition of the limit) pay exactly ONE collect — the limit+1
     probe detects that everything fit and no count/sample jobs run.  Only
     a genuinely larger corpus pays the count + sampled second pass.  A
-    caller that already counted the corpus passes that count as `n`; above
-    the limit, the probe and the count are then skipped."""
+    caller that already counted the corpus passes that count as `n`: at
+    or under the limit the probe becomes a plain collect (one job, where
+    the probe's take can scale up into several), and above it the probe
+    and the count are skipped."""
     import random
 
     def _pinned(rows: list) -> list:
@@ -205,7 +207,9 @@ def bounded_random_sample(
     # that need n for sizing (pq_knn_rerank's adaptive shortlist) don't
     # pay a separate count job for a number this call already knows.
     if n is None or n <= sample_limit:
-        rows = df.select(*cols).limit(sample_limit + 1).collect()
+        # a known n at or under the cap needs no limit+1 probe
+        probe = df.select(*cols)
+        rows = (probe if n is not None else probe.limit(sample_limit + 1)).collect()
         if len(rows) <= sample_limit:
             if n_out is not None:
                 n_out["n"] = len(rows)

@@ -9,14 +9,35 @@ A user of the reference works through the tcvectordb client:
 
 This class reproduces that contract on parquet + the engine's operators:
 server-side embedding → the batch embed stage; HNSW → an IVF index whose
-cell is a column of the collection; upsert-by-id → merge write; filtered
-search → predicate pushdown before scoring.  As in the reference, the
-index is part of the write: every version stores each row's
-`centroid_id`, assigned in the pass that embeds the row, so a search
-ranks the snapshot it reads with no side table to join.  Batch-first:
-`search_by_text` takes a LIST of queries and answers them in one Spark
-job (the reference loops one HTTP call per query — SURVEY §4's first
-deleted bottleneck).
+cell is a column of the collection; upsert-by-id → a merge-on-read
+write; filtered search → predicate pushdown before scoring.  As in the
+reference, the index is part of the write: every version stores each
+row's `centroid_id`, assigned in the pass that embeds the row, so a
+search ranks the snapshot it reads with no side table to join.
+Batch-first: `search_by_text` takes a LIST of queries and answers them
+in one Spark job (the reference loops one HTTP call per query — SURVEY
+§4's first deleted bottleneck).
+
+Storage is one layout: a base plus at most one cumulative delta.  Every
+version `v=N` (versioning.py: staged, then promoted, then the pointer
+flips) holds parquet and a manifest (versioning.write_manifest) naming
+its kind, a delta's base version and the Spark schema; every read passes
+that schema to `spark.read.schema`, so no read runs an inference job.  A
+base is a full snapshot, hash-partitioned by id into `shards` files.  A
+delta holds every change since its base in one table: upserted rows, and
+deleted keys marked by the `_deleted` column.  Reading any version is one
+plan, whatever the number of writes since its base:
+
+    base ⟕anti (every delta key)  ∪  delta rows not marked deleted
+
+A write with build_index=False folds the previous delta and its batch
+into the next delta, at O(batch × writes since the base) whatever the
+size of the collection; the MAX_DELTA_WRITES-th write since the base, a
+full index build, compact() and a first write write a new base instead.
+This is the merge-on-read of Iceberg equality deletes and Hudi MOR, with
+the Iceberg spec's per-version manifest (https://iceberg.apache.org/spec/);
+one cumulative delta, not a chain, keeps the read at one scan of the
+base and delta files and one broadcast anti-join.
 """
 
 from __future__ import annotations
@@ -28,8 +49,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
-from crawling_vectordb_llm_spark import mor
 from crawling_vectordb_llm_spark import versioning as V
 from crawling_vectordb_llm_spark.embedding import hash_encode_batch, make_embed_udf
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
@@ -39,15 +60,40 @@ from crawling_vectordb_llm_spark.operators.ivf import (
     kmeans_centroids,
 )
 from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
-from crawling_vectordb_llm_spark.operators.merge import upsert_by_key
+
+#: The write that brings the writes since the base to this count writes a
+#: new base instead of a delta, so a delta holds at most
+#: MAX_DELTA_WRITES - 1 writes.  Measured on a 40k-doc collection with
+#: 400-doc upserts and the constant lifted (4 cores, 7g heap, medians of
+#: 3 reps, cache cleared after every call), in two runs: a delta upsert
+#: took 1.0-1.4 s at every count from 1 to 16 writes since the base; an
+#: exact search of 48 texts took 0.60-0.65 s on a base and 0.72-0.89 s
+#: with 1-13 writes in the delta, and at 14-16 writes 0.86-1.01 s in one
+#: run and 0.75-0.79 s in the other; rewriting the base (compact) took
+#: 0.70-0.96 s.  8 keeps reads inside the range that was flat in both
+#: runs, and spreads a base rewrite at about 0.1 s per write.
+MAX_DELTA_WRITES = 8
+
+#: the delta column that marks a row as a deleted key
+_DELETED = "_deleted"
+
+
+def _resolved(rows: DataFrame, delta: DataFrame) -> DataFrame:
+    """The snapshot that `rows` stand for: a base's rows, whose `_deleted`
+    is null, and the rows of its `delta`.  One broadcast anti-join drops
+    every base row whose id the delta holds and every delta row marked
+    deleted, which matches its own key."""
+    keys = F.broadcast(delta.select(F.col("id").alias("_key")))
+    hit = (F.col("id") == F.col("_key")) & F.coalesce(F.col(_DELETED), F.lit(True))
+    return rows.join(keys, hit, "left_anti").drop(_DELETED)
 
 
 class VectorCollection:
-    """Parquet-backed vector collection with embed-on-write, merge upsert,
-    and (optionally IVF-accelerated) cosine search.  Every version has a
-    nullable `centroid_id int` column: null until the first index build,
-    then each write assigns its rows' cells against the stored
-    centroids."""
+    """Parquet-backed vector collection with embed-on-write, merge-on-read
+    upsert and delete, and (optionally IVF-accelerated) cosine search.
+    Every version has a nullable `centroid_id int` column: null until the
+    first index build, then each write assigns its rows' cells against
+    the stored centroids."""
 
     def __init__(
         self,
@@ -57,20 +103,12 @@ class VectorCollection:
         shards: int = 3,
         n_centroids: int = 16,
         encode_batch: Callable[[list[str], int], np.ndarray] | None = None,
-        write_mode: str = "cow",
     ):
-        assert write_mode in ("cow", "mor"), write_mode
         self.spark = spark
         self.path = path
         self.dim = dim
         self.shards = shards
         self.n_centroids = n_centroids
-        # "cow": every upsert/delete rewrites the snapshot (simple, read-
-        # optimal).  "mor": changes land as O(|change|) delta versions and
-        # reads merge base+deltas (write-optimal — the only affordable
-        # shape when the collection is 100 TB and the increment is a
-        # crawl batch); compact() folds the chain back to read-optimal.
-        self.write_mode = write_mode
         self._encode = encode_batch or hash_encode_batch
         self._embed_udf = make_embed_udf(dim=dim, encode_batch=encode_batch)
         self.centroids: np.ndarray | None = None
@@ -85,84 +123,171 @@ class VectorCollection:
     def _centroids_path(self) -> str:
         return os.path.join(self.path, "ivf_centroids")
 
-    def exists(self) -> bool:
-        return V.latest_version(self._table) is not None
+    def _manifest(self, version: int | None = None) -> dict | None:
+        """Manifest of `version` (default: the pointer's); None for an
+        empty collection.  A version without one predates the manifest
+        layout: every read and write refuses it, before writing."""
+        v = version if version is not None else V.latest_version(self._table)
+        if v is None:
+            return None
+        m = V.read_manifest(self._table, v)
+        if m is None:
+            raise ValueError(
+                f"{self.path} predates the manifest layout (v={v} has no "
+                "manifest): rebuild the collection from its documents"
+            )
+        return m
+
+    def _dir(self, version: int) -> str:
+        return os.path.join(self._table, f"v={version}")
+
+    def _scan(self, m: dict) -> DataFrame:
+        """The parquet of one version, read with its manifest's schema."""
+        return self.spark.read.schema(m["schema"]).parquet(self._dir(m["version"]))
 
     def documents(self, version: int | None = None) -> DataFrame:
-        """Current (or pinned — time travel) snapshot of the collection."""
-        if self.write_mode == "mor":
-            return mor.mor_read(self.spark, self._table, key="id", version=version)
-        return V.read_version(self.spark, self._table, version)
+        """Current (or pinned — time travel) snapshot of the collection:
+        one plan over the version's base and delta, built with no Spark
+        job."""
+        m = self._manifest(version)
+        if m is None:
+            raise FileNotFoundError(f"no versions at {self._table}")
+        if m["kind"] == "base":
+            return self._scan(m)
+        # the base and the delta in one scan, where the base reads a null
+        # `_deleted`: a union of two scans cost an exact search 0.07 s
+        # more at 40k docs
+        both = self.spark.read.schema(m["schema"]).parquet(
+            self._dir(m["base"]), self._dir(m["version"])
+        )
+        return _resolved(both, self._scan(m))
 
     def delta_chain_length(self) -> int:
-        """MOR read amplification (0 for cow): deltas a read must merge."""
-        return mor.delta_chain_length(self._table) if self.write_mode == "mor" else 0
+        """Writes since the base that the current delta holds (0 on a
+        base): the delta's size, and the next fold's cost, grow with it."""
+        m = self._manifest()
+        return 0 if m is None else m["version"] - m["base"]
 
     def compact(self) -> int:
-        """Fold MOR deltas into a fresh base (or rewrite the cow snapshot
-        at a sane file count) as a NEW version — pinned readers untouched."""
-        if self.write_mode == "mor":
-            return mor.mor_compact(self.spark, self._table, key="id")
-        return V.compact(self.spark, self._table)
+        """Fold the delta into a new base, as a NEW version — pinned
+        readers untouched."""
+        return self._write_base(self.documents())
 
     # ------------------------------------------------------------ writes
 
     def upsert(self, docs: DataFrame, build_index: bool = True) -> None:
-        """Embed-on-write + merge-by-id (last writer wins) — the
-        TencentVDB.py:63-79 contract, bulk.  The rows written get their
-        cells in the pass that embeds them.
+        """Embed-on-write + merge-by-id — the TencentVDB.py:63-79
+        contract, bulk.  Across writes the later write wins for an id;
+        within one batch, of the rows that share an id the greatest by
+        the batch's columns in order is kept, so the survivor does not
+        depend on partitioning.  The rows written get their cells in the
+        pass that embeds them.
 
         build_index=True is a full build: centroids are fitted on the
-        merged rows and those rows are written once, with cells, as the
-        one new version (a new base in "mor" mode).  build_index=False
-        assigns only the incoming rows against the stored centroids (the
-        100 TB ingest cadence); an updated id gets its new cell, and
-        before the first build the cells stay null.  A collection written
-        before the cell was a column raises ValueError, before writing,
-        until build_index() adds the column.
+        merged rows and those rows are written once, with cells, as a new
+        base.  build_index=False assigns only the incoming rows against
+        the stored centroids (the 100 TB ingest cadence) and lands them
+        in the delta; an updated id gets its new cell, and before the
+        first build the cells stay null.
 
-        The merge reads version N and writes version N+1 directly
-        (versioning.py): no staging double-write — the old version stays
-        immutable under concurrent readers until the pointer flips, which
-        is also what lets the merge read its own input safely."""
-        current = self._with_cell_column(self.documents()) if self.exists() else None
+        Every version stays immutable under concurrent readers until the
+        pointer flips (versioning.py), which is also what lets a write
+        read its own previous version safely."""
+        m = self._manifest()
         embedded = docs.withColumn("vector", self._embed_udf(F.col("text"))).withColumn(
             "vector", l2_normalize("vector").cast("array<float>")
         )
-        # a full build assigns every cell after its fit: null until then.
-        # Deduplicating last lets the merge's own dedup fold into this one.
-        incoming = self._with_cells(
-            embedded, None if build_index else self._load_centroids()
-        ).dropDuplicates(["id"])
-        if current is not None and self.write_mode == "mor" and not build_index:
-            mor.mor_upsert(incoming, self._table, key="id")
-            return
-        rows = incoming if current is None else upsert_by_key(current, incoming, key="id")
-        if build_index:
-            self._build(rows)
+        # a full build assigns every cell after its fit: null until then
+        incoming = self._with_cells(embedded, None if build_index else self._load_centroids())
+        self._write(m, incoming.withColumn(_DELETED, F.lit(False)), build_index)
+
+    def delete(self, ids: list[str], build_index: bool = False) -> int:
+        """Delete-by-id (the CRUD op the reference approximates with
+        upsert-overwrite): the ids land in the delta as deleted keys (with
+        build_index=True, a full build of the survivors).  Returns the new
+        version — readers pinned to older versions still see the deleted
+        rows, so a delete is also an auditable event, not a destructive
+        rewrite."""
+        m = self._manifest()
+        if m is None:
+            raise FileNotFoundError(f"no versions at {self._table}")
+        fields = [f for f in m["schema"] if f.name not in ("id", _DELETED)]
+        keys = self.spark.createDataFrame([(i,) for i in ids], "id string").select(
+            F.col("id").cast(m["schema"]["id"].dataType).alias("id"),
+            *(F.lit(None).cast(f.dataType).alias(f.name) for f in fields),
+            F.lit(True).alias(_DELETED),
+        )
+        return self._write(m, keys, build_index)
+
+    def _write(self, m: dict | None, change: DataFrame, build_index: bool) -> int:
+        """Land `change` (rows with `_deleted`) on the version `m` as the
+        next version: the folded delta, or a new base when this is a full
+        build, a first write or the MAX_DELTA_WRITES-th write since the
+        base.  Returns the new version."""
+        delta = self._fold(m, change)
+        if m is None:  # a first write is an upsert: every row is live
+            rows = delta.drop(_DELETED)
+        elif build_index or m["version"] - m["base"] + 1 >= MAX_DELTA_WRITES:
+            base = self._scan(self._manifest(m["base"]))
+            rows = _resolved(
+                base.withColumn(_DELETED, F.lit(None).cast("boolean")).unionByName(delta), delta
+            )
         else:
-            self._write_full(rows)
+            return self._commit(delta, base=m["base"])
+        return self._build(rows) if build_index else self._write_base(rows)
+
+    def _fold(self, m: dict | None, change: DataFrame) -> DataFrame:
+        """The delta of every change since the base, `change` included:
+        per id, the row of the latest write, and within `change` the
+        greatest row by its columns in order — one aggregate, so the row
+        kept is fixed.  Column names and types are checked against the
+        collection's before anything is written."""
+        tagged = change.withColumn("_write", F.lit(1))
+        if m is not None:
+            if m["kind"] == "delta":
+                prev = self._scan(m)
+            else:
+                prev = self.spark.createDataFrame(
+                    [], StructType([*m["schema"].fields, StructField(_DELETED, BooleanType())])
+                )
+            tagged = prev.withColumn("_write", F.lit(0)).unionByName(tagged)
+        cols = [c for c in change.columns if c != "id"]
+        row = F.max(F.struct("_write", *cols))
+        return tagged.groupBy("id").agg(row.alias("_row")).select(
+            "id", *(F.col("_row").getField(c).alias(c) for c in cols)
+        )
+
+    def _commit(self, rows: DataFrame, base: int | None = None) -> int:
+        """`rows` as the next version with its manifest: a base, or a
+        delta of version `base`."""
+        staged = V.stage_path(self._table)
+        rows.write.mode("overwrite").parquet(staged)
+        V.write_manifest(staged, rows.schema, base)
+        return V.promote_staged(self._table, staged)
+
+    def _write_base(self, rows: DataFrame) -> int:
+        return self._commit(rows.repartition(self.shards, "id"))
 
     def build_index(self, incremental: bool = False) -> None:
         """Full build: fit the centroids on the current snapshot, rewrite
-        it with every row's cell as a new version (a new base in "mor"
-        mode, as compact() writes), and persist the centroid table, so a
-        fresh session — or another node — can assign and search without
-        refitting.  incremental=True builds only when no index exists:
-        once one does, every write already assigns its rows' cells."""
+        it with every row's cell as a new base, and persist the centroid
+        table, so a fresh session — or another node — can assign and
+        search without refitting.  incremental=True builds only when no
+        index exists: once one does, every write already assigns its
+        rows' cells."""
         if not (incremental and os.path.exists(self._centroids_path)):
             self._build(self.documents())
 
     def _build(self, rows: DataFrame) -> int:
-        """Fit centroids on `rows`, write them with cells as the next full
-        version and persist the centroids.  Returns the new version.
-        `rows` is cached across the fit and the write, so the plan under
-        it (an upsert's embedding and merge) runs once and the centroids
-        are fitted on the very vectors that are written."""
+        """Fit centroids on `rows`, write them with cells as a new base
+        and persist the centroids.  Returns the new version.  `rows` is
+        cached across the fit and the write, so the plan under it (an
+        upsert's embedding and merge) runs once and the centroids are
+        fitted on the very vectors that are written."""
         rows = rows.persist()
         try:
             self.centroids = kmeans_centroids(rows, self.n_centroids, vec_col="vector")
-            v = self._write_full(self._with_cells(rows, self.centroids))
+            v = self._write_base(self._with_cells(rows, self.centroids))
         finally:
             rows.unpersist()
         self.spark.createDataFrame(
@@ -171,13 +296,6 @@ class VectorCollection:
         ).coalesce(1).write.mode("overwrite").parquet(self._centroids_path)
         return v
 
-    def _write_full(self, rows: DataFrame) -> int:
-        """`rows` as the next full version: a cow snapshot or a mor base."""
-        rows = rows.repartition(self.shards, "id")
-        if self.write_mode == "mor":
-            return mor.mor_write_base(rows, self._table)
-        return V.versioned_write(rows, self._table)
-
     def _with_cells(self, rows: DataFrame, centroids: np.ndarray | None) -> DataFrame:
         """`rows` with `centroid_id` set to each vector's nearest centroid,
         or null when there are no centroids."""
@@ -185,43 +303,18 @@ class VectorCollection:
             return rows.withColumn("centroid_id", F.lit(None).cast("int"))
         return assign_centroids(rows, centroids, vec_col="vector")
 
-    def _with_cell_column(self, snapshot: DataFrame) -> DataFrame:
-        """`snapshot`, checked to have the `centroid_id` column: a
-        collection written before the cell was a column has none, and a
-        write or an indexed search on it would fail or, in "mor" mode,
-        leave a version that no longer reads."""
-        if "centroid_id" not in snapshot.columns:
-            raise ValueError(
-                f"{self.path} has no centroid_id column (it was written before "
-                "the IVF cell was a column of the collection): run build_index() "
-                "on it once"
-            )
-        return snapshot
-
     def _load_centroids(self) -> np.ndarray | None:
         """Centroid matrix from this instance or the persisted table; None
         before the first index build."""
         if self.centroids is None and os.path.exists(self._centroids_path):
             rows = sorted(
-                self.spark.read.parquet(self._centroids_path).collect(),
+                self.spark.read.schema("centroid_id int, centroid array<double>")
+                .parquet(self._centroids_path)
+                .collect(),
                 key=lambda r: r["centroid_id"],
             )
             self.centroids = np.array([r["centroid"] for r in rows], dtype=np.float64)
         return self.centroids
-
-    def delete(self, ids: list[str], build_index: bool = False) -> int:
-        """Delete-by-id (the CRUD op the reference approximates with
-        upsert-overwrite): anti-join the ids out of the current snapshot
-        and write the survivors as the next version (a delete-key delta in
-        "mor" mode; with build_index=True, a full build of the survivors).
-        Returns the new version — readers pinned to older versions still
-        see the deleted rows, so a delete is also an auditable event, not
-        a destructive rewrite."""
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
-        if self.write_mode == "mor" and not build_index:
-            return mor.mor_delete(ids_df, self._table, key="id")
-        survivors = self.documents().join(F.broadcast(ids_df), "id", "left_anti")
-        return self._build(survivors) if build_index else self._write_full(survivors)
 
     # ------------------------------------------------------------ search
 
@@ -248,7 +341,7 @@ class VectorCollection:
             corpus = corpus.where(filter)
         if use_index and self._load_centroids() is not None:
             return ivf_search_matrix(
-                qids, qmat, self._with_cell_column(corpus), self.centroids, k=limit, n_probe=n_probe,
+                qids, qmat, corpus, self.centroids, k=limit, n_probe=n_probe,
                 corpus_id="id", corpus_vec="vector",
             )
         return knn_topk_matrix(

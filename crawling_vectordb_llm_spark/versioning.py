@@ -18,14 +18,17 @@ are the intended regime; a lock/txn layer is the upgrade path.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _POINTER = "_LATEST"
 _STAGE_PREFIX = "_stage_"
+_MANIFEST = "_manifest.json"  # Spark's readers skip `_`-prefixed files
 
 
 def _versions(path: str) -> list[int]:
@@ -75,6 +78,39 @@ def promote_staged(path: str, staged: str, flip: bool = True) -> int:
     if flip:
         _flip_pointer(path, v)
     return v
+
+
+def write_manifest(vdir: str, schema: StructType, base: int | None = None) -> None:
+    """Record a version's kind (a base, or a delta of version `base`) and
+    its Spark schema in `vdir` — the per-version metadata of the Iceberg
+    table spec.  Written into the staged directory before
+    `promote_staged`, so no version is ever seen without it."""
+    with open(os.path.join(vdir, _MANIFEST), "w") as f:
+        json.dump(
+            {
+                "kind": "base" if base is None else "delta",
+                "base": base,
+                "schema": schema.jsonValue(),
+            },
+            f,
+        )
+
+
+def read_manifest(path: str, version: int) -> dict | None:
+    """`{"version", "kind", "base", "schema"}` of `version` (a base is its
+    own base), or None for a version without a manifest: the `vdb`
+    format's flat layout, or a collection written before manifests."""
+    p = os.path.join(path, f"v={version}", _MANIFEST)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        m = json.load(f)
+    return {
+        "version": version,
+        "kind": m["kind"],
+        "base": version if m["base"] is None else m["base"],
+        "schema": StructType.fromJson(m["schema"]),
+    }
 
 
 def versioned_write(df: DataFrame, path: str) -> int:
@@ -148,14 +184,11 @@ def vacuum(path: str, keep: int = 2, stage_ttl_s: float = 3600.0) -> list[int]:
     keeps an in-flight writer's staging safe while letting housekeeping
     reclaim genuinely dead ones.
 
-    MoR-aware (ADVICE r1): under the merge-on-read layout (mor.py) a
-    retained delta version is only readable through the newest `base` at or
-    below it PLUS every delta between that base and itself — deleting the
-    base (or any intermediate delta) would make every retained version
-    unreadable or silently wrong.  The removal cutoff therefore backs up
-    from the oldest retained version to its supporting base; pure-cow
-    layouts (no base/ subdir anywhere) keep the plain newest-`keep`
-    behavior."""
+    Manifest-aware (ADVICE r1): a retained delta version reads through
+    its base (read_manifest), so the base of every retained version is
+    kept too.  A delta holds every change since its base, so the versions
+    between the two are not needed; flat versions without a manifest
+    keep the plain newest-`keep` behavior."""
     import shutil
     import time
 
@@ -175,13 +208,11 @@ def vacuum(path: str, keep: int = 2, stage_ttl_s: float = 3600.0) -> list[int]:
     vs = _versions(path)
     if len(vs) <= keep:
         return []
-    live = latest_version(path)
-    cutoff = vs[-keep]  # oldest retained version
-    for v in reversed([v for v in vs if v <= cutoff]):
-        if os.path.isdir(os.path.join(path, f"v={v}", "base")):
-            cutoff = v
-            break
-    removable = [v for v in vs if v < cutoff and v != live]
+    retained = {*vs[-keep:], latest_version(path)}
+    needed = retained | {
+        m["base"] for v in retained if v is not None and (m := read_manifest(path, v))
+    }
+    removable = [v for v in vs if v not in needed]
     for v in removable:
         shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
     return removable
@@ -189,20 +220,19 @@ def vacuum(path: str, keep: int = 2, stage_ttl_s: float = 3600.0) -> list[int]:
 
 def history(spark: SparkSession, path: str) -> DataFrame:
     """DESCRIBE HISTORY analog (Delta/Iceberg parity): one row per
-    version with its physical layout — file count, bytes, layout kind
-    (cow snapshot / mor base / mor delta), and whether the pointer
-    currently targets it.  Driver-side directory walk (version counts are
-    small by construction); returned as a DataFrame so it composes with
-    SQL like any other table."""
+    version with its physical layout — file count, bytes, kind and base
+    version from its manifest (`base`, or `delta` with the base it
+    applies to; `cow` for a flat version without a manifest), and whether
+    the pointer currently targets it.  Driver-side directory walk
+    (version counts are small by construction) that starts no Spark job;
+    returned as a DataFrame so it composes with SQL like any other
+    table."""
     live = latest_version(path)
     rows = []
     for v in _versions(path):
         vdir = os.path.join(path, f"v={v}")
-        kind = "cow"
-        if os.path.isdir(os.path.join(vdir, "base")):
-            kind = "base"
-        elif os.path.isdir(os.path.join(vdir, "delta")):
-            kind = "delta"
+        m = read_manifest(path, v)
+        kind, base = ("cow", None) if m is None else (m["kind"], m["base"])
         n_files = 0
         n_bytes = 0
         for root, _dirs, files in os.walk(vdir):
@@ -210,8 +240,9 @@ def history(spark: SparkSession, path: str) -> DataFrame:
                 if f.endswith(".parquet"):
                     n_files += 1
                     n_bytes += os.path.getsize(os.path.join(root, f))
-        rows.append((v, kind, n_files, n_bytes, v == live))
+        rows.append((v, kind, base, n_files, n_bytes, v == live))
     return spark.createDataFrame(
         rows,
-        "version int, kind string, n_files int, n_bytes bigint, is_latest boolean",
+        "version int, kind string, base_version int, n_files int, n_bytes bigint, "
+        "is_latest boolean",
     )

@@ -82,25 +82,6 @@ def test_hash_embedding_deterministic_and_normalized():
     assert np.allclose(norms, 1.0)
 
 
-def test_map_in_arrow_matches_pandas_udf(spark):
-    from crawling_vectordb_llm_spark.embedding import embed_map_in_arrow
-
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, "spark engine"), (3, None)], "id long, text string"
-    )
-    via_arrow = {
-        r["id"]: r["vector"]
-        for r in embed_map_in_arrow(df, dim=32).collect()
-    }
-    via_pandas = {
-        r["id"]: r["v"]
-        for r in df.select("id", make_embed_udf(32)(F.col("text")).alias("v")).collect()
-    }
-    assert via_arrow.keys() == via_pandas.keys()
-    for k in via_arrow:
-        assert via_arrow[k] == via_pandas[k]
-
-
 def test_embed_udf_shape(spark):
     df = spark.createDataFrame([("hello world",), ("x y z",)], "text string")
     out = df.select(make_embed_udf(32)(F.col("text")).alias("v")).collect()

@@ -171,9 +171,10 @@ def test_bounded_sample_reuse_contract_and_ivfpq_identity(spark):
 
 
 def test_known_count_skips_the_sample_probe_and_count(spark):
-    """Above the sample limit, a caller that already counted the corpus
-    passes n: the fit then runs no limit probe and no count, and samples
-    the identical rows."""
+    """A caller that already counted the corpus passes n.  Above the
+    sample limit the fit then runs no limit probe and no count, and
+    samples the identical rows; at or under it, the probe becomes one
+    plain collect of the identical rows."""
     from crawling_vectordb_llm_spark.operators.ivf import kmeans_centroids
 
     rng = np.random.default_rng(0)
@@ -187,7 +188,7 @@ def test_known_count_skips_the_sample_probe_and_count(spark):
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
 
-    def fit_jobs(group, **kw):
+    def fit_jobs(group, df=df, **kw):
         sc.setJobGroup(group, group)
         try:
             cents = kmeans_centroids(df, 4, "embedding", seed=1, **kw)
@@ -205,3 +206,10 @@ def test_known_count_skips_the_sample_probe_and_count(spark):
     # probe's collect and the count are gone
     assert len(set(known_jobs)) == 1 and set(known_jobs) < set(probed_jobs)
     assert len(set(probed_jobs) - set(known_jobs)) == 2
+
+    small = df.where("vec_id < 3000").localCheckpoint()  # under the 10k floor
+    probed, probed_jobs = fit_jobs("test-kmeans-small-probe", df=small)
+    known, known_jobs = fit_jobs("test-kmeans-small-known-n", df=small, n=3000)
+    assert np.array_equal(probed, known)
+    assert len(known_jobs) == 1 and known_jobs[0].startswith("collect at")
+    assert len(probed_jobs) >= len(known_jobs)

@@ -191,7 +191,7 @@ def test_streaming_crawl_to_vector_collection_search(spark, tmp_path):
     from crawling_vectordb_llm_spark.vectorstore import VectorCollection
 
     crawl_datasource.register_stream(spark)
-    coll = VectorCollection(spark, str(tmp_path / "kb"), dim=32, write_mode="mor")
+    coll = VectorCollection(spark, str(tmp_path / "kb"), dim=32)
 
     def ingest(batch_df, batch_id):
         coll.upsert(

@@ -4,6 +4,8 @@ indexed), build_index."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,11 +15,7 @@ from crawling_vectordb_llm_spark.vectorstore import VectorCollection
 from .conftest import SF_SMALL
 
 
-#: the indexed-search tests run under both write modes
-MODES = ("cow", "mor")
-
-
-def _fresh(spark, tmp_path, write_mode="cow", **kw):
+def _fresh(spark, tmp_path, **kw):
     docs = (
         read_table(spark, SF_SMALL, "documents")
         .where(F.col("doc_id") < 100)
@@ -27,9 +25,7 @@ def _fresh(spark, tmp_path, write_mode="cow", **kw):
             "lang",
         )
     )
-    coll = VectorCollection(
-        spark, str(tmp_path / write_mode), dim=64, write_mode=write_mode, **kw
-    )
+    coll = VectorCollection(spark, str(tmp_path / "coll"), dim=64, **kw)
     coll.upsert(docs, build_index=True)
     return coll, docs
 
@@ -70,21 +66,20 @@ def test_filtered_search(spark, tmp_path):
 
 
 def test_indexed_search_matches_exact_mostly(spark, tmp_path):
-    for mode in MODES:
-        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=8)
-        texts = [r["text"] for r in docs.limit(5).collect()]
-        exact = {
-            (r["query_id"], r["id"])
-            for r in coll.search_by_text(texts, limit=5).collect()
-        }
-        approx = {
-            (r["query_id"], r["id"])
-            for r in coll.search_by_text(
-                texts, limit=5, use_index=True, n_probe=4
-            ).collect()
-        }
-        recall = len(exact & approx) / len(exact)
-        assert recall >= 0.6, (mode, recall)
+    coll, docs = _fresh(spark, tmp_path, n_centroids=8)
+    texts = [r["text"] for r in docs.limit(5).collect()]
+    exact = {
+        (r["query_id"], r["id"])
+        for r in coll.search_by_text(texts, limit=5).collect()
+    }
+    approx = {
+        (r["query_id"], r["id"])
+        for r in coll.search_by_text(
+            texts, limit=5, use_index=True, n_probe=4
+        ).collect()
+    }
+    recall = len(exact & approx) / len(exact)
+    assert recall >= 0.6, recall
 
 
 def test_search_results_with_docs(spark, tmp_path):
@@ -116,31 +111,29 @@ def test_indexed_search_excludes_deleted_ids(spark, tmp_path):
     """ADVICE r1 regression: after delete() (default build_index=False) an
     UNFILTERED indexed search must not surface the deleted ids — the
     search ranks the post-delete snapshot itself."""
-    for mode in MODES:
-        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
-        texts = [r["text"] for r in docs.limit(5).collect()]
-        deleted = ["https://x/0", "https://x/3"]
-        coll.delete(deleted)  # build_index stays False: no refit, no rewrite
-        hits = coll.search_by_text(texts, limit=5, use_index=True, n_probe=4)
-        ids = {r["id"] for r in hits.collect()}
-        assert ids and not (ids & set(deleted)), mode
+    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
+    texts = [r["text"] for r in docs.limit(5).collect()]
+    deleted = ["https://x/0", "https://x/3"]
+    coll.delete(deleted)  # build_index stays False: no refit, no rewrite
+    hits = coll.search_by_text(texts, limit=5, use_index=True, n_probe=4)
+    ids = {r["id"] for r in hits.collect()}
+    assert ids and not (ids & set(deleted))
 
 
 def test_indexed_search_scores_current_vectors_after_upsert(spark, tmp_path):
     """A doc re-upserted with new text (index NOT rebuilt) must be scored by
     its current embedding, not the one it had before the update."""
-    for mode in MODES:
-        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
-        new_text = "entirely different replacement content xyz"
-        update = spark.createDataFrame(
-            [("https://x/7", new_text, "en")], "id string, text string, lang string"
-        )
-        coll.upsert(update, build_index=False)
-        # indexed search for the OLD text must not return a perfect 1.0 for x/7
-        old_text = docs.where(F.col("id") == "https://x/7").first()["text"]
-        hits = coll.search_by_text([old_text], limit=100, use_index=True, n_probe=4)
-        x7 = [r for r in hits.collect() if r["id"] == "https://x/7"]
-        assert all(abs(r["score"] - 1.0) > 1e-6 for r in x7), mode
+    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
+    new_text = "entirely different replacement content xyz"
+    update = spark.createDataFrame(
+        [("https://x/7", new_text, "en")], "id string, text string, lang string"
+    )
+    coll.upsert(update, build_index=False)
+    # indexed search for the OLD text must not return a perfect 1.0 for x/7
+    old_text = docs.where(F.col("id") == "https://x/7").first()["text"]
+    hits = coll.search_by_text([old_text], limit=100, use_index=True, n_probe=4)
+    x7 = [r for r in hits.collect() if r["id"] == "https://x/7"]
+    assert all(abs(r["score"] - 1.0) > 1e-6 for r in x7)
 
 
 def test_incremental_index_update_finds_new_docs(spark, tmp_path):
@@ -150,42 +143,40 @@ def test_incremental_index_update_finds_new_docs(spark, tmp_path):
     centroid table is untouched."""
     import numpy as np
 
-    for mode in MODES:
-        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
-        cents_before = coll._load_centroids().copy()
+    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
+    cents_before = coll._load_centroids().copy()
 
-        new = spark.createDataFrame(
-            [("https://y/1", "totally novel incremental document body", "en")],
-            "id string, text string, lang string",
-        )
-        coll.upsert(new, build_index=False)
-        assert np.array_equal(coll._load_centroids(), cents_before)
+    new = spark.createDataFrame(
+        [("https://y/1", "totally novel incremental document body", "en")],
+        "id string, text string, lang string",
+    )
+    coll.upsert(new, build_index=False)
+    assert np.array_equal(coll._load_centroids(), cents_before)
 
-        hits = coll.search_by_text(
-            ["totally novel incremental document body"], limit=3,
-            use_index=True, n_probe=4,
-        ).collect()
-        top = [r for r in hits if r["rank"] == 1][0]
-        assert top["id"] == "https://y/1", mode
-        assert abs(top["score"] - 1.0) < 1e-6
+    hits = coll.search_by_text(
+        ["totally novel incremental document body"], limit=3,
+        use_index=True, n_probe=4,
+    ).collect()
+    top = [r for r in hits if r["rank"] == 1][0]
+    assert top["id"] == "https://y/1"
+    assert abs(top["score"] - 1.0) < 1e-6
 
 
 def test_indexed_search_from_fresh_session_instance(spark, tmp_path):
     """Centroids persist with the index: a NEW VectorCollection object on
     the same path answers indexed searches without retraining (the
     cross-session / cross-node story)."""
-    for mode in MODES:
-        coll, docs = _fresh(spark, tmp_path, mode, n_centroids=4)
-        target = docs.where(F.col("id") == "https://x/9").first()
+    coll, docs = _fresh(spark, tmp_path, n_centroids=4)
+    target = docs.where(F.col("id") == "https://x/9").first()
 
-        fresh = VectorCollection(
-            spark, coll.path, dim=64, n_centroids=4, write_mode=mode
-        )
-        assert fresh.centroids is None
-        hits = fresh.search_by_text(
-            [target["text"]], limit=3, use_index=True
-        ).collect()
-        assert [r for r in hits if r["rank"] == 1][0]["id"] == "https://x/9", mode
+    fresh = VectorCollection(
+        spark, coll.path, dim=64, n_centroids=4
+    )
+    assert fresh.centroids is None
+    hits = fresh.search_by_text(
+        [target["text"]], limit=3, use_index=True
+    ).collect()
+    assert [r for r in hits if r["rank"] == 1][0]["id"] == "https://x/9"
 
 
 def test_updated_doc_is_found_in_its_new_cell(spark, tmp_path):
@@ -268,33 +259,51 @@ def test_upsert_embeds_each_doc_once(spark, tmp_path):
     assert coll.documents().count() == 50
 
 
-def test_collection_without_cell_column_is_refused_until_rebuilt(spark, tmp_path):
-    """A collection written before the cell was a column has no
-    `centroid_id`: upsert and indexed search raise ValueError before
-    writing anything, the collection still reads, and build_index()
-    adds the column."""
-    from crawling_vectordb_llm_spark import mor
+def test_collection_without_manifest_is_refused(spark, tmp_path):
+    """A collection written before versions carried a manifest (a flat
+    snapshot): upsert, delete and search raise ValueError naming the path
+    before anything is written, and the pointer does not move."""
     from crawling_vectordb_llm_spark import versioning as V
 
-    for mode in MODES:
-        coll, _ = _fresh(spark, tmp_path, mode, n_centroids=4)
-        # the old layout: a full version without the column, beside the
-        # persisted centroid table
-        write = mor.mor_write_base if mode == "mor" else V.versioned_write
-        old = coll.documents().drop("centroid_id").repartition(coll.shards, "id")
-        version = write(old, coll._table)
-        text = "a late arrival about harbor zebras"
-        new = spark.createDataFrame(
-            [("https://y/1", text, "en")], "id string, text string, lang string"
-        )
-        with pytest.raises(ValueError, match="build_index"):
-            coll.upsert(new, build_index=False)
-        with pytest.raises(ValueError, match="build_index"):
-            coll.search_by_text([text], use_index=True)
-        assert V.latest_version(coll._table) == version
-        assert coll.documents().count() == 100
+    coll, _ = _fresh(spark, tmp_path, n_centroids=4)
+    old = coll.documents().repartition(coll.shards, "id")
+    version = V.versioned_write(old, coll._table)  # no manifest
+    text = "a late arrival about harbor zebras"
+    new = spark.createDataFrame(
+        [("https://y/1", text, "en")], "id string, text string, lang string"
+    )
+    for call in (
+        lambda: coll.upsert(new, build_index=False),
+        lambda: coll.upsert(new, build_index=True),
+        lambda: coll.delete(["https://x/1"]),
+        lambda: coll.search_by_text([text]),
+        lambda: coll.search_by_text([text], use_index=True),
+    ):
+        with pytest.raises(ValueError, match="predates the manifest layout") as e:
+            call()
+        assert coll.path in str(e.value)
+    assert V.latest_version(coll._table) == version
+    assert not [d for d in os.listdir(coll._table) if d.startswith("_stage_")]
 
-        coll.build_index()
-        coll.upsert(new, build_index=False)
-        hits = coll.search_by_text([text], limit=1, use_index=True).collect()
-        assert hits[0]["id"] == "https://y/1", mode
+
+def test_duplicate_ids_in_one_batch_keep_a_fixed_row(spark, tmp_path):
+    """Within one batch the row kept for an id is fixed (the greatest by
+    the batch's columns in order), whatever the batch's partitioning: the
+    same duplicate-key batch gives the same collection at 1, 3 and 7
+    input partitions, written as a base and folded into a delta."""
+    rows = [(f"k{i % 5}", f"write {i:03d} to key {i % 5}", i % 7) for i in range(250)]
+    want = {}
+    for row in sorted(rows):
+        want[row[0]] = row
+    got = []
+    for n in (1, 3, 7):
+        batch = spark.createDataFrame(rows, "id string, text string, n int").repartition(n)
+        coll = VectorCollection(spark, str(tmp_path / f"p{n}"), dim=8)
+        coll.upsert(batch, build_index=False)          # a base
+        first = sorted(tuple(r) for r in coll.documents().select("id", "text", "n").collect())
+        coll.upsert(batch.where("n > 0"), build_index=False)  # into a delta
+        got.append((first, sorted(
+            tuple(r) for r in coll.documents().select("id", "text", "n").collect()
+        )))
+    assert got[0] == got[1] == got[2]
+    assert got[0][0] == sorted(want.values())

@@ -66,19 +66,27 @@ def test_compact_respects_target_rows_per_file(spark, tmp_path):
 
 
 def test_history_describes_versions(spark, tmp_path):
-    """history(): one row per version, correct layout kind and pointer."""
-    from crawling_vectordb_llm_spark import mor
-    from crawling_vectordb_llm_spark import versioning as V
+    """history(): one row per version with the kind and base version its
+    manifest records, and the pointer; a flat version without a manifest
+    (the vdb format) reports `cow`."""
+    from crawling_vectordb_llm_spark.vectorstore import VectorCollection
 
-    path = str(tmp_path / "h")
-    mor.mor_write_base(spark.range(100).selectExpr("id", "id*2 AS v"), path)
-    mor.mor_delete(spark.range(10).select("id"), path)
-    mor.mor_compact(spark, path)
+    coll = VectorCollection(spark, str(tmp_path / "h"), dim=8)
+    coll.upsert(
+        spark.range(100).selectExpr("id", "concat('doc ', id) AS text"), build_index=False
+    )                                # v1 base
+    coll.delete(["3", "4"])          # v2 delta of v1
+    coll.compact()                   # v3 base
 
-    h = {r["version"]: r for r in V.history(spark, path).collect()}
+    h = {r["version"]: r for r in V.history(spark, coll._table).collect()}
     assert set(h) == {1, 2, 3}
-    assert h[1]["kind"] == "base" and not h[1]["is_latest"]
-    assert h[2]["kind"] == "delta"
-    assert h[3]["kind"] == "base" and h[3]["is_latest"]
-    assert all(r["n_files"] > 0 for r in h.values() if r["kind"] != "delta")
+    assert (h[1]["kind"], h[1]["base_version"], h[1]["is_latest"]) == ("base", 1, False)
+    assert (h[2]["kind"], h[2]["base_version"]) == ("delta", 1)
+    assert (h[3]["kind"], h[3]["base_version"], h[3]["is_latest"]) == ("base", 3, True)
+    assert all(r["n_files"] > 0 for r in h.values())
     assert h[3]["n_bytes"] > 0
+
+    flat = str(tmp_path / "flat")
+    V.versioned_write(spark.range(5), flat)
+    (row,) = V.history(spark, flat).collect()
+    assert (row["kind"], row["base_version"], row["is_latest"]) == ("cow", None, True)
