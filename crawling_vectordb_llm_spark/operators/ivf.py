@@ -12,7 +12,8 @@ Build (the "create index" analog, batch):
 Search reads every row and skips the unprobed cells inside the kernel:
   1. score queries × centroids (tiny GEMM on the driver)
   2. per query keep n_probe nearest cells
-  3. exact-score only vectors in probed cells (knn numpy path), top-k.
+  3. exact-score only vectors in probed cells, top-k — exact search's
+     kernel (knn.knn_topk_matrix) over the stored cells.
 
 Recall is testable against exact kNN
 (tests/test_extended_ops.py::test_ivf_recall_vs_exact); n_probe =
@@ -40,6 +41,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
 from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
     collect_query_rows,
@@ -527,139 +529,37 @@ def ivf_search(
     max_query_rows: int = DEFAULT_MAX_QUERY_ROWS,
 ) -> DataFrame:
     """Probe the n_probe nearest cells per query, exact-score only those
-    cells' vectors, return top-k.
+    cells' vectors, return top-k as (query_id, corpus_id, rank, score).
+    `assigned_corpus` needs a non-null `centroid_id` column.
 
-    Physical shape (rewritten round 4 — measured on the clustered
-    fixture, SCALE.md): the per-cell QUERY matrices broadcast (queries
-    are the small side, same bounded-collect contract as knn_join_numpy)
-    and each corpus partition GEMMs every Arrow batch's cell groups
-    against only the queries probing that cell, keeping a partition-
-    local top-k per query.  Shuffle volume is partitions x queries x k
-    score triples — independent of corpus size and of n_probe.  The
-    previous shape (broadcast (query, cell) pairs joined onto the
-    corpus) replicated every candidate ROW WITH ITS VECTOR once per
-    probing query through Arrow: at 4k queries x 80k corpus x 8/128
-    probes that is ~20M vector-carrying rows (~5 GB) for ~10 MB of
-    useful output, and it benchmarked SLOWER than the exact broadcast
-    GEMM it was meant to beat (1.5-2.3x).  Map-side cell GEMM does
-    1/(n_cells/n_probe) of the exact path's flops AND ships less than
-    it.  The scan itself still reads every row: unprobed cells are
-    dropped inside the kernel, after decode."""
-    qrows = collect_query_rows(
+    This is exact search's kernel (`knn.knn_topk_matrix`) over the
+    stored cells: the query side is collected under the same bound as
+    knn_join_numpy and broadcast, and each corpus partition GEMMs every
+    Arrow batch's cell groups against only the queries probing that
+    cell, keeping a partition-local top-k per query.  Shuffle volume is
+    partitions x queries x k score triples — independent of corpus size
+    and of n_probe.  (Joining broadcast (query, cell) pairs onto the
+    corpus instead ships every candidate row with its vector once per
+    probing query: ~5 GB for ~10 MB of output at 4k queries x 80k rows x
+    8/128 probes, and 1.5-2.3x slower than exact search, SCALE.md.)
+    Ranking is on (6-dp score desc, id asc) at every
+    stage, so with every cell probed the rows equal knn_join_numpy's at
+    any partitioning.  The scan itself still reads every row: unprobed
+    cells are dropped inside the kernel, after decode."""
+    qids, qmat = collect_query_rows(
         queries, query_id, query_vec, max_query_rows, caller="ivf_search"
     )
-    return ivf_search_matrix(
-        np.array([r[0] for r in qrows]),
-        np.array([r[1] for r in qrows], dtype=np.float64),
+    return knn_topk_matrix(
+        qids,
+        qmat,
         assigned_corpus,
-        centroids,
         k,
+        centroids,
         n_probe,
         query_id=query_id,
         corpus_id=corpus_id,
         corpus_vec=corpus_vec,
-    )
-
-
-def ivf_search_matrix(
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    assigned_corpus: DataFrame,
-    centroids: np.ndarray,
-    k: int,
-    n_probe: int,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-) -> DataFrame:
-    """ivf_search's kernel over a query matrix already on the driver
-    (row i of `qmat` is query `qids[i]`).  Callers that encode their
-    queries on the driver (VectorCollection.search_by_text) enter here
-    and skip the DataFrame round trip and its collect job.
-    `assigned_corpus` needs a non-null `centroid_id` column, as every
-    indexed VectorCollection snapshot has."""
-    qmat = _normalize(np.asarray(qmat, dtype=np.float64))
-    probe_cells = np.argsort(-(qmat @ centroids.T), axis=1)[:, :n_probe]
-
-    # cell -> (query ids, query matrix): the per-cell GEMM operands
-    cell_q: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for c in np.unique(probe_cells):
-        mask = (probe_cells == c).any(axis=1)
-        cell_q[int(c)] = (qids[mask], qmat[mask])
-    spark = assigned_corpus.sparkSession
-    bq = spark.sparkContext.broadcast(cell_q)
-
-    def _cell_gemm_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cq = bq.value
-        out_q: list[np.ndarray] = []
-        out_i: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells = pdf["centroid_id"].to_numpy()
-            cmat = _normalize(np.array(list(pdf[corpus_vec]), dtype=np.float64))
-            ids = pdf[corpus_id].to_numpy()
-            for c in np.unique(cells):
-                q = cq.get(int(c))
-                if q is None:
-                    continue  # no query probes this cell: skipped entirely
-                sel = cells == c
-                sub_ids, sub = ids[sel], cmat[sel]
-                scores = q[1] @ sub.T  # (nq_cell, n_cell_rows)
-                # exact per-row rank cap on the CONTRACT's ordering
-                # (6-dp rounded score desc, id asc): admit each query's
-                # local top-k under that total order.  Any global-top-k
-                # row has local rank < k (every row ahead of it locally
-                # is ahead of it globally too), so the admitted set is a
-                # superset of the global answer no matter how rows are
-                # partitioned — and, unlike the previous ties-inclusive
-                # threshold, output is bounded at nq*k even when a whole
-                # duplicate-heavy cell slice ties at the boundary score
-                # (ADVICE r5).  Columns are pre-sorted by id asc so a
-                # STABLE per-row argsort on -rs realizes the id-asc
-                # tiebreak exactly; an argpartition would split boundary
-                # ties arbitrarily and break the superset guarantee.
-                rs = np.round(scores, 6)
-                if k < rs.shape[1]:
-                    id_order = np.argsort(sub_ids, kind="stable")
-                    top = np.argsort(
-                        -rs[:, id_order], axis=1, kind="stable"
-                    )[:, :k]
-                    qi = np.repeat(np.arange(rs.shape[0]), k)
-                    ci = id_order[top.ravel()]
-                else:
-                    qi, ci = np.nonzero(np.ones_like(rs, dtype=bool))
-                out_q.append(q[0][qi])
-                out_i.append(sub_ids[ci])
-                out_s.append(scores[qi, ci])
-        if not out_q:
-            yield pd.DataFrame({query_id: [], corpus_id: [], "score": []})
-            return
-        qarr = np.concatenate(out_q).astype(np.int64)
-        iarr = np.concatenate(out_i)
-        sarr = np.round(np.concatenate(out_s), 6)
-        # one vectorized partition-local rank pass: (query, score desc,
-        # id asc) — the same ordering as the global stage, so truncation
-        # to k matches what the global rank would keep
-        order = np.lexsort((iarr, -sarr, qarr))
-        qs, is_, ss = qarr[order], iarr[order], sarr[order]
-        starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-        sizes = np.diff(np.append(starts, len(qs)))
-        ranks = np.arange(len(qs)) - np.repeat(starts, sizes)
-        keep = ranks < k
-        yield pd.DataFrame(
-            {query_id: qs[keep], corpus_id: is_[keep], "score": ss[keep]}
-        )
-
-    cid_t = assigned_corpus.schema[corpus_id].dataType.simpleString()
-    scored = assigned_corpus.select(
-        corpus_id, corpus_vec, "centroid_id"
-    ).mapInPandas(
-        _cell_gemm_topk, schema=f"{query_id} long, {corpus_id} {cid_t}, score double"
-    )
-    return grouped_topk(
-        scored, [query_id], [F.desc("score"), F.asc(corpus_id)], k
+        query_id_type=queries.schema[query_id].dataType.simpleString(),
     )
 
 

@@ -12,13 +12,15 @@ online ANN index, so the engine provides batch equivalents:
                        corpus side shuffle-free until the tiny ranked
                        output).
 2. `knn_join_numpy`  — exact, Arrow/numpy matrix path.  Per corpus
-                       partition, one float64 GEMM scores the partition
-                       against all queries, and only each partition's local
-                       top-k survives — a map-side combine that shrinks the
-                       shuffle from |corpus|×|queries| rows to
+                       partition, one float64 GEMM per Arrow batch scores
+                       it against all queries, and only each partition's
+                       local top-k survives — a map-side combine that
+                       shrinks the shuffle from |corpus|×|queries| rows to
                        |partitions|×|queries|×k before the final window.
                        This is the 100 TB plan: shuffle size is independent
-                       of corpus size.
+                       of corpus size.  Its kernel, `knn_topk_matrix`, is
+                       also IVF search: the same per-cell GEMM and rank
+                       cap over the `centroid_id` cells a query probes.
 3. `threshold_similarity_join` — the exact self-join: all pairs with
                        cosine >= tau (the range-join flavor, SURVEY §2.5),
                        used by near-dup dedup.  One plan: a triangular
@@ -29,8 +31,11 @@ online ANN index, so the engine provides batch equivalents:
 4. `ivf` (operators/ivf.py) — the approximate scale path: k-means
                        centroids, partition-by-centroid, probe nProbe cells.
 
-Scores are computed in float64 and tie-broken by (score DESC, id ASC) so
-output is deterministic (SURVEY §7 hard parts b/c).
+Scores are computed in float64 and every top-k ranks on one total order,
+(score rounded to 6 dp DESC, id ASC): two scores that agree to 6 dp are a
+tie, broken by id, so output is deterministic and does not depend on how
+the corpus is partitioned (SURVEY §7 hard parts b/c).  The numpy kernels
+rank through `topk.rank_cap` / `topk.rank_cap_matrix`.
 """
 
 from __future__ import annotations
@@ -48,6 +53,8 @@ from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
     collect_query_rows,
     grouped_topk,
+    rank_cap,
+    rank_cap_matrix,
 )
 
 
@@ -61,7 +68,8 @@ def knn_join_sql(
     corpus_vec: str = "embedding",
     score_col: str = "score",
 ) -> DataFrame:
-    """Exact top-k cosine per query, entirely in Spark SQL expressions.
+    """Exact top-k cosine per query, entirely in Spark SQL expressions,
+    ranked on (6-dp score desc, id asc) like every query-side top-k.
 
     Plan shape: BroadcastNestedLoopJoin(queries) over the corpus scan →
     codegen cosine → shuffle only on query_id for the rank window.  The
@@ -77,11 +85,11 @@ def knn_join_sql(
     scored = q.crossJoin(c).select(
         query_id,
         corpus_id,
-        V.cosine(F.col("__qv"), F.col("__cv")).alias(score_col),
+        F.round(V.cosine(F.col("__qv"), F.col("__cv")), 6).alias(score_col),
     )
     return grouped_topk(
         scored, [query_id], [F.desc(score_col), F.asc(corpus_id)], k
-    ).select(query_id, corpus_id, "rank", F.round(score_col, 6).alias(score_col))
+    ).select(query_id, corpus_id, "rank", score_col)
 
 
 def knn_join_numpy(
@@ -100,18 +108,18 @@ def knn_join_numpy(
     The query matrix is collected (it is the small side by contract — the
     reference issues one query text at a time; batches of ≤ ~100k queries ×
     64-1024 dims fit comfortably) and closed over; Spark pickles it once per
-    task, and each Arrow batch is scored with one float64 matrix multiply.
-    Emitting only the per-batch top-k is the map-side combine that keeps the
-    final shuffle tiny at any corpus size.  The contract is now ENFORCED:
-    a query side over max_query_rows raises instead of OOM-ing the driver
-    (VERDICT r5 #3).
+    task, and each Arrow batch is scored with one float64 matrix multiply
+    (`knn_topk_matrix` with one cell).  Emitting only the per-partition
+    top-k is the map-side combine that keeps the final shuffle tiny at any
+    corpus size.  A query side over max_query_rows raises instead of
+    OOM-ing the driver.
     """
-    qrows = collect_query_rows(
+    qids, qmat = collect_query_rows(
         queries, query_id, query_vec, max_query_rows, caller="knn_join_numpy"
     )
     return knn_topk_matrix(
-        np.array([r[0] for r in qrows]),
-        np.array([r[1] for r in qrows], dtype=np.float64),
+        qids,
+        qmat,
         corpus,
         k,
         query_id=query_id,
@@ -127,48 +135,82 @@ def knn_topk_matrix(
     qmat: np.ndarray,
     corpus: DataFrame,
     k: int,
+    centroids: np.ndarray | None = None,
+    n_probe: int = 1,
     query_id: str = "query_id",
     corpus_id: str = "doc_id",
     corpus_vec: str = "embedding",
     score_col: str = "score",
     query_id_type: str = "bigint",
 ) -> DataFrame:
-    """knn_join_numpy's kernel over a query matrix already on the driver
-    (row i of `qmat` is query `qids[i]`).  Callers that encode their
-    queries on the driver (VectorCollection.search_by_text) enter here
-    and skip the DataFrame round trip and its collect job."""
-    spark = corpus.sparkSession
+    """The one query-side top-k kernel, over a query matrix already on the
+    driver (row i of `qmat` is query `qids[i]`): exact search, and IVF
+    search when `centroids` is given.  Returns (query_id, corpus_id,
+    rank, score).
+
+    Corpus rows are grouped in cells, and each cell is scored only
+    against the queries that probe it.  Exact search is one literal cell
+    that every query probes, so it is one GEMM per Arrow batch.  With
+    `centroids`, each query probes its `n_probe` nearest cells of the
+    corpus's `centroid_id` column (every indexed VectorCollection snapshot
+    has one); the scan still reads every row and drops unprobed cells
+    after decode.  Per cell, `topk.rank_cap_matrix` keeps each query's
+    top k; one `topk.rank_cap` pass merges a partition's cells and
+    batches, and grouped_topk merges the partitions.  All three rank on
+    one order, 6-dp score desc, id asc, and a row of the global top k
+    ranks under k wherever it is scored (every row ahead of it there is
+    ahead of it globally), so the answer does not depend on how rows are
+    partitioned.  Shuffle volume is partitions × queries × k triples at
+    any corpus size.  Callers that encode their queries on the driver
+    (VectorCollection.search_by_text) enter here and skip the DataFrame
+    round trip and its collect job."""
     qmat = np.asarray(qmat, dtype=np.float64)
-    qnorm = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
-    bq = spark.sparkContext.broadcast((qids, qnorm))
+    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
+    if centroids is None:
+        cell = F.lit(0)
+        cell_q = {0: (qids, qmat)}
+    else:
+        cell = F.col("centroid_id")
+        probe = np.argsort(-(qmat @ centroids.T), axis=1)[:, :n_probe]
+        cell_q = {}
+        for c in np.unique(probe):
+            probing = (probe == c).any(axis=1)
+            cell_q[int(c)] = (qids[probing], qmat[probing])
+    bq = corpus.sparkSession.sparkContext.broadcast(cell_q)
 
-    cid_t = corpus.schema[corpus_id].dataType.simpleString()
-    out_schema = f"{query_id} {query_id_type}, {corpus_id} {cid_t}, {score_col} double"
-
-    def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qn = bq.value
+    def _cell_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cq = bq.value
+        out = []
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            cells = pdf["__cell"].to_numpy()
             cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)
-            cn = cmat / np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30)
-            scores = qn @ cn.T  # (n_queries, batch)
-            top = min(k, scores.shape[1])
-            # local top-k per query within this batch
-            idx = np.argpartition(-scores, top - 1, axis=1)[:, :top]
-            rows = {
-                query_id: np.repeat(ids, top),
-                corpus_id: pdf[corpus_id].to_numpy()[idx.ravel()],
-                score_col: np.take_along_axis(scores, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(rows)
+            cmat /= np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-30)
+            ids = pdf[corpus_id].to_numpy()
+            for c in np.unique(cells):
+                q = cq.get(int(c))
+                if q is None:
+                    continue  # no query probes this cell
+                sel = cells == c
+                cell_ids = ids[sel]
+                qi, ci, sc = rank_cap_matrix(q[1] @ cmat[sel].T, cell_ids, k)
+                out.append((q[0][qi], cell_ids[ci], sc))
+        if out:
+            qs, cs, ss = (np.concatenate(x) for x in zip(*out))
+            keep = rank_cap(qs, ss, cs, k)
+            yield pd.DataFrame(
+                {query_id: qs[keep], corpus_id: cs[keep], score_col: ss[keep]}
+            )
 
-    candidates = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score_partition, schema=out_schema
+    cid_t = corpus.schema[corpus_id].dataType.simpleString()
+    candidates = corpus.select(corpus_id, corpus_vec, cell.alias("__cell")).mapInPandas(
+        _cell_topk,
+        schema=f"{query_id} {query_id_type}, {corpus_id} {cid_t}, {score_col} double",
     )
     return grouped_topk(
         candidates, [query_id], [F.desc(score_col), F.asc(corpus_id)], k
-    ).select(query_id, corpus_id, "rank", F.round(score_col, 6).alias(score_col))
+    ).select(query_id, corpus_id, "rank", score_col)
 
 
 def threshold_similarity_join(
@@ -335,8 +377,8 @@ def topk_similarity_self_join(
     most n·P·k score triples; nothing is collected to the driver.
 
     Determinism: local and global stages rank on the SAME total order —
-    6-dp-rounded score desc, neighbor id asc (ids pre-sorted + stable
-    argsort in the kernel) — so output is unique regardless of
+    6-dp-rounded score desc, neighbor id asc (`topk.rank_cap` in the
+    kernel) — so output is unique regardless of
     partitioning, and a DuckDB row_number oracle over the exact pair list
     reproduces it bit-for-bit.
 
@@ -486,8 +528,7 @@ def _topk_tau_gemm(
     Emits (item, neighbor, score6) for BOTH directions of the block pair:
     A items ranked over B (complete per A-chunk — each A row sees every B
     column), and, when the blocks differ, B items ranked over A (per-chunk
-    partial top-k merged by one vectorized rank pass at the end, the
-    ivf_search lexsort shape).  diagonal=True scores one set against
+    partial top-k merged by one `topk.rank_cap` pass at the end).  diagonal=True scores one set against
     itself (symmetric matrix — the per-row direction alone covers every
     item) with the self-pair masked out.
 
@@ -532,17 +573,6 @@ def _topk_tau_gemm(
         b32_t = b_mat.astype(np.float32).T
         tau32 = tau - _f32_margin(a_mat.shape[1])
 
-    def _rank_keep(grp: np.ndarray, other: np.ndarray, sc: np.ndarray, kk: int):
-        """Rank candidates (grp, score desc, other asc), keep rank < kk.
-        Returns the kept (grp_index, other_index, score) triplets."""
-        order = np.lexsort((other, -sc, grp))
-        g, o, s = grp[order], other[order], sc[order]
-        starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
-        sizes = np.diff(np.append(starts, len(g)))
-        ranks = np.arange(len(g)) - np.repeat(starts, sizes)
-        keep = ranks < kk
-        return g[keep], o[keep], s[keep]
-
     items, neighs, scs = [], [], []
     b_items, b_neighs, b_scs = [], [], []
     ka = min(k, len(b_ids))
@@ -575,34 +605,25 @@ def _topk_tau_gemm(
             sc = np.round(scores[ri, ci], 6)
         # A direction: per-row top-k over B columns (complete per chunk —
         # each A row sees every B column)
-        ga, oa, sa = _rank_keep(ri, ci, sc, ka)
-        items.append(ai[ga])
-        neighs.append(b_ids[oa])
-        scs.append(sa)
+        keep = rank_cap(ri, sc, ci, ka)
+        items.append(ai[ri[keep]])
+        neighs.append(b_ids[ci[keep]])
+        scs.append(sc[keep])
         if not diagonal:
             # B direction: per-column top-k within this chunk (row index
             # ascending = a-id ascending); partial lists merge after the
             # loop
-            gb, ob, sb = _rank_keep(ci, ri, sc, kb)
-            b_items.append(b_ids[gb])
-            b_neighs.append(ai[ob])
-            b_scs.append(sb)
+            keep = rank_cap(ci, sc, ri, kb)
+            b_items.append(b_ids[ci[keep]])
+            b_neighs.append(ai[ri[keep]])
+            b_scs.append(sc[keep])
     if b_items:
-        # cross-chunk merge for the B direction: rank (item, score desc,
-        # neighbor asc), keep rank < k — vectorized, no Python loop
-        bi = np.concatenate(b_items)
-        bn = np.concatenate(b_neighs)
-        bs = np.concatenate(b_scs)
-        if len(bi):
-            order = np.lexsort((bn, -bs, bi))
-            bi, bn, bs = bi[order], bn[order], bs[order]
-            starts = np.flatnonzero(np.r_[True, bi[1:] != bi[:-1]])
-            sizes = np.diff(np.append(starts, len(bi)))
-            ranks = np.arange(len(bi)) - np.repeat(starts, sizes)
-            keep = ranks < kb
-            items.append(bi[keep])
-            neighs.append(bn[keep])
-            scs.append(bs[keep])
+        # cross-chunk merge for the B direction, on the same order
+        bi, bn, bs = (np.concatenate(x) for x in (b_items, b_neighs, b_scs))
+        keep = rank_cap(bi, bs, bn, kb)
+        items.append(bi[keep])
+        neighs.append(bn[keep])
+        scs.append(bs[keep])
     items = [x for x in items if len(x)]
     if not items:
         return empty
@@ -733,12 +754,10 @@ def knn_quantized_rerank(
     shortlist = shortlist or 4 * k
     spark = queries.sparkSession
 
-    qrows = collect_query_rows(
+    qids, qmat = collect_query_rows(
         queries, query_id, query_vec, max_query_rows,
         caller="knn_quantized_rerank",
     )
-    qids = np.array([r[0] for r in qrows])
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
     qscale = np.maximum(np.abs(qmat).max(axis=1) / 127.0, 1e-12)
     qint = np.floor(qmat / qscale[:, None] + 0.5).astype(np.float32)
     qint_norm = np.maximum(np.linalg.norm(qint, axis=1), 1e-30)
@@ -761,17 +780,9 @@ def knn_quantized_rerank(
             cnorm = np.maximum(np.linalg.norm(cint, axis=1), 1e-30)
             # approx cosine: scales cancel in the normalized int space
             scores = (qi @ cint.T) / (qn[:, None] * cnorm[None, :])
-            top = min(shortlist, scores.shape[1])
-            idx = np.argpartition(-scores, top - 1, axis=1)[:, :top]
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(ids, top),
-                    corpus_id: pdf[corpus_id].to_numpy()[idx.ravel()],
-                    "__approx": np.take_along_axis(scores, idx, axis=1)
-                    .ravel()
-                    .astype(np.float64),
-                }
-            )
+            cids = pdf[corpus_id].to_numpy()
+            ri, ci, sc = rank_cap_matrix(scores.astype(np.float64), cids, shortlist)
+            yield pd.DataFrame({query_id: ids[ri], corpus_id: cids[ci], "__approx": sc})
 
     cand = quant.mapInPandas(
         stage1, schema=f"{query_id} {qid_t}, {corpus_id} {cid_t}, __approx double"
@@ -808,9 +819,9 @@ def knn_rerank_shortlist(
     The shared stage 2 of every two-stage ANN operator (int8
     `knn_quantized_rerank`, product-quantized `pq.pq_knn_rerank`): join the
     shortlist — never the corpus — back to full-precision vectors, score
-    JVM-side, keep top-k per query with deterministic (score DESC, id ASC)
-    ties.  Full-precision reads are proportional to the shortlist size, so
-    the stage costs the same whether the corpus is 1 GB or 100 TB.
+    JVM-side, keep top-k per query on (6-dp score desc, id asc).
+    Full-precision reads are proportional to the shortlist size, so the
+    stage costs the same whether the corpus is 1 GB or 100 TB.
     """
     qv = F.broadcast(
         queries.select(F.col(query_id), V.as_double_array(query_vec).alias("__qv"))
@@ -823,9 +834,9 @@ def knn_rerank_shortlist(
         .select(
             query_id,
             corpus_id,
-            V.cosine(F.col("__qv"), F.col("__cv")).alias(score_col),
+            F.round(V.cosine(F.col("__qv"), F.col("__cv")), 6).alias(score_col),
         )
     )
     return grouped_topk(
         exact, [query_id], [F.desc(score_col), F.asc(corpus_id)], k
-    ).select(query_id, corpus_id, "rank", F.round(score_col, 6).alias(score_col))
+    ).select(query_id, corpus_id, "rank", score_col)

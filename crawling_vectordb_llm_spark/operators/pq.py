@@ -45,6 +45,7 @@ from crawling_vectordb_llm_spark.operators.topk import (
     DEFAULT_MAX_QUERY_ROWS,
     collect_query_rows,
     grouped_topk,
+    rank_cap_matrix,
 )
 
 
@@ -210,16 +211,16 @@ def pq_adc_shortlist(
     exact normalized query subvectors against the codebook entries;
     approx cosine(q, v) = sum_s table[s, codes_v[s]].  The scan touches
     only `codes` (8 ints/row) and the scoring is a vectorized
-    numpy take-and-sum — no per-row Python.  Emits a per-PARTITION
-    shortlist per query; global top-k happens after the exact rerank.
+    numpy take-and-sum — no per-row Python.  Emits each Arrow batch's
+    shortlist per query (topk.rank_cap_matrix: 6-dp ADC score desc, id
+    asc); global top-k happens after the exact rerank.
     """
     spark = queries.sparkSession
-    qrows = collect_query_rows(
+    qids, qmat = collect_query_rows(
         queries, query_id, query_vec, max_query_rows,
         caller="pq_adc_shortlist",
     )
-    qids = np.array([r[0] for r in qrows])
-    qmat = _normalize(np.array([r[1] for r in qrows], dtype=np.float64))
+    qmat = _normalize(qmat)
     m, n_codes, sub_d = codebooks.shape
     # tables[i, s, c] = dot(q_i[sub s], codebook[s, c])
     tables = np.einsum("isd,scd->isc", qmat.reshape(len(qmat), m, sub_d), codebooks)
@@ -238,15 +239,9 @@ def pq_adc_shortlist(
             codes = np.array(list(pdf["codes"]), dtype=np.int64) + offsets[None, :]
             # scores[i, j] = sum_s flat[i, codes_j[s]]
             scores = flat[:, codes].sum(axis=2)  # (n_q, n_rows)
-            top = min(shortlist, scores.shape[1])
-            idx = np.argpartition(-scores, top - 1, axis=1)[:, :top]
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(ids, top),
-                    corpus_id: pdf[corpus_id].to_numpy()[idx.ravel()],
-                    "approx_score": np.take_along_axis(scores, idx, axis=1).ravel(),
-                }
-            )
+            cids = pdf[corpus_id].to_numpy()
+            ri, ci, sc = rank_cap_matrix(scores, cids, shortlist)
+            yield pd.DataFrame({query_id: ids[ri], corpus_id: cids[ci], "approx_score": sc})
 
     return encoded.mapInPandas(
         stage1, schema=f"{query_id} {qid_t}, {corpus_id} {cid_t}, approx_score double"
@@ -388,11 +383,10 @@ def ivfpq_topk(
     )
 
     # --- probe cells per query, ADC-score only those cells ---
-    qrows = collect_query_rows(
+    qids, qmat = collect_query_rows(
         queries, query_id, query_vec, max_query_rows, caller="ivfpq_topk"
     )
-    qids = np.array([r[0] for r in qrows])
-    qmat = _normalize(np.array([r[1] for r in qrows], dtype=np.float64))
+    qmat = _normalize(qmat)
     q_cent = qmat @ cents.T  # (nq, n_centroids): the q.centroid term
     probe_cells = np.argsort(-q_cent, axis=1)[:, :n_probe]
     tables = np.einsum(

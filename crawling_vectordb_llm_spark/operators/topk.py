@@ -8,6 +8,8 @@ oracle-hash-stable (SURVEY §7 hard part b).
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,43 +70,23 @@ def global_topk_ranked(
 # allocation, not a silent OOM; lower it per-call for wide vectors.
 DEFAULT_MAX_QUERY_ROWS = 1_000_000
 
-# (r14: the r6 id-only pre-count probe for large bounds is gone — the
-# collect is Arrow-columnar now, so the oversize-error path materializes
-# bounded buffers instead of boxed Rows and the common path stays one job;
-# see collect_query_rows docstring.)
-
-
 def collect_query_rows(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     max_rows: int = DEFAULT_MAX_QUERY_ROWS,
     caller: str = "knn",
-) -> list:
+) -> tuple[np.ndarray, np.ndarray]:
     """Collect the small (query) side of an ANN operator with an explicit
-    runtime bound (VERDICT r5 #3: the contract was docstring-only).
+    runtime bound, as `(ids, float64 matrix)`: row i of the matrix is the
+    vector of query `ids[i]`.
 
-    One job in the common case: limit(max_rows + 1) caps what ever
-    reaches the driver, so an oversized query relation raises ValueError
-    after materializing at most max_rows + 1 rows instead of OOM-ing on
-    the full relation.  Below the cap the limit is a no-op and every row
-    is returned (order is irrelevant — callers build per-query top-k,
-    never order-sensitive state).
-
-    r14 (guide §1/§5): ONE Arrow collect for every bound.  The r6 shape
-    additionally pre-counted the id column for bounds above 100k rows so
-    that an oversized relation could not OOM the driver with boxed Row
-    objects while PRODUCING the error — but that guard job ran on the
-    COMMON path too, charging every ANN operator's construct one extra
-    job per query (the contract-abiding case is ~10 rows).  The Arrow
-    path removes the hazard the pre-count existed for: an oversized
-    relation materializes at most max_rows+1 rows as columnar buffers
-    (~0.5 GB at the 1M default with 64-d doubles, transient, freed on
-    raise) instead of multiple GB of Row objects, so the error still
-    fires safely after one bounded transfer and the common path pays
-    exactly one job.  Values are bit-identical to the Row path (Arrow
-    widens float->double exactly as Row boxing did); callers consume
-    (id, vector) tuples positionally.
+    One Arrow collect: limit(max_rows + 1) caps what ever reaches the
+    driver, so an oversized query relation raises ValueError after
+    materializing at most max_rows + 1 rows as columnar buffers instead
+    of OOM-ing on the full relation.  Below the cap the limit is a no-op
+    and every row is returned (order is irrelevant — callers build
+    per-query top-k, never order-sensitive state).
     """
     pdf = df.select(id_col, vec_col).limit(max_rows + 1).toPandas()
     if len(pdf) > max_rows:
@@ -115,7 +97,44 @@ def collect_query_rows(
             "distributed similarity join (knn.threshold_similarity_join) "
             "instead"
         )
-    return list(zip(pdf[id_col].tolist(), pdf[vec_col].tolist()))
+    return pdf[id_col].to_numpy(), np.array(pdf[vec_col].tolist(), dtype=np.float64)
+
+
+def rank_cap(
+    group: np.ndarray, score: np.ndarray, ids: np.ndarray, k: int
+) -> np.ndarray:
+    """Positions of the (group, score, id) triples that rank < k within
+    their group under (score desc, id asc), ordered by (group, rank):
+    the one order of every query-side top-k, with `score` already
+    rounded to 6 dp.  One lexsort, so ties at any score are cut by id
+    whatever order the triples arrive in."""
+    order = np.lexsort((ids, -score, group))
+    g = group[order]
+    first = np.ones(len(g), dtype=bool)
+    first[1:] = g[1:] != g[:-1]
+    pos = np.arange(len(g))
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0))
+    return order[rank < k]
+
+
+def rank_cap_matrix(
+    scores: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each row's top k of a dense (rows × columns) score matrix, column j
+    being `ids[j]`, as (row, column, 6-dp score) triples in rank_cap's
+    order.  Only columns at or above a row's k-th 6-dp score can rank
+    under k, so one np.partition finds that score and rank_cap sorts
+    just the columns that reach it — at least k per row, more only when
+    the k-th score is tied."""
+    rs = np.round(scores, 6)
+    if 0 < k < rs.shape[1]:
+        kth = np.partition(rs, rs.shape[1] - k, axis=1)[:, rs.shape[1] - k]
+        ri, ci = np.nonzero(rs >= kth[:, None])
+    else:
+        ri, ci = np.nonzero(np.ones(rs.shape, dtype=bool))
+    s = rs[ri, ci]
+    keep = rank_cap(ri, s, ids[ci], k)
+    return ri[keep], ci[keep], s[keep]
 
 
 def adaptive_shortlist(

@@ -54,12 +54,9 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 from crawling_vectordb_llm_spark import versioning as V
 from crawling_vectordb_llm_spark.embedding import hash_encode_batch, make_embed_udf
 from crawling_vectordb_llm_spark.functions.vector import l2_normalize
-from crawling_vectordb_llm_spark.operators.ivf import (
-    assign_centroids,
-    ivf_search_matrix,
-    kmeans_centroids,
-)
+from crawling_vectordb_llm_spark.operators.ivf import assign_centroids, kmeans_centroids
 from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
+from crawling_vectordb_llm_spark.operators.merge import greatest_per_key
 
 #: The write that brings the writes since the base to this count writes a
 #: new base instead of a delta, so a delta holds at most
@@ -252,10 +249,7 @@ class VectorCollection:
                 )
             tagged = prev.withColumn("_write", F.lit(0)).unionByName(tagged)
         cols = [c for c in change.columns if c != "id"]
-        row = F.max(F.struct("_write", *cols))
-        return tagged.groupBy("id").agg(row.alias("_row")).select(
-            "id", *(F.col("_row").getField(c).alias(c) for c in cols)
-        )
+        return greatest_per_key(tagged.select("id", "_write", *cols), "id").drop("_write")
 
     def _commit(self, rows: DataFrame, base: int | None = None) -> int:
         """`rows` as the next version with its manifest: a base, or a
@@ -330,22 +324,23 @@ class VectorCollection:
         per query, optional SQL predicate applied BEFORE scoring (J3).
         use_index=True probes the `n_probe` nearest cells of the snapshot
         it ranks whenever centroids exist, and searches exactly before
-        the first index build.  Returns (query_id, id, rank, score) —
-        query_id indexes `texts`."""
-        # the queries are encoded here, on the driver: the matrix entry
-        # points take them as they are, with no DataFrame round trip
+        the first index build.  Both paths run one kernel
+        (knn.knn_topk_matrix) and rank on (6-dp score desc, id asc), so
+        tied scores — duplicate texts embed to identical vectors — come
+        back in id order at any partitioning, and with every cell probed
+        the two paths return the same rows.  Returns (query_id, id,
+        rank, score) — query_id indexes `texts`."""
+        # the queries are encoded here, on the driver: the kernel takes
+        # them as they are, with no DataFrame round trip
         qids = np.arange(len(texts), dtype=np.int64)
         qmat = self._encode(texts, self.dim)
         corpus = self.documents()
         if filter:
             corpus = corpus.where(filter)
-        if use_index and self._load_centroids() is not None:
-            return ivf_search_matrix(
-                qids, qmat, corpus, self.centroids, k=limit, n_probe=n_probe,
-                corpus_id="id", corpus_vec="vector",
-            )
+        centroids = self._load_centroids() if use_index else None
         return knn_topk_matrix(
-            qids, qmat, corpus, k=limit, corpus_id="id", corpus_vec="vector"
+            qids, qmat, corpus, k=limit, centroids=centroids, n_probe=n_probe,
+            corpus_id="id", corpus_vec="vector",
         )
 
     def search_results_with_docs(self, hits: DataFrame) -> DataFrame:

@@ -170,3 +170,91 @@ def test_cross_encoder_rerank_self_retrieval_and_determinism(spark):
         assert r["ce_e6"] == 1_000_000  # Dice(set, itself) = 1 exactly
         assert r["retrieval_e6"] == 1_000_000
         assert r["blended_e12"] == 1_000_000_000_000
+
+
+_TIE_ORACLE = """
+SELECT query_id, id, CAST(rank AS INT) AS rank, ROUND(score, 6) AS score FROM (
+  SELECT query_id, id, score, row_number() OVER (
+           PARTITION BY query_id ORDER BY ROUND(score, 6) DESC, id) AS rank
+  FROM (SELECT q.query_id, c.id, list_cosine_similarity(q.qv, c.v) AS score
+        FROM q CROSS JOIN c)
+) WHERE rank <= {k}
+"""
+
+
+def _tie_oracle(qids, qmat, ids, mat, k):
+    """The (6-dp score desc, id asc) top k of every query, by DuckDB."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register("q", pd.DataFrame({"query_id": qids, "qv": list(qmat)}))
+    con.register("c", pd.DataFrame({"id": ids, "v": list(mat)}))
+    return sorted(con.execute(_TIE_ORACLE.format(k=k)).fetchall())
+
+
+def _rows(df, id_col):
+    return sorted(
+        (r["query_id"], r[id_col], r["rank"], round(r["score"], 6)) for r in df.collect()
+    )
+
+
+def test_query_topk_keeps_tie_order_at_any_partitioning(spark, tmp_path):
+    """Exact copies of a query vector tie at 6 dp; every query-side top-k
+    keeps the lowest ids among them, whatever the partitioning and row
+    order: knn_join_numpy, knn_join_sql, ivf_search with every cell
+    probed, and VectorCollection.search_by_text on both paths, each
+    equal to a DuckDB row_number oracle."""
+    from crawling_vectordb_llm_spark.embedding import hash_encode_batch
+    from crawling_vectordb_llm_spark.operators.ivf import (
+        assign_centroids,
+        ivf_search,
+        kmeans_centroids,
+    )
+    from crawling_vectordb_llm_spark.vectorstore import VectorCollection
+
+    k, n, d = 5, 600, 16
+    rng = np.random.default_rng(11)
+    mat = rng.normal(size=(n, d))
+    qmat = rng.normal(size=(3, d))
+    ids = rng.permutation(n)  # shuffled row order, scattered ids
+    mat[:12] = qmat[0]  # 12 exact copies of query 0
+    mat[12:20] = qmat[1] * rng.uniform(0.5, 2.0, size=(8, 1))  # 8 scaled copies
+    vecs = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(q, [float(x) for x in v]) for q, v in enumerate(qmat)],
+        "query_id long, query_vec array<double>",
+    )
+    want = _tie_oracle(np.arange(3), qmat, ids, mat, k)
+    assert [r[1] for r in want[:k]] == sorted(ids[:12])[:k]
+
+    texts = [f"common words {i % 50} of doc {i}" for i in range(200)]
+    texts[:10] = ["the same duplicated text"] * 10
+    texts[10:16] = ["another shared body"] * 6
+    doc_ids = [f"d{i:03d}" for i in rng.permutation(200)]
+    docs = spark.createDataFrame(list(zip(doc_ids, texts)), "id string, text string")
+    asks = ["the same duplicated text", "another shared body", texts[40]]
+
+    for p in (1, 3, 7):
+        corpus = vecs.repartition(p)
+        cents = kmeans_centroids(corpus, 4)
+        assigned = assign_centroids(corpus, cents)
+        assert _rows(knn_join_numpy(queries, corpus, k, corpus_id="vec_id"), "vec_id") == want
+        assert _rows(knn_join_sql(queries, corpus, k, corpus_id="vec_id"), "vec_id") == want
+        assert _rows(ivf_search(queries, assigned, cents, k, n_probe=4), "vec_id") == want
+
+        coll = VectorCollection(spark, str(tmp_path / f"c{p}"), dim=d, shards=p, n_centroids=4)
+        coll.upsert(docs.repartition(p), build_index=True)
+        stored = coll.documents().select("id", "vector").toPandas()
+        coll_want = _tie_oracle(
+            np.arange(3), hash_encode_batch(asks, d), stored["id"].to_numpy(),
+            np.array(stored["vector"].tolist(), dtype=np.float64), k,
+        )
+        exact = coll.search_by_text(asks, limit=k)
+        ivf = coll.search_by_text(asks, limit=k, use_index=True, n_probe=4)
+        assert exact.columns == ivf.columns == ["query_id", "id", "rank", "score"]
+        assert _rows(exact, "id") == coll_want
+        assert _rows(ivf, "id") == coll_want

@@ -21,10 +21,18 @@ def test_upsert_semantics(spark):
 
 
 def test_upsert_dedups_update_batch(spark):
-    existing = spark.createDataFrame([(1, "a")], "id long, v string")
-    updates = spark.createDataFrame([(1, "x"), (1, "y")], "id long, v string")
-    out = upsert_by_key(existing, updates, "id").collect()
-    assert len(out) == 1 and out[0]["id"] == 1 and out[0]["v"] in ("x", "y")
+    """Updates that share a key keep the greatest row by the batch's
+    columns, the same one at any partitioning of the batch."""
+    existing = spark.createDataFrame([(1, "a", 0), (2, "b", 0)], "id long, v string, n int")
+    updates = spark.createDataFrame(
+        [(1, "x", 5), (1, "y", 1), (3, "p", 2), (1, "x", 9), (3, "p", 1), (3, "o", 7)] * 4,
+        "id long, v string, n int",
+    )
+    for parts in (1, 3, 7):
+        merged = upsert_by_key(existing, updates.repartition(parts), "id")
+        assert sorted(tuple(r) for r in merged.collect()) == [
+            (1, "y", 1), (2, "b", 0), (3, "p", 2)
+        ]
 
 
 def test_flatten_three_levels(spark):

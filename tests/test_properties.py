@@ -92,3 +92,37 @@ def test_sign_pack_words_and_hamming_properties(spark):
 
     with pytest.raises(ValueError, match="multiple of 32"):
         V.sign_pack_words("a", 48)
+
+
+@st.composite
+def _tied_scores(draw):
+    """A score matrix with planted exact ties (values drawn from a small
+    pool, some differing only past the 6th decimal), ids in shuffled
+    order, and a k from 1 to past the column count."""
+    rows = draw(st.integers(min_value=0, max_value=6))
+    cols = draw(st.integers(min_value=0, max_value=12))
+    pool = draw(st.lists(st.floats(-1, 1), min_size=1, max_size=4))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    scores = rng.choice(pool, size=(rows, cols)) + rng.choice([0.0, 1e-9], size=(rows, cols))
+    return scores, rng.permutation(100)[:cols] if cols else np.zeros(0, int), draw(
+        st.integers(min_value=1, max_value=cols + 2)
+    )
+
+
+@given(_tied_scores())
+@settings(max_examples=200, deadline=None)
+def test_rank_cap_matrix_equals_full_lexsort(case):
+    """rank_cap_matrix keeps exactly each row's first k columns under a
+    full lexsort by (6-dp score desc, id asc), in that order — with
+    planted exact ties, k at or past the column count, k = 1 and empty
+    input."""
+    from crawling_vectordb_llm_spark.operators.topk import rank_cap_matrix
+
+    scores, ids, k = case
+    rs = np.round(scores, 6)
+    want = []
+    for r in range(rs.shape[0]):
+        order = np.lexsort((ids, -rs[r]))[:k]
+        want += [(r, int(c), float(rs[r, c])) for c in order]
+    ri, ci, sc = rank_cap_matrix(scores, ids, k)
+    assert list(zip(ri.tolist(), ci.tolist(), sc.tolist())) == want
