@@ -25,5 +25,8 @@ Layout:
 
 from crawling_vectordb_llm_spark.session import get_spark
 from crawling_vectordb_llm_spark.catalog import TABLES, load_tables
+from crawling_vectordb_llm_spark.shipping import install_lazy_zip_directories
+
+install_lazy_zip_directories()
 
 __all__ = ["get_spark", "TABLES", "load_tables"]

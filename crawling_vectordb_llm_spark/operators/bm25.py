@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawling_vectordb_llm_spark.operators.topk import grouped_topk
+from crawling_vectordb_llm_spark.session import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -116,7 +117,7 @@ def _bm25(
     # (a literal array costs a JVM call per element to build)
     terms = sorted({t for _, t in pairs if " " not in t})
     if not terms:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     words = F.split(F.col(text_col), " ")
     tok = docs.select(
@@ -150,11 +151,12 @@ def _bm25(
     total = next(r for r in stats if r["total"] == 1)
     n_docs, avgdl = total["n"], total["a"]
     if not dfreq:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # n and avgdl ride as columns of the broadcast pairs, not literals:
     # Spark inlines a double literal into the generated Java, so a corpus
     # that grew would compile new classes on every call
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [
             (q, t, dfreq[t], float(n_docs), float(avgdl))
             for q, t in pairs

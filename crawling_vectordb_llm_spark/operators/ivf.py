@@ -47,6 +47,7 @@ from crawling_vectordb_llm_spark.operators.topk import (
     collect_query_rows,
     grouped_topk,
 )
+from crawling_vectordb_llm_spark.session import local_frame
 
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
@@ -650,9 +651,7 @@ def ivf_pruned_threshold_join(
         centroids, stats_out,
     )
     if prep is None:
-        return spark.createDataFrame(
-            [], f"a_id long, b_id long, {score_col} double"
-        )
+        return local_frame(spark, [], f"a_id long, b_id long, {score_col} double")
     if isinstance(prep, int):
         return threshold_similarity_join(
             corpus, tau, id_col, vec_col, score_col, n_blocks=prep,
@@ -1026,12 +1025,11 @@ def _ivf_pruned_replicated(
                 else:
                     pair_rows.append((gj, sj, pk, "b"))
                 pk += 1
-    pairs_df = spark.createDataFrame(
-        pair_rows, "__grp int, __sub int, __pk int, __role string"
-    )
+    pairs_df = local_frame(spark, pair_rows, "__grp int, __sub int, __pk int, __role string")
 
     # cell id -> (cell index, its sub count): one tiny broadcast map
-    cell_map = spark.createDataFrame(
+    cell_map = local_frame(
+        spark,
         [(int(c), i, int(n_subs[i])) for i, c in enumerate(cells)],
         "__cell int, __grp int, __nsub int",
     )
@@ -1126,9 +1124,8 @@ def ivf_pruned_topk_join(
         centroids, stats_out,
     )
     if prep is None:
-        return spark.createDataFrame(
-            [],
-            f"{item_col} long, {neighbor_col} long, rank int, {score_col} double",
+        return local_frame(
+            spark, [], f"{item_col} long, {neighbor_col} long, rank int, {score_col} double"
         )
     if isinstance(prep, int):
         return _block_grid_topk(

@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 #: The fewest cache entries that hold the largest repeating unit of the
@@ -120,3 +121,19 @@ def get_spark(
 
     ensure_package_shipped(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """Driver-side `rows` under `schema` as a frame that plans as a
+    LocalTableScan, so reading it starts no task.  `createDataFrame` of a
+    list, or of an empty pandas frame, plans as a Scan ExistingRDD over a
+    Python RDD, and each of its tasks runs in a Python worker; an Arrow
+    table, empty or not, becomes a LocalRelation."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.names)
+    table = pa.Table.from_pydict(dict(zip(schema.names, columns)), to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

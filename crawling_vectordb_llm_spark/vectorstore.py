@@ -57,6 +57,7 @@ from crawling_vectordb_llm_spark.functions.vector import l2_normalize
 from crawling_vectordb_llm_spark.operators.ivf import assign_centroids, kmeans_centroids
 from crawling_vectordb_llm_spark.operators.knn import knn_topk_matrix
 from crawling_vectordb_llm_spark.operators.merge import greatest_per_key
+from crawling_vectordb_llm_spark.session import local_frame
 
 #: The write that brings the writes since the base to this count writes a
 #: new base instead of a delta, so a delta holds at most
@@ -209,7 +210,7 @@ class VectorCollection:
         if m is None:
             raise FileNotFoundError(f"no versions at {self._table}")
         fields = [f for f in m["schema"] if f.name not in ("id", _DELETED)]
-        keys = self.spark.createDataFrame([(i,) for i in ids], "id string").select(
+        keys = local_frame(self.spark, [(i,) for i in ids], "id string").select(
             F.col("id").cast(m["schema"]["id"].dataType).alias("id"),
             *(F.lit(None).cast(f.dataType).alias(f.name) for f in fields),
             F.lit(True).alias(_DELETED),
@@ -244,8 +245,10 @@ class VectorCollection:
             if m["kind"] == "delta":
                 prev = self._scan(m)
             else:
-                prev = self.spark.createDataFrame(
-                    [], StructType([*m["schema"].fields, StructField(_DELETED, BooleanType())])
+                prev = local_frame(
+                    self.spark,
+                    [],
+                    StructType([*m["schema"].fields, StructField(_DELETED, BooleanType())]),
                 )
             tagged = prev.withColumn("_write", F.lit(0)).unionByName(tagged)
         cols = [c for c in change.columns if c != "id"]
@@ -284,7 +287,8 @@ class VectorCollection:
             v = self._write_base(self._with_cells(rows, self.centroids))
         finally:
             rows.unpersist()
-        self.spark.createDataFrame(
+        local_frame(
+            self.spark,
             [(i, [float(x) for x in self.centroids[i]]) for i in range(len(self.centroids))],
             "centroid_id int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(self._centroids_path)

@@ -12,7 +12,7 @@ import pytest
 
 from crawling_vectordb_llm_spark.suite import QUERIES
 
-from .conftest import SF_MEDIUM
+from .conftest import SF_MEDIUM, SF_SMALL
 
 
 def plan_of(spark, name: str, execute: bool = False) -> str:
@@ -239,3 +239,52 @@ def test_star_round_never_materializes_a_neighborhood(spark):
         assert "Generate explode" not in plan, plan[:800]
         # the min must reach a partial (map-side) aggregate
         assert "partial_min" in plan or "partial_least" in plan, plan[:800]
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_built_frames_are_local_scans(spark):
+    """A frame built on the driver must not be a Scan ExistingRDD: that
+    is a Python RDD, and every one of its tasks runs in a Python worker."""
+    from crawling_vectordb_llm_spark.session import local_frame
+
+    full = local_frame(spark, [(1, "a", [0.5])], "k bigint, t string, v array<double>")
+    empty = local_frame(spark, [], "k bigint, t string, v array<double>")
+    for df in (full, empty):
+        assert "LocalTableScan" in _executed(df) and "ExistingRDD" not in _executed(df)
+    assert full.collect()[0].asDict() == {"k": 1, "t": "a", "v": [0.5]}
+    assert empty.collect() == [] and empty.schema == full.schema
+
+
+def test_bm25_term_table_is_a_local_scan(spark):
+    from crawling_vectordb_llm_spark.catalog import read_table
+    from crawling_vectordb_llm_spark.operators.bm25 import bm25_topk
+
+    docs = read_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    plan = _executed(bm25_topk(docs, [(0, "the data"), (1, "spark")], k=3))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_fold_onto_a_base_scans_no_python_rdd(spark, tmp_path):
+    """Every upsert onto a base folds an empty previous delta; that empty
+    side must not be a Python RDD."""
+    from pyspark.sql import functions as F
+
+    from crawling_vectordb_llm_spark.vectorstore import VectorCollection
+
+    coll = VectorCollection(spark, str(tmp_path / "coll"), dim=8, n_centroids=2)
+    coll.upsert(
+        spark.range(20).select(
+            F.col("id").cast("string").alias("id"),
+            F.lit("t").alias("title"),
+            F.concat(F.lit("text "), F.col("id").cast("string")).alias("text"),
+        ),
+        build_index=False,
+    )
+    m = coll._manifest()
+    assert m["kind"] == "base"
+    change = coll._scan(m).limit(3).withColumn("_deleted", F.lit(False))
+    plan = _executed(coll._fold(m, change))
+    assert "ExistingRDD" not in plan

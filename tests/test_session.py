@@ -103,3 +103,89 @@ def test_small_codegen_cache_warns_once_naming_conf_and_floor():
         warnings.simplefilter("error")
         shipping.ensure_session_confs(small)  # once per context
         shipping.ensure_session_confs(_Session(CODEGEN_CACHE_ENTRIES))
+
+
+def test_lazy_zip_directories_in_a_worker(spark, tmp_path):
+    """Inside a Python worker, after the package import has installed the
+    lazy directories (Python < 3.13): invalidating re-reads no zip
+    directory, a zip put on sys.path afterwards imports, and a zip
+    rewritten and invalidated exposes its new module.  On 3.13 and later
+    the install leaves zipimporter as it is."""
+    import json
+
+    late = str(tmp_path / "late.zip")
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipfile
+        import zipimport
+
+        import pandas as pd
+
+        from crawling_vectordb_llm_spark import shipping as worker_shipping
+
+        for _ in batches:
+            pass
+        importer = zipimport.zipimporter
+        out = {
+            "lazy": isinstance(importer.__dict__.get("_files"), property),
+            "installed_again": worker_shipping.install_lazy_zip_directories(),
+            "zip_importers": sum(
+                isinstance(f, importer) for f in sys.path_importer_cache.values()
+            ),
+        }
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            out["invalidate_reads"] = len(reads)
+            with zipfile.ZipFile(late, "w") as z:
+                z.writestr("cvls_late_a.py", "VALUE = 1\n")
+            sys.path.insert(0, late)
+            out["late_import"] = importlib.import_module("cvls_late_a").VALUE
+            with zipfile.ZipFile(late, "w") as z:
+                z.writestr("cvls_late_a.py", "VALUE = 1\n")
+                z.writestr("cvls_late_b.py", "VALUE = 2\n")
+            importlib.invalidate_caches()
+            out["rewritten_import"] = importlib.import_module("cvls_late_b").VALUE
+        finally:
+            zipimport._read_directory = read_directory
+            sys.path.remove(late)
+            sys.modules.pop("cvls_late_a", None)
+            sys.modules.pop("cvls_late_b", None)
+        out["py313"] = sys.version_info >= (3, 13)
+        yield pd.DataFrame({"out": [json.dumps(out)]})
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(probe, "out string").collect()
+    out = json.loads(rows[0]["out"])
+    assert out["installed_again"] is False
+    assert out["late_import"] == 1 and out["rewritten_import"] == 2
+    if out["py313"]:
+        assert out["lazy"] is False
+    else:
+        assert out["lazy"] is True
+        assert out["zip_importers"] > 0
+        assert out["invalidate_reads"] == 0
+
+
+def test_lazy_zip_install_needs_a_task_and_python_before_313(monkeypatch):
+    """On the driver (no TaskContext), or under Python 3.13 and later,
+    the install changes nothing."""
+    import sys
+    import zipimport
+
+    import pyspark
+
+    before = dict(zipimport.zipimporter.__dict__)
+    assert shipping.install_lazy_zip_directories() is False
+    monkeypatch.setattr(pyspark.TaskContext, "get", classmethod(lambda cls: object()))
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0))
+    assert shipping.install_lazy_zip_directories() is False
+    assert dict(zipimport.zipimporter.__dict__) == before
